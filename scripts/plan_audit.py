@@ -21,8 +21,9 @@ HEADER = """# PLANS — physical-plan audit of all contract queries
 Generated by `python scripts/plan_audit.py` at sf0.001 (plans only,
 nothing executed). Columns: parquet scans and their projected column
 counts (pruning), scan-pushed filters, exchanges (shuffles), join
-strategies, bounded top-k, window count, windows without PARTITION BY,
-and flags.
+strategies (broadcast-hash, sort-merge `smj` and shuffled-hash `shj`
+counted apart), bounded top-k, window count, windows without PARTITION
+BY, and flags.
 
 Reading the flags:
 - `EXPAND(rollup)` on rollup_pricing is ANSI ROLLUP's grouping-sets
@@ -51,15 +52,15 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     out = [HEADER,
-           "| query | scans | cols/scan | pushed | exch | bcast | shuffle-join |"
+           "| query | scans | cols/scan | pushed | exch | bcast | smj | shj |"
            " top-k | win | unpart-win | flags |",
-           "|---|---|---|---|---|---|---|---|---|---|---|"]
+           "|---|---|---|---|---|---|---|---|---|---|---|---|"]
     n = 0
     for name in sorted(QUERIES):
         try:
             a = audit_plan(QUERIES[name](spark, SF_DIR))
         except Exception as exc:  # pragma: no cover
-            out.append(f"| {name} | ERROR: {exc} |" + " |" * 9)
+            out.append(f"| {name} | ERROR: {exc} |" + " |" * 10)
             continue
         flags = " ".join(x for x in (
             "EXPAND(rollup)" if a["expand"] else "",
@@ -68,7 +69,7 @@ def main() -> None:
         out.append(
             f"| {name} | {a['scans']} | {a['scan_cols']} |"
             f" {a['pushed_filters']} | {a['exchanges']} |"
-            f" {a['bcast_joins']} | {a['smj_joins']} |"
+            f" {a['bcast_joins']} | {a['smj_joins']} | {a['shj_joins']} |"
             f" {'Y' if a['topk'] else ''} | {a['windows']} |"
             f" {a['unpartitioned_windows']} | {flags} |")
         n += 1

@@ -41,10 +41,11 @@ def audit_plan(df) -> Dict[str, object]:
         "pushed_filters": sum(1 for p in pushed if p.strip()),
         "exchanges": t.count("Exchange"),
         "bcast_joins": t.count("BroadcastHashJoin"),
-        # both shuffle-side strategies: sort-merge and shuffled-hash
-        # (r16: preferSortMergeJoin=false lets the planner pick SHJ
-        # when the build side fits partition-local memory)
-        "smj_joins": t.count("SortMergeJoin") + t.count("ShuffledHashJoin"),
+        # the two shuffle-side strategies, counted apart so a
+        # preferSortMergeJoin flip shows up per query (SHJ cannot spill
+        # its build side; SMJ can)
+        "smj_joins": t.count("SortMergeJoin"),
+        "shj_joins": t.count("ShuffledHashJoin"),
         "topk": "TakeOrderedAndProject" in t,
         "expand": "Expand" in t,
         "rollup": "expand(" in ext or "Expand" in t and "spark_grouping_id" in ext,

@@ -4,14 +4,18 @@ Parity: /root/reference/term-guard/src/repository/ —
 - MetricsRepository trait (mod.rs:59-151): save/load/delete/list by
   ResultKey{timestamp, tags} (result_key.rs);
 - InMemoryRepository (in_memory.rs);
-- MetricsQuery (query.rs): time-range + tag filtering + sort;
+- MetricsQuery (query.rs): time-range + tag filtering + sort, one pass;
 - DataFusionQueryExecutor (datafusion_executor.rs): SQL over the
   metrics history → here ``sql()`` registers the history as a temp
   view and runs spark.sql.
 
+Each read (``keys``/``load``/``query``/``series``) decodes ONE snapshot
+from the backend's read primitive ``_load_all`` (N file reads for N
+parquet runs, one Spark job on Delta); nothing is cached across calls.
+
 The persistent backend appends parquet (one file per save — at scale
 swap for Delta/Iceberg appends; the layout is already
-partition-friendly: one row per (run, metric)).
+partition-friendly: one row per (run, metric)); SQL sees committed files.
 """
 
 from __future__ import annotations
@@ -21,7 +25,7 @@ import os
 import time
 import uuid
 from abc import ABC, abstractmethod
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Dict, List, Mapping, Optional
 
 from ..analyzers.base import MetricValue
@@ -42,18 +46,42 @@ class ResultKey:
         return dict(self.tags)
 
 
+#: one row per (run, metric); shared by the parquet and Delta layouts
+_SCHEMA = ("timestamp double, tags string, metric string, "
+           "kind string, value string")
+
+
+def _decode(rows) -> Dict[ResultKey, Dict[str, MetricValue]]:
+    """Stored (timestamp, tags, metric, kind, value) rows → snapshot."""
+    out: Dict[ResultKey, Dict[str, MetricValue]] = {}
+    tag_tuples: Dict[str, tuple] = {}
+    for ts, tags, metric, kind, value in rows:
+        if tags not in tag_tuples:
+            tag_tuples[tags] = tuple(sorted(json.loads(tags).items()))
+        out.setdefault(ResultKey(ts, tag_tuples[tags]), {})[metric] = MetricValue(
+            kind, json.loads(value))
+    return out
+
+
 class MetricsRepository(ABC):
-    @abstractmethod
-    def save(self, key: ResultKey, metrics: Mapping[str, MetricValue]) -> None: ...
+    """Backends implement ``save``, ``delete`` and ``_load_all``; each
+    read below makes one ``_load_all`` call, never cached across calls."""
 
     @abstractmethod
-    def load(self, key: ResultKey) -> Optional[Dict[str, MetricValue]]: ...
+    def save(self, key: ResultKey, metrics: Mapping[str, MetricValue]) -> None: ...
 
     @abstractmethod
     def delete(self, key: ResultKey) -> None: ...
 
     @abstractmethod
-    def keys(self) -> List[ResultKey]: ...
+    def _load_all(self) -> Dict[ResultKey, Dict[str, MetricValue]]:
+        """Fresh ``{ResultKey: {metric: MetricValue}}`` store snapshot."""
+
+    def load(self, key: ResultKey) -> Optional[Dict[str, MetricValue]]:
+        return self._load_all().get(key)
+
+    def keys(self) -> List[ResultKey]:
+        return sorted(self._load_all(), key=lambda k: k.timestamp)
 
     # ---- MetricsQuery (query.rs) -------------------------------------
     def query(self, metric: Optional[str] = None,
@@ -63,14 +91,13 @@ class MetricsRepository(ABC):
         """Returns [(ResultKey, metric_name, MetricValue)] filtered and
         time-sorted — the anomaly detectors' input."""
         out = []
-        for key in self.keys():
+        for key, metrics in self._load_all().items():
             if after is not None and key.timestamp < after:
                 continue
             if before is not None and key.timestamp > before:
                 continue
             if tags and any(key.tag_dict.get(k) != v for k, v in tags.items()):
                 continue
-            metrics = self.load(key) or {}
             for name, value in metrics.items():
                 if metric is None or name == metric:
                     out.append((key, name, value))
@@ -90,15 +117,11 @@ class InMemoryRepository(MetricsRepository):
     def save(self, key, metrics):
         self._data[key] = dict(metrics)
 
-    def load(self, key):
-        m = self._data.get(key)
-        return dict(m) if m is not None else None
-
     def delete(self, key):
         self._data.pop(key, None)
 
-    def keys(self):
-        return sorted(self._data, key=lambda k: k.timestamp)
+    def _load_all(self):
+        return {k: dict(m) for k, m in self._data.items()}
 
 
 class ParquetRepository(MetricsRepository):
@@ -127,19 +150,14 @@ class ParquetRepository(MetricsRepository):
                        os.path.join(self.path, f"{key.timestamp:.6f}_{uuid.uuid4().hex[:8]}.parquet"))
 
     def _load_all(self):
+        """Reads each committed file once and decodes whole columns."""
         import pyarrow.parquet as pq
-        out: Dict[ResultKey, Dict[str, MetricValue]] = {}
+        rows = []
         for f in self._files():
-            t = pq.read_table(f)
-            for i in range(t.num_rows):
-                key = ResultKey(t["timestamp"][i].as_py(),
-                                tuple(sorted(json.loads(t["tags"][i].as_py()).items())))
-                out.setdefault(key, {})[t["metric"][i].as_py()] = MetricValue(
-                    t["kind"][i].as_py(), json.loads(t["value"][i].as_py()))
-        return out
-
-    def load(self, key):
-        return self._load_all().get(key)
+            cols = pq.read_table(f).to_pydict()
+            rows.extend(zip(cols["timestamp"], cols["tags"], cols["metric"],
+                            cols["kind"], cols["value"]))
+        return _decode(rows)
 
     def delete(self, key):
         """Delete = a targeted offline compaction. The live write path
@@ -168,17 +186,13 @@ class ParquetRepository(MetricsRepository):
         if not files:
             return 0
         t = pa.concat_tables([pq.read_table(f) for f in files])
-        keep = [True] * t.num_rows
         drop_tags = (json.dumps(drop_key.tag_dict, sort_keys=True)
                      if drop_key is not None else None)
-        for i in range(t.num_rows):
-            ts = t["timestamp"][i].as_py()
-            if before_ts is not None and ts < before_ts:
-                keep[i] = False
-            elif drop_key is not None and ts == drop_key.timestamp \
-                    and t["tags"][i].as_py() == drop_tags:
-                keep[i] = False
-        kept = t.filter(pa.array(keep))
+        kept = t.filter(pa.array([
+            not ((before_ts is not None and ts < before_ts)
+                 or (drop_key is not None and ts == drop_key.timestamp
+                     and tags == drop_tags))
+            for ts, tags in zip(t["timestamp"].to_pylist(), t["tags"].to_pylist())]))
         dropped = t.num_rows - kept.num_rows
         if dropped == 0 and len(files) == 1:
             return 0  # nothing to drop, already compact
@@ -192,12 +206,12 @@ class ParquetRepository(MetricsRepository):
             os.remove(f)
         return dropped
 
-    def keys(self):
-        return sorted(self._load_all(), key=lambda k: k.timestamp)
-
     def as_spark_df(self, spark):
         """Register the whole history for SQL (DataFusionQueryExecutor
-        parity): spark.sql over the returned temp view."""
-        df = spark.read.parquet(self.path)
+        parity): spark.sql over the returned temp view. Committed files
+        only: a directory read also serves a crashed compaction's .tmp."""
+        files = self._files()
+        df = (spark.read.parquet(*files) if files
+              else spark.createDataFrame([], _SCHEMA))
         df.createOrReplaceTempView("metrics_history")
         return df

@@ -29,10 +29,10 @@ directory can be `CONVERT TO DELTA`-ed in place.
 from __future__ import annotations
 
 import json
-from typing import Dict, Mapping, Optional
+from typing import Mapping, Optional
 
 from ..analyzers.base import MetricValue
-from . import MetricsRepository, ResultKey
+from . import _SCHEMA, MetricsRepository, ResultKey, _decode
 
 try:  # import-gated: delta-spark is optional
     from delta.tables import DeltaTable  # type: ignore
@@ -44,11 +44,6 @@ except ImportError:  # pragma: no cover - sandbox has no delta-spark
 
 def delta_available() -> bool:
     return _HAVE_DELTA
-
-
-#: one row per (run, metric) — identical to ParquetRepository's layout
-_SCHEMA = ("timestamp double, tags string, metric string, "
-           "kind string, value string")
 
 
 class DeltaRepository(MetricsRepository):
@@ -110,24 +105,13 @@ class DeltaRepository(MetricsRepository):
     def _df(self):
         return self.spark.read.format("delta").load(self.path)
 
-    def _load_all(self) -> Dict[ResultKey, Dict[str, MetricValue]]:
-        out: Dict[ResultKey, Dict[str, MetricValue]] = {}
+    def _load_all(self):
+        """One Spark job per read call, whatever the read."""
         try:
             rows = self._df().collect()
         except Exception:  # table not created yet (no save() ever ran)
-            return out
-        for r in rows:
-            key = ResultKey(r["timestamp"],
-                            tuple(sorted(json.loads(r["tags"]).items())))
-            out.setdefault(key, {})[r["metric"]] = MetricValue(
-                r["kind"], json.loads(r["value"]))
-        return out
-
-    def load(self, key: ResultKey):
-        return self._load_all().get(key)
-
-    def keys(self):
-        return sorted(self._load_all(), key=lambda k: k.timestamp)
+            return {}
+        return _decode(rows)
 
     def as_spark_df(self, spark=None):
         """Register the whole history for SQL (same surface as

@@ -256,6 +256,22 @@ def test_all_query_plans_scale_safe(spark):
     assert not failures, failures
 
 
+# like every audit counter, these count operator names in the formatted
+# plan, which names each operator twice: in the tree and in its details
+@pytest.mark.parametrize("hint,smj,shj", [("merge", 2, 0),
+                                           ("shuffle_hash", 0, 2)])
+def test_audit_counts_sort_merge_and_shuffled_hash_joins_apart(
+        spark, hint, smj, shj):
+    """PLANS.md's `smj` and `shj` columns: each shuffle-join strategy
+    lands in its own counter, so a preferSortMergeJoin flip is visible."""
+    from term_spark.plans.audit import audit_plan
+
+    left = spark.range(1000).withColumnRenamed("id", "k")
+    right = spark.range(1000).withColumnRenamed("id", "k").hint(hint)
+    a = audit_plan(left.join(right, "k"))
+    assert (a["smj_joins"], a["shj_joins"], a["bcast_joins"]) == (smj, shj, 0)
+
+
 def test_unigram_surprisal_explodes_at_most_twice(spark):
     """r5 judge finding: the default (self-vocab) path used to explode
     the corpus THREE times — once collecting the vocab total, then

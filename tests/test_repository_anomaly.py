@@ -101,6 +101,32 @@ def test_sql_over_metrics_history(spark, tmp_path):
     assert rows[0]["min_v"] == 0.8 and rows[0]["max_v"] == 0.95
 
 
+def test_sql_view_reads_committed_files_only(spark, tmp_path):
+    """A crashed ``compact()`` can leave ``compacted_*.parquet.tmp``
+    behind, complete or torn; SQL must see what ``series()`` sees."""
+    import os
+    import shutil
+
+    repo = ParquetRepository(str(tmp_path / "m"))
+    empty = repo.as_spark_df(spark)
+    assert empty.columns == ["timestamp", "tags", "metric", "kind", "value"]
+    assert empty.count() == 0
+    _seed(repo, [0.8, 0.9, 0.95], env="prod")
+    committed = repo._files()[0]
+    shutil.copy(committed, os.path.join(
+        repo.path, "compacted_1.000000_00000001.parquet.tmp"))
+    with open(committed, "rb") as f:
+        data = f.read()
+    with open(os.path.join(
+            repo.path, "compacted_2.000000_00000002.parquet.tmp"), "wb") as f:
+        f.write(data[:len(data) // 2])
+    assert repo.series("completeness.name") == [0.8, 0.9, 0.95]
+    repo.as_spark_df(spark)
+    rows = spark.sql("SELECT timestamp FROM metrics_history "
+                     "ORDER BY timestamp").collect()
+    assert [r["timestamp"] for r in rows] == [1000.0, 1001.0, 1002.0]
+
+
 def test_parquet_repository_compaction_retention(tmp_path):
     repo = ParquetRepository(str(tmp_path / "m"))
     for ts in (100.0, 200.0, 300.0):

@@ -204,3 +204,77 @@ def test_delta_repository_import_gate(spark, tmp_path):
         pytest.skip("delta-spark IS installed here; gate not reachable")
     with pytest.raises(ImportError, match="delta-spark"):
         DeltaRepository(spark, str(tmp_path / "d"))
+
+
+@pytest.mark.parametrize("kind", BACKENDS)
+def test_query_equals_reference_from_keys_and_load(make_repo, kind):
+    """``query()`` reads one snapshot; its answer must equal the one
+    built by hand from ``keys()`` + ``load()`` for every filter, and
+    ``series()`` keeps numeric values only."""
+    repo = make_repo(kind)
+    runs = [
+        (ResultKey.of(1000.0, env="prod"),
+         {"size": MetricValue.long(10), "mean.x": MetricValue.double(1.5),
+          "mode.x": MetricValue("string", "a")}),
+        (ResultKey.of(1000.0, env="dev"),      # same ts, other tags
+         {"size": MetricValue.long(3), "mean.x": MetricValue.double(0.5)}),
+        (ResultKey.of(2000.0, env="prod", suite="s"),
+         {"size": MetricValue.long(12), "mode.x": MetricValue("string", "b")}),
+        (ResultKey.of(1500.0, env="prod"),
+         {"size": MetricValue.long(11), "mean.x": MetricValue.double(2.5)}),
+    ]
+    for key, metrics in runs:
+        repo.save(key, metrics)
+    keys = repo.keys()
+    stored = {k: repo.load(k) for k in keys}
+    assert stored == dict(runs)
+    repo.load(keys[0])["injected"] = MetricValue.long(0)  # a copy, not the store
+    assert "injected" not in repo.load(keys[0])
+
+    def reference(metric=None, after=None, before=None, tags=None,
+                  ascending=True):
+        out = [(k, name, v) for k in keys
+               if (after is None or k.timestamp >= after)
+               and (before is None or k.timestamp <= before)
+               and all(k.tag_dict.get(t) == want for t, want in (tags or {}).items())
+               for name, v in stored[k].items()
+               if metric is None or name == metric]
+        return sorted(out, key=lambda t: t[0].timestamp, reverse=not ascending)
+
+    for kw in [{}, {"metric": "size"}, {"metric": "mean.x", "after": 1000.5},
+               {"before": 1500.0}, {"after": 1000.0, "before": 1000.0},
+               {"tags": {"env": "prod"}}, {"tags": {"env": "prod", "suite": "s"}},
+               {"tags": {"env": "qa"}}, {"ascending": False},
+               {"metric": "size", "tags": {"env": "prod"}, "ascending": False}]:
+        assert repo.query(**kw) == reference(**kw), kw
+    assert repo.series("size") == [float(v.value) for _, _, v in reference("size")]
+    assert repo.series("mean.x", tags={"env": "prod"}) == [1.5, 2.5]
+    assert repo.series("mode.x") == []          # strings are not a series
+    assert repo.series("missing") == []
+
+
+def test_parquet_reads_each_file_once_per_call(tmp_path, monkeypatch):
+    """O(N) contract: every read call reads each of the N stored files
+    exactly once."""
+    import pyarrow.parquet as pq
+
+    repo = ParquetRepository(str(tmp_path / "pq"))
+    n = 8
+    for i in range(n):
+        repo.save(ResultKey.of(1000.0 + i, env="prod"),
+                  {"size": MetricValue.long(i)})
+    reads = []
+    read_table = pq.read_table
+    monkeypatch.setattr(pq, "read_table",
+                        lambda path, *a, **kw: reads.append(path)
+                        or read_table(path, *a, **kw))
+    calls = {"series": lambda: repo.series("size", tags={"env": "prod"}),
+             "query": lambda: repo.query("size", after=1003.0),
+             "keys": repo.keys,
+             "load": lambda: repo.load(ResultKey.of(1004.0, env="prod"))}
+    for name, call in calls.items():
+        reads.clear()
+        result = call()
+        assert sorted(reads) == repo._files(), name
+        assert result, name
+    assert repo.series("size") == [float(i) for i in range(n)]
