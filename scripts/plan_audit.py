@@ -1,8 +1,9 @@
 """Generate PLANS.md: a physical-plan audit of every contract query.
 
-For each `queries()` entry, build the DataFrame at sf0.001 (no
-execution — plans only) and summarize the properties that matter at
-100 TB via term_spark.plans.audit.
+For each `queries()` entry, build the DataFrame at sf0.001, count the
+Spark jobs its construction runs eagerly, and summarize the plan
+properties that matter at 100 TB via term_spark.plans.audit (the plan
+itself is never executed).
 
 Run: python scripts/plan_audit.py   (writes /root/repo/PLANS.md)
 """
@@ -18,12 +19,14 @@ SF_DIR = "/root/testdata/sf0.001"
 
 HEADER = """# PLANS — physical-plan audit of all contract queries
 
-Generated by `python scripts/plan_audit.py` at sf0.001 (plans only,
-nothing executed). Columns: parquet scans and their projected column
-counts (pruning), scan-pushed filters, exchanges (shuffles), join
-strategies (broadcast-hash, sort-merge `smj` and shuffled-hash `shj`
-counted apart), bounded top-k, window count, windows without PARTITION
-BY, and flags.
+Generated by `python scripts/plan_audit.py` at sf0.001 (the final
+plans are audited, not executed). Columns: Spark `jobs` started while
+the query's DataFrame is built (eager build work, counted as new
+ungrouped job ids in `statusTracker`), parquet scans and their
+projected column counts (pruning), scan-pushed filters, exchanges
+(shuffles), join strategies (broadcast-hash, sort-merge `smj` and
+shuffled-hash `shj` counted apart), bounded top-k, window count,
+windows without PARTITION BY, and flags.
 
 Reading the flags:
 - `EXPAND(rollup)` on rollup_pricing is ANSI ROLLUP's grouping-sets
@@ -51,23 +54,27 @@ def main() -> None:
     spark = get_spark("plan_audit")
     spark.sparkContext.setLogLevel("ERROR")
 
+    tracker = spark.sparkContext.statusTracker()
     out = [HEADER,
-           "| query | scans | cols/scan | pushed | exch | bcast | smj | shj |"
-           " top-k | win | unpart-win | flags |",
-           "|---|---|---|---|---|---|---|---|---|---|---|---|"]
+           "| query | jobs | scans | cols/scan | pushed | exch | bcast | smj |"
+           " shj | top-k | win | unpart-win | flags |",
+           "|---|---|---|---|---|---|---|---|---|---|---|---|---|"]
     n = 0
     for name in sorted(QUERIES):
+        before = set(tracker.getJobIdsForGroup())
         try:
-            a = audit_plan(QUERIES[name](spark, SF_DIR))
+            df = QUERIES[name](spark, SF_DIR)
+            jobs = len(set(tracker.getJobIdsForGroup()) - before)
+            a = audit_plan(df)
         except Exception as exc:  # pragma: no cover
-            out.append(f"| {name} | ERROR: {exc} |" + " |" * 10)
+            out.append(f"| {name} | ERROR: {exc} |" + " |" * 11)
             continue
         flags = " ".join(x for x in (
             "EXPAND(rollup)" if a["expand"] else "",
             "CARTESIAN" if a["cartesian"] else "",
             "NLJ" if a["nlj"] else "") if x)
         out.append(
-            f"| {name} | {a['scans']} | {a['scan_cols']} |"
+            f"| {name} | {jobs} | {a['scans']} | {a['scan_cols']} |"
             f" {a['pushed_filters']} | {a['exchanges']} |"
             f" {a['bcast_joins']} | {a['smj_joins']} | {a['shj_joins']} |"
             f" {'Y' if a['topk'] else ''} | {a['windows']} |"

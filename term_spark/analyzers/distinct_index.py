@@ -1,7 +1,5 @@
 """Persisted HLL distinct-count index — the incremental-ingestion tier
-for cardinality metrics (the fourth persisted tier: near-dup has the
-MinHash index, substring dedup the gram index, chunk dedup the CDC
-index; this is the PROFILE tier).
+for cardinality metrics (the PROFILE tier of ``index_store``).
 
 A corpus-wide ``COUNT(DISTINCT col)`` rescans 100 TB every time the
 profile dashboard refreshes.  This index stores one Apache DataSketches
@@ -54,7 +52,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..functions.security import validate_identifiers
-from ..session import local_df
+from ..index_store import IndexStore
 
 #: lgK=12 ⇒ 4096 registers ⇒ RSE ≈ 1.04/sqrt(4096) ≈ 1.625 %.
 DEFAULT_LGK = 12
@@ -70,8 +68,8 @@ def build_distinct_index(df: DataFrame, columns: Sequence[str],
                          index_path: str, lgk: int = DEFAULT_LGK,
                          mode: str = "overwrite") -> None:
     """Sketch ``columns`` of this shard into one HLL row per column and
-    persist under ``index_path`` (``meta`` pins lgk + column set;
-    ``sketches`` holds (col_name, sketch, n_rows) per shard).
+    persist under ``index_path`` (params pin lgk + the column set;
+    ``sketches`` holds (col_name, sketch, n_rows, n_shards) per shard).
 
     One fused aggregation: every column's ``hll_sketch_agg`` rides the
     same scan (values cast to string so numeric and string columns
@@ -85,19 +83,6 @@ def build_distinct_index(df: DataFrame, columns: Sequence[str],
         raise ValueError("build_distinct_index: empty column list")
     if not 4 <= int(lgk) <= 21:
         raise ValueError(f"lgk must be in [4, 21], got {lgk}")
-    spark = df.sparkSession
-    if mode == "append":
-        try:
-            meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-        except Exception:
-            meta = None
-        if meta is not None and (
-                meta["lgk"] != lgk or set(meta["columns"]) != set(cols)):
-            raise ValueError(
-                f"append with (lgk={lgk}, columns={sorted(cols)}) onto an "
-                f"index built with (lgk={meta['lgk']}, "
-                f"columns={sorted(meta['columns'])}) — params are pinned "
-                "at build time")
     aggs = [F.hll_sketch_agg(F.col(c).cast("string"), F.lit(int(lgk)))
             .alias(f"__s_{c}") for c in cols]
     aggs.append(F.count(F.lit(1)).alias("__n"))
@@ -115,11 +100,10 @@ def build_distinct_index(df: DataFrame, columns: Sequence[str],
     # an empty shard aggregates to a zero-row empty-sketch blob (or a
     # NULL on some agg paths) — zero information either way; dropping
     # it keeps the shard count meaning "shards that contributed data"
-    rows.filter(F.col("sketch").isNotNull() & (F.col("n_rows") > 0)) \
-        .write.mode(mode).parquet(f"{index_path}/sketches")
-    local_df(
-        spark, [(int(lgk), cols)], "lgk int, columns array<string>") \
-        .write.mode("overwrite").parquet(f"{index_path}/meta")
+    IndexStore(df.sparkSession, index_path).write(
+        {"sketches": rows.filter(F.col("sketch").isNotNull()
+                                 & (F.col("n_rows") > 0))},
+        {"lgk": int(lgk), "columns": sorted(cols)}, mode)
 
 
 def distinct_estimates_from_index(spark, index_path: str) -> DataFrame:
@@ -129,8 +113,7 @@ def distinct_estimates_from_index(spark, index_path: str) -> DataFrame:
     is never touched.  Union is the register-wise MAX described in the
     module docstring, so the estimate covers every shard ever appended.
     """
-    sk = spark.read.parquet(f"{index_path}/sketches")
-    return (sk.groupBy("col_name")
+    return (IndexStore(spark, index_path).read("sketches").groupBy("col_name")
             .agg(F.hll_sketch_estimate(F.hll_union_agg("sketch"))
                  .alias("n_distinct_est"),
                  F.sum("n_rows").alias("n_rows"),
@@ -153,12 +136,12 @@ def distinct_index_report(spark, index_path: str,
     -based, single scan) — it exists for audits and CI gates; steady
     -state consumers read only the sketch estimates.
     """
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
     est = distinct_estimates_from_index(spark, index_path)
     if exact_df is None:
         return est
-    cols = list(meta["columns"])
-    tol = 3.0 * rse(int(meta["lgk"]))
+    params = IndexStore(spark, index_path).params
+    cols = params["columns"]
+    tol = 3.0 * rse(params["lgk"])
     exact_row = exact_df.agg(*[
         F.count_distinct(F.col(c).cast("string")).alias(f"__d_{c}")
         for c in cols])
@@ -183,25 +166,10 @@ def compact_distinct_index(spark, index_path: str) -> None:
 
     Sound by the same register-MAX idempotence as the probe itself:
     union-of-shards IS the compacted sketch, so estimates before and
-    after compaction are identical (pinned by test).  lgK and the
-    column set in ``meta`` are untouched — appends keep composing.
-
-    Writes to a sibling temp dir then swaps, so a concurrent probe
-    never sees a half-written table.
+    after compaction are identical (pinned by test).
     """
-    import pyspark.sql.functions as F2
-
-    sk = spark.read.parquet(f"{index_path}/sketches")
-    compacted = (sk.groupBy("col_name")
-                 .agg(F2.hll_union_agg("sketch").alias("sketch"),
-                      F2.sum("n_rows").alias("n_rows"),
-                      F2.sum("n_shards").alias("n_shards"))
-                 .select("col_name", "sketch", "n_rows", "n_shards"))
-    tmp = f"{index_path}/sketches__compacting"
-    compacted.write.mode("overwrite").parquet(tmp)
-    # swap: the JVM-side FileSystem rename is atomic per directory on
-    # HDFS-like stores; on object stores the window is the rename pair.
-    # Every rename return is CHECKED (false, not an exception, is how
-    # FileSystem.rename fails) and stale backups are cleared first.
-    from ..sources import hadoop_swap_dir
-    hadoop_swap_dir(spark, f"{index_path}/sketches", tmp)
+    store = IndexStore(spark, index_path)
+    store.compact({"sketches": store.read("sketches").groupBy("col_name")
+                   .agg(F.hll_union_agg("sketch").alias("sketch"),
+                        F.sum("n_rows").alias("n_rows"),
+                        F.sum("n_shards").alias("n_shards"))})

@@ -1,8 +1,5 @@
 """Persisted KMV overlap index — the incremental-ingestion tier for
-CROSS-SOURCE SET OPERATIONS (the seventh persisted tier: near-dup has
-the MinHash index, substring dedup the gram index, chunk dedup the CDC
-index, cardinality the HLL index, retrieval the BM25 postings index,
-distributions the quantile index; this is the OVERLAP tier).
+CROSS-SOURCE SET OPERATIONS (the OVERLAP tier of ``index_store``).
 
 "How much of dump N is already in dump N−1?" / "which two of my twenty
 sources share content?" is a pairwise set question the HLL tier cannot
@@ -47,6 +44,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..functions.security import validate_identifier
+from ..index_store import IndexStore
 from ..session import local_df
 from .kmv import (KMVSketch, kmv_distinct, kmv_jaccard, kmv_merge,
                   kmv_sketch_by, kmv_union)
@@ -59,7 +57,7 @@ def build_kmv_index(df: DataFrame, group_col: str, column: str,
                     mode: str = "overwrite") -> None:
     """Sketch this shard's per-``group_col`` distinct ``column`` values
     into one KMV row per group and persist under ``index_path``
-    (``meta`` pins k + group_col + column; ``sketches`` holds
+    (params pin k + group_col + column; ``sketches`` holds
     (grp, hashes, n_shards) per shard).
 
     ``column`` may be any column of ``df`` — callers sketching
@@ -74,45 +72,26 @@ def build_kmv_index(df: DataFrame, group_col: str, column: str,
     validate_identifier(column)
     if k < 8:
         raise ValueError(f"k must be >= 8, got {k}")
-    spark = df.sparkSession
-    if mode == "append":
-        try:
-            meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-        except Exception:
-            meta = None
-        if meta is not None and (
-                meta["k"] != k or meta["group_col"] != group_col
-                or meta["column"] != column):
-            raise ValueError(
-                f"append with (k={k}, group_col={group_col}, "
-                f"column={column}) onto an index built with "
-                f"(k={meta['k']}, group_col={meta['group_col']}, "
-                f"column={meta['column']}) — params are pinned at "
-                "build time")
     rows = (kmv_sketch_by(df, group_col, column, k=k)
             .withColumn("n_shards", F.lit(1).cast("bigint")))
     # empty groups never produce rows (kmv_sketch_by drops NULLs and
     # emits only groups with data), so n_shards keeps meaning "shards
     # that contributed data to this group"
-    rows.write.mode(mode).parquet(f"{index_path}/sketches")
-    local_df(
-        spark, [(int(k), group_col, column)],
-        "k int, group_col string, column string") \
-        .write.mode("overwrite").parquet(f"{index_path}/meta")
+    IndexStore(df.sparkSession, index_path).write(
+        {"sketches": rows},
+        {"k": int(k), "group_col": group_col, "column": column}, mode)
 
 
-def _merged_sketches(spark, index_path: str):
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-    k = int(meta["k"])
-    rows = spark.read.parquet(f"{index_path}/sketches").collect()
+def _merged_sketches(store: IndexStore):
+    k = store.params["k"]
+    rows = store.read("sketches").collect()
     by_grp: dict = {}
     shards: dict = {}
     for r in rows:
         by_grp.setdefault(r["grp"], []).append(
             KMVSketch(k=k, hashes=tuple(r["hashes"])))
         shards[r["grp"]] = shards.get(r["grp"], 0) + int(r["n_shards"])
-    return meta, {g: (kmv_merge(sk), shards[g])
-                  for g, sk in by_grp.items()}
+    return {g: (kmv_merge(sk), shards[g]) for g, sk in by_grp.items()}
 
 
 def overlap_from_index(spark, index_path: str) -> DataFrame:
@@ -122,7 +101,7 @@ def overlap_from_index(spark, index_path: str) -> DataFrame:
     sketches are unsaturated, i.e. every number in the row is exact,
     not an estimate).  O(|groups|²) pairs of k-row summaries, computed
     driver-side; the corpus is never touched."""
-    meta, merged = _merged_sketches(spark, index_path)
+    merged = _merged_sketches(IndexStore(spark, index_path))
     out = []
     # NULL groups can no longer be built (kmv_sketch_by drops them),
     # but an index persisted before that fix may still carry one —
@@ -150,15 +129,9 @@ def compact_kmv_index(spark, index_path: str) -> None:
     BYTE-IDENTICAL to what a batch build over all shards would have
     written — probes before and after compaction agree hash-for-hash
     (pinned by test), the strongest compaction contract in the tier
-    catalog.  k/group_col/column in ``meta`` are untouched — appends
-    keep composing.  Checked-rename swap (hadoop_swap_dir) so a
-    concurrent probe never sees a half-written table."""
-    meta, merged = _merged_sketches(spark, index_path)
+    catalog."""
+    store = IndexStore(spark, index_path)
     rows = [(g, list(sk.hashes), n_sh)
-            for g, (sk, n_sh) in sorted(merged.items())]
-    compacted = local_df(
-        spark, rows, "grp string, hashes array<string>, n_shards bigint")
-    tmp = f"{index_path}/sketches__compacting"
-    compacted.write.mode("overwrite").parquet(tmp)
-    from ..sources import hadoop_swap_dir
-    hadoop_swap_dir(spark, f"{index_path}/sketches", tmp)
+            for g, (sk, n_sh) in sorted(_merged_sketches(store).items())]
+    store.compact({"sketches": local_df(
+        spark, rows, "grp string, hashes array<string>, n_shards bigint")})

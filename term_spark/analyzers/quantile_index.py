@@ -1,8 +1,5 @@
 """Persisted quantile-sketch index — the incremental-ingestion tier
-for DISTRIBUTION metrics (the sixth persisted tier: near-dup has the
-MinHash index, substring dedup the gram index, chunk dedup the CDC
-index, cardinality the HLL index, retrieval the BM25 postings index;
-this is the QUANTILE tier).
+for DISTRIBUTION metrics (the QUANTILE tier of ``index_store``).
 
 A corpus-wide percentile dashboard (p50/p95/p99 of document length,
 token count, quality score) rescans 100 TB on every refresh.  This
@@ -20,7 +17,7 @@ ships batch, grouped, incremental and streaming shapes): pass
 ``groupBy(group_col)`` — per-source/per-language length dashboards
 ("p95 doc length per crawl") read the same kilobyte probe.  Groups
 never interact, so every soundness argument below applies group-wise
-verbatim; the group column is pinned in ``meta`` like every other
+verbatim; the group column is pinned in the params like every other
 param (an ungrouped probe of a grouped index would silently pool
 groups — it refuses instead).
 
@@ -73,6 +70,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..functions.security import validate_identifier, validate_identifiers
+from ..index_store import IndexStore
 from ..session import local_df
 from .base import AnalyzerState
 from .quantile_sketch import QuantileSketchAnalyzer
@@ -95,7 +93,7 @@ def build_quantile_index(df: DataFrame, columns: Sequence[str],
                          mode: str = "overwrite",
                          group_col: Optional[str] = None) -> None:
     """Sketch ``columns`` of this shard into one grid row per
-    (group, column) and persist under ``index_path`` (``meta`` pins
+    (group, column) and persist under ``index_path`` (params pin
     k + accuracy + the column set + the group column; ``grids`` holds
     (grp, col_name, n, mn, mx, grid, n_shards) per shard).
 
@@ -112,24 +110,6 @@ def build_quantile_index(df: DataFrame, columns: Sequence[str],
     if not 2 <= int(k) <= 10000:
         raise ValueError(f"k must be in [2, 10000], got {k}")
     gcol = validate_identifier(group_col) if group_col else None
-    spark = df.sparkSession
-    if mode == "append":
-        try:
-            meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-        except Exception:
-            meta = None
-        if meta is not None and (
-                meta["k"] != k or meta["accuracy"] != accuracy
-                or set(meta["columns"]) != set(cols)
-                or meta["group_col"] != (gcol or _NO_GROUP)):
-            raise ValueError(
-                f"append with (k={k}, accuracy={accuracy}, "
-                f"columns={sorted(cols)}, group_col={gcol}) onto an "
-                f"index built with (k={meta['k']}, "
-                f"accuracy={meta['accuracy']}, "
-                f"columns={sorted(meta['columns'])}, "
-                f"group_col={meta['group_col'] or None}) — params are "
-                "pinned at build time")
     probs = [(j + 0.5) / int(k) for j in range(int(k))]
     aggs = []
     for c in cols:
@@ -156,22 +136,20 @@ def build_quantile_index(df: DataFrame, columns: Sequence[str],
                  F.col(f"__g_{c}").alias("grid"),
                  F.lit(1).cast("bigint").alias("n_shards"))
         for c in cols])).alias("r")).select("r.*")
-    rows.filter(F.col("n") > 0).write.mode(mode) \
-        .parquet(f"{index_path}/grids")
-    local_df(
-        spark, [(int(k), int(accuracy), cols, gcol or _NO_GROUP)],
-        "k int, accuracy int, columns array<string>, group_col string") \
-        .write.mode("overwrite").parquet(f"{index_path}/meta")
+    IndexStore(df.sparkSession, index_path).write(
+        {"grids": rows.filter(F.col("n") > 0)},
+        {"k": int(k), "accuracy": int(accuracy), "columns": sorted(cols),
+         "group_col": gcol}, mode)
 
 
-def _merged_states(spark, index_path: str):
+def _merged_states(store: IndexStore):
     """Collect the shard grid rows (O(shards × groups × columns), KBs)
     and merge per (grp, column) with the analyzer's weighted-grid
-    merge.  Returns (meta, analyzer, {(grp, col): (state, n_shards)})."""
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-    rows = spark.read.parquet(f"{index_path}/grids").collect()
-    ana = QuantileSketchAnalyzer("__probe__", k=int(meta["k"]),
-                                 accuracy=int(meta["accuracy"]))
+    merge.  Returns (params, analyzer, {(grp, col): (state, n_shards)})."""
+    meta = store.params
+    rows = store.read("grids").collect()
+    ana = QuantileSketchAnalyzer("__probe__", k=meta["k"],
+                                 accuracy=meta["accuracy"])
     by_key: dict = {}
     shards: dict = {}
     for r in rows:
@@ -196,7 +174,7 @@ def quantiles_from_index(spark, index_path: str,
     grouped.  Reads only the grid table (KBs); the corpus is never
     touched.  Estimates carry the module-docstring rank-error bound
     over every shard ever appended."""
-    meta, ana, merged = _merged_states(spark, index_path)
+    meta, ana, merged = _merged_states(IndexStore(spark, index_path))
     grouped = bool(meta["group_col"])
     out = []
     for (g, c) in sorted(merged):
@@ -241,10 +219,10 @@ def quantile_index_report(spark, index_path: str,
     when the index is) — audits and CI gates only; steady-state
     consumers read the estimates alone.
     """
-    meta, ana, merged = _merged_states(spark, index_path)
+    meta, ana, merged = _merged_states(IndexStore(spark, index_path))
     grouped = bool(meta["group_col"])
     if tolerance is None:
-        tolerance = 2.0 * _bound(int(meta["k"]), int(meta["accuracy"]))
+        tolerance = 2.0 * _bound(meta["k"], meta["accuracy"])
     est = quantiles_from_index(spark, index_path, probs)
     keys = (["grp"] if grouped else []) + ["col_name", "p"]
     if exact_df is None:
@@ -303,23 +281,18 @@ def compact_quantile_index(spark, index_path: str) -> None:
     lossless: a compacted grid carries one extra merge level of rank
     error (≤ 2/k + 1/accuracy more), which the report's default
     two-level tolerance already budgets for.  k/accuracy/columns/
-    group_col in ``meta`` are untouched — appends keep composing, and
-    a compacted row merges with later shard rows exactly like any
-    other shard row (its n carries the folded mass).
+    group_col stay pinned — appends keep composing, and a compacted
+    row merges with later shard rows exactly like any other shard row
+    (its n carries the folded mass).
 
-    Driver-side fold (the table is KBs by construction), written to a
-    sibling temp dir then swapped with checked renames so a concurrent
-    probe never sees a half-written table.
+    The fold runs in Python (the table is KBs by construction).
     """
-    meta, ana, merged = _merged_states(spark, index_path)
+    store = IndexStore(spark, index_path)
+    _, _, merged = _merged_states(store)
     rows = []
     for (g, c) in sorted(merged):
         st, n_sh = merged[(g, c)]
         rows.append((g, c, st["n"], st["mn"], st["mx"], st["grid"], n_sh))
-    compacted = local_df(
+    store.compact({"grids": local_df(
         spark, rows, "grp string, col_name string, n bigint, mn double, "
-              "mx double, grid array<double>, n_shards bigint")
-    tmp = f"{index_path}/grids__compacting"
-    compacted.write.mode("overwrite").parquet(tmp)
-    from ..sources import hadoop_swap_dir
-    hadoop_swap_dir(spark, f"{index_path}/grids", tmp)
+              "mx double, grid array<double>, n_shards bigint")})

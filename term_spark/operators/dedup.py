@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..core.constraint import Constraint
+from ..index_store import IndexStore
 from ..session import local_df
 from .text import fingerprint, word_shingles
 
@@ -73,6 +74,13 @@ def _doc_shingles(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFram
                         .alias("shingle"))
                 .distinct())
 
+
+
+def _check_bands(num_hashes: int, bands: int) -> None:
+    # a remainder would leave the trailing minhashes outside every band
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(f"num_hashes ({num_hashes}) must be a multiple "
+                         f"of bands ({bands})")
 
 
 def _band_stack(sig: DataFrame, cols, bands: int) -> DataFrame:
@@ -387,7 +395,7 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
       and ``minhash_oph_candidates`` is the documented scale path —
       but see its densification caveat before also widening bands.
     """
-    assert num_hashes % bands == 0
+    _check_bands(num_hashes, bands)
     sig = minhash_signatures(df, text_col, id_col, k, num_hashes)
     # band hash = md5 of the concatenated row minhashes
     return _banded_pairs(sig, [f"mh_{i}" for i in range(num_hashes)], bands,
@@ -651,7 +659,7 @@ def minhash_oph_candidates(df: DataFrame, text_col: str = "text",
     (128, 4, r=32) configuration the 2.6x number comes from is safe
     because a band then spans multiple rotation windows.
     """
-    assert num_hashes % bands == 0
+    _check_bands(num_hashes, bands)
     from .text import norm_tokens, word_shingles_from
     toks = spread(df, id_col).select(
         F.col(id_col).alias("id"),
@@ -952,41 +960,28 @@ def build_cdc_index(df: DataFrame, index_path: str, text_col: str = "text",
     batches run chunk dedup against history WITHOUT re-chunking it —
     the third incremental-ingestion tier (near-dup has the MinHash
     index, substring dedup the gram index; this is the storage-unit
-    tier).  Layout under ``index_path``: ``meta`` pins (k, divisor) —
-    a probe under different cut params is a different chunking and
-    would silently miss — and ``chunks`` holds (h, n) per-shard
-    PARTIAL counts of the 16-byte chunk hashes.
+    tier).  The params (k, divisor) are pinned — a probe under
+    different cut params is a different chunking and would silently
+    miss — and the ``chunks`` table holds (h, n) per-shard PARTIAL
+    counts of the 16-byte chunk hashes.
 
     Append soundness is the gram-index argument verbatim: counts ADD
     across shards, and the probe's test is pure membership (stored
     means "history already holds this chunk"), monotone under
-    addition — so shard-wise appends == batch build.  Appending under
-    different pinned params raises.
+    addition — so shard-wise appends == batch build.
     """
-    spark = df.sparkSession
-    if mode == "append":
-        try:
-            meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-        except Exception:
-            meta = None
-        if meta is not None and (meta["k"], meta["divisor"]) != (k, divisor):
-            raise ValueError(
-                f"append with (k={k}, divisor={divisor}) onto an index "
-                f"built with (k={meta['k']}, divisor={meta['divisor']}) — "
-                "params are pinned at build time")
     per_shard = (cdc_chunks(df, text_col, id_col, k=k, divisor=divisor)
                  .groupBy(F.col("chunk_hash").alias("h"))
                  .agg(F.count(F.lit(1)).alias("n")))
-    per_shard.write.mode(mode).parquet(f"{index_path}/chunks")
-    local_df(spark, [(k, divisor)], "k int, divisor int") \
-        .write.mode("overwrite").parquet(f"{index_path}/meta")
+    IndexStore(df.sparkSession, index_path).write(
+        {"chunks": per_shard}, {"k": k, "divisor": divisor}, mode)
 
 
 def remove_duplicate_chunks_against_index(spark, index_path: str, new_df,
                                           text_col: str = "text",
                                           id_col: str = "doc_id"):
     """Chunk-dedup a NEW batch against a persisted CDC index: chunk
-    only the batch (cut params read from meta), drop every batch
+    only the batch (cut params read from the index), drop every batch
     chunk whose content already lives in HISTORY (stored hash — the
     history copy is canonical) or earlier in the batch itself (the
     (id, chunk_idx) first-occurrence election
@@ -1006,11 +1001,11 @@ def remove_duplicate_chunks_against_index(spark, index_path: str, new_df,
     batch rows only.  History text is never read, never re-chunked,
     never shuffled.
     """
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-    k, divisor = meta["k"], meta["divisor"]
+    store = IndexStore(spark, index_path)
+    k, divisor = store.params["k"], store.params["divisor"]
     ch = cdc_chunks(new_df, text_col, id_col, k=k, divisor=divisor) \
         .localCheckpoint()  # used twice: stored-hit join + election
-    stored_hits = (spark.read.parquet(f"{index_path}/chunks")
+    stored_hits = (store.read("chunks")
                    .select(F.col("h").alias("chunk_hash"))
                    .join(ch.select("chunk_hash").distinct(),
                          "chunk_hash", "left_semi")
@@ -1055,10 +1050,9 @@ def build_minhash_index(df: DataFrame, index_path: str,
     a bucket join). The text-retrieval analogue of the persisted IVF
     index in operators/similarity.
 
-    Layout under ``index_path``:
-    - ``meta``        1 row (k, num_hashes, bands) — probe params are
-                      pinned at build time; a mismatched probe is a
-                      different hash family and would silently miss.
+    Params (k, num_hashes, bands) are pinned at build time; a
+    mismatched probe is a different hash family and would silently
+    miss. Tables:
     - ``signatures``  (id, mh_0..mh_{n-1}) for the est-Jaccard verify.
     - ``buckets``     (id, band, h) — the LSH join side.
 
@@ -1073,39 +1067,20 @@ def build_minhash_index(df: DataFrame, index_path: str,
     prevents). Min-per-shingle signatures are row-local and bucket
     membership is per-document, so shard-wise union == batch build.
     """
-    assert num_hashes % bands == 0
-    spark = df.sparkSession
-    if mode == "append":
-        # a shard sketched under different (k, num_hashes, bands) is a
-        # different hash family — appending it would silently poison
-        # both the bucket join and the signature Jaccard estimate
-        try:
-            meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-        except Exception:
-            meta = None
-        if meta is not None and ((meta["k"], meta["num_hashes"],
-                                  meta["bands"]) != (k, num_hashes, bands)):
-            raise ValueError(
-                f"append with (k={k}, num_hashes={num_hashes}, "
-                f"bands={bands}) onto an index built with (k={meta['k']}, "
-                f"num_hashes={meta['num_hashes']}, bands={meta['bands']}) "
-                "— params are pinned at build time")
+    _check_bands(num_hashes, bands)
     sig = minhash_signatures(df, text_col, id_col, k, num_hashes) \
         .localCheckpoint()  # pin: the written shard IS the banded shard
-    sig.write.mode(mode).parquet(f"{index_path}/signatures")
     cols = [f"mh_{i}" for i in range(num_hashes)]
-    _band_stack(sig, cols, bands).write.mode(mode) \
-        .parquet(f"{index_path}/buckets")
-    local_df(spark, [(k, num_hashes, bands)],
-             "k int, num_hashes int, bands int") \
-        .write.mode("overwrite").parquet(f"{index_path}/meta")
+    IndexStore(df.sparkSession, index_path).write(
+        {"signatures": sig, "buckets": _band_stack(sig, cols, bands)},
+        {"k": k, "num_hashes": num_hashes, "bands": bands}, mode)
 
 
 def neardup_against_index(spark, index_path: str, new_df: DataFrame,
                           text_col: str = "text", id_col: str = "doc_id",
                           min_est_jaccard: float = 0.0) -> DataFrame:
     """Near-dup candidates between a NEW batch and a persisted index:
-    sketch only the batch (params read from the index meta), join its
+    sketch only the batch (params read from the index), join its
     band hashes against the stored buckets, and score every candidate
     with the standard signature estimate of Jaccard — the fraction of
     the num_hashes minhashes that agree (each agrees with probability
@@ -1117,15 +1092,16 @@ def neardup_against_index(spark, index_path: str, new_df: DataFrame,
     small one, so AQE broadcasts it. The est-Jaccard verify joins the
     TWO bounded signature tables (candidates only), never the texts.
     """
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-    k, num_hashes, bands = meta["k"], meta["num_hashes"], meta["bands"]
+    store = IndexStore(spark, index_path)
+    k, num_hashes, bands = (store.params["k"], store.params["num_hashes"],
+                            store.params["bands"])
     cols = [f"mh_{i}" for i in range(num_hashes)]
 
     new_sig = minhash_signatures(new_df, text_col, id_col, k, num_hashes) \
         .localCheckpoint()  # used twice: band stack + est verify
     new_stack = _band_stack(new_sig, cols, bands) \
         .select(F.col("id").alias("new_id"), "band", "h")
-    buckets = spark.read.parquet(f"{index_path}/buckets") \
+    buckets = store.read("buckets") \
         .select(F.col("id").alias("index_id"), "band", "h")
     pairs = (new_stack.join(buckets, ["band", "h"])
              .groupBy("new_id", "index_id")
@@ -1133,7 +1109,7 @@ def neardup_against_index(spark, index_path: str, new_df: DataFrame,
 
     nsig = new_sig.select(F.col("id").alias("new_id"),
                           *[F.col(c).alias(f"n_{c}") for c in cols])
-    isig = (spark.read.parquet(f"{index_path}/signatures")
+    isig = (store.read("signatures")
             .select(F.col("id").alias("index_id"),
                     *[F.col(c).alias(f"i_{c}") for c in cols]))
     agree = sum(F.when(F.col(f"n_{c}") == F.col(f"i_{c}"), 1).otherwise(0)

@@ -26,6 +26,7 @@ from ..session import local_df
 from ..core.constraint import Constraint, EngineContext
 from ..core.result import ConstraintResult
 from ..functions.security import validate_identifier
+from ..index_store import IndexStore
 
 NULL_BUCKET = "NullValue"
 
@@ -402,7 +403,7 @@ def equidepth_histogram_from_index(df, column: str, index_path: str,
     # blend groups (duplicate p keys, last group wins).  Per-group
     # histograms need per-group exact counts too; refuse rather than
     # guess.
-    meta, ana, merged = _merged_states(spark, index_path)
+    meta, ana, merged = _merged_states(IndexStore(spark, index_path))
     if meta["group_col"]:
         raise ValueError(
             f"equidepth_histogram_from_index: the index at {index_path} "
@@ -507,7 +508,7 @@ def equidepth_histograms_by_group(df, column: str, index_path: str,
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
     spark = df.sparkSession
-    meta, ana, merged = _merged_states(spark, index_path)
+    meta, ana, merged = _merged_states(IndexStore(spark, index_path))
     gcol = meta["group_col"]
     if not gcol:
         raise ValueError(

@@ -33,6 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..core.constraint import Constraint
+from ..index_store import IndexStore
 from ..session import local_df
 
 
@@ -413,10 +414,10 @@ def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 16,
                     train_iterations: int = 5, seed: int = 42) -> None:
     """Build a persistent IVF index: train centroids (distributed
     Lloyd's), assign every corpus vector to its nearest centroid, and
-    write both as parquet under ``path``:
+    persist both as index tables under ``path``:
 
-    - ``{path}/centroids``    — (cid, cvec)            (k rows)
-    - ``{path}/assignments``  — (nbr_id, vb, cid), PARTITIONED BY cid
+    - ``centroids``    — (cid, cvec)                (k rows)
+    - ``assignments``  — (nbr_id, vb, nb, cid), PARTITIONED BY cid
 
     The cid partitioning is the point: serving a query batch probes
     ``nprobe`` centroids, and the ``cid IN (...)`` filter prunes to
@@ -430,7 +431,6 @@ def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 16,
     cents = local_df(
         spark, [(i, c) for i, c in enumerate(trained)],
         "cid long, cvec array<double>")
-    cents.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
     corpus = df.select(F.col(id_col).alias("nbr_id"),
                        F.transform(F.col(vec_col),
@@ -443,17 +443,19 @@ def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 16,
     # with the assignment — serving evaluates one dot per probed pair.
     assigned = with_nearest_centroid(corpus, "vb", trained,
                                      out="cid", metric="cosine")
-    (assigned.select("nbr_id", "vb", "cid", _norm(F.col("vb")).alias("nb"))
-     .write.mode("overwrite").partitionBy("cid")
-     .parquet(f"{path}/assignments"))
+    IndexStore(spark, path).write(
+        {"centroids": cents.coalesce(1),
+         "assignments": assigned.select("nbr_id", "vb", "cid",
+                                        _norm(F.col("vb")).alias("nb"))},
+        {}, partition_by={"assignments": "cid"})
 
 
 def load_ivf_index(spark, path: str):
     """(centroids, assignments) DataFrames of a ``build_ivf_index``
     output. Assignments keep their cid partitioning — filters on cid
     prune at the scan."""
-    return (spark.read.parquet(f"{path}/centroids"),
-            spark.read.parquet(f"{path}/assignments"))
+    store = IndexStore(spark, path)
+    return store.read("centroids"), store.read("assignments")
 
 
 def ivf_topk_from_index(spark, path: str, queries: DataFrame, k: int = 5,
@@ -483,8 +485,6 @@ def ivf_topk_from_index(spark, path: str, queries: DataFrame, k: int = 5,
 
     probed_cids = [r["cid"] for r in probes.select("cid").distinct().collect()]
     pruned = assignments.filter(F.col("cid").isin(probed_cids))
-    if "nb" not in pruned.columns:  # index built before norms were persisted
-        pruned = pruned.withColumn("nb", _norm(F.col("vb")))
 
     scored = (probes.join(pruned, "cid")
               .withColumn("cosine", _dot(F.col("va"), F.col("vb")) /
@@ -1336,34 +1336,26 @@ def build_ivfpq_index(df: DataFrame, path: str, id_col: str = "vec_id",
     """Persist an IVF-PQ index (the compressed sibling of
     ``build_ivf_index``) under ``path``:
 
-    - ``{path}/model`` — one JSON row: coarse centroids + residual PQ
-      codebooks (k·d + m·pq_k·(d/m) floats — always tiny)
-    - ``{path}/codes`` — (id, pq_code), PARTITIONED BY cid
+    - params ``model`` — coarse centroids + residual PQ codebooks
+      (k·d + m·pq_k·(d/m) floats — always tiny)
+    - ``codes`` — (id, pq_code), PARTITIONED BY cid
 
     Same serving economics as the IVF index's partition pruning, but
     each row stores m small ints instead of d floats + a norm — the
     index for the corpus whose raw vectors don't fit the cluster.
     Build once, serve many query batches (``ivfpq_topk_from_index``).
     """
-    import json
-
-    spark = df.sparkSession
     codes, model = ivfpq_build(df, id_col, vec_col, n_centroids, m, pq_k,
                                train_iterations, sample_size, iters, seed)
-    (local_df(spark, [(json.dumps(model),)], "model string")
-     .coalesce(1).write.mode("overwrite").json(f"{path}/model"))
-    (codes.write.mode("overwrite").partitionBy("cid")
-     .parquet(f"{path}/codes"))
+    IndexStore(df.sparkSession, path).write(
+        {"codes": codes}, {"model": model}, partition_by={"codes": "cid"})
 
 
 def load_ivfpq_index(spark, path: str):
     """(codes_df, model) of a ``build_ivfpq_index`` output.  Codes keep
     their cid partitioning — filters on cid prune at the scan."""
-    import json
-
-    model = json.loads(
-        spark.read.json(f"{path}/model").collect()[0]["model"])
-    return spark.read.parquet(f"{path}/codes"), model
+    store = IndexStore(spark, path)
+    return store.read("codes"), store.params["model"]
 
 
 def ivfpq_topk_from_index(spark, path: str, queries: DataFrame, k: int = 5,

@@ -18,6 +18,7 @@ from typing import Dict, List, Optional, Sequence
 import pyspark.sql.functions as F
 
 from ..core.constraint import Constraint
+from ..index_store import IndexStore
 from ..session import local_df
 
 # Marker stopwords per language for the n-gram/marker heuristic
@@ -811,13 +812,11 @@ def build_substring_index(df, index_path: str, text_col: str = "text",
     per distinct gram on disk, touched only by a semi-join against the
     batch's gram set).
 
-    Layout under ``index_path``:
-    - ``meta``   1 row (k, hasher) — gram params are pinned at build
-                 time; a probe under different params is a different
-                 gram family and would silently miss.
-    - ``grams``  (h, n) per-shard PARTIAL counts (h is the rolling
-                 struct<h1,h2> pair or the md5 hex string per
-                 ``hasher``); ``min_count`` stays a PROBE parameter.
+    The gram params (k, hasher) are pinned at build time; a probe
+    under different params is a different gram family and would
+    silently miss.  The ``grams`` table holds (h, n) per-shard PARTIAL
+    counts (h is the rolling struct<h1,h2> pair or the md5 hex string
+    per ``hasher``); ``min_count`` stays a PROBE parameter.
 
     Append-shard soundness (the ``build_minhash_index`` argument, one
     step simpler): gram counts ADD across shards — each ``mode=
@@ -830,25 +829,10 @@ def build_substring_index(df, index_path: str, text_col: str = "text",
     ``compact_substring_index`` folds shard partials into one row per
     hash when the shard count grows.
     """
-    spark = df.sparkSession
-    if mode == "append":
-        # appending under different gram params would mix two
-        # incompatible hash families into one table — fail loudly
-        # instead of silently corrupting every future probe
-        try:
-            meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-        except Exception:
-            meta = None
-        if meta is not None and (meta["k"], meta["hasher"]) != (k, hasher):
-            raise ValueError(
-                f"append with (k={k}, hasher={hasher!r}) onto an index "
-                f"built with (k={meta['k']}, hasher={meta['hasher']!r}) — "
-                "params are pinned at build time")
     per_shard = (_gram_table(df, text_col, id_col, k, hasher)
                  .groupBy("h").agg(F.count(F.lit(1)).alias("n")))
-    per_shard.write.mode(mode).parquet(f"{index_path}/grams")
-    local_df(spark, [(k, hasher)], "k int, hasher string") \
-        .write.mode("overwrite").parquet(f"{index_path}/meta")
+    IndexStore(df.sparkSession, index_path).write(
+        {"grams": per_shard}, {"k": k, "hasher": hasher}, mode)
 
 
 def compact_substring_index(spark, index_path: str) -> None:
@@ -856,9 +840,9 @@ def compact_substring_index(spark, index_path: str) -> None:
     gram — run occasionally after many appends; probes are correct
     either way (they sum), compaction just bounds the index size at
     |distinct grams| rows."""
-    grams = (spark.read.parquet(f"{index_path}/grams")
-             .groupBy("h").agg(F.sum("n").alias("n")).localCheckpoint())
-    grams.write.mode("overwrite").parquet(f"{index_path}/grams")
+    store = IndexStore(spark, index_path)
+    store.compact({"grams": store.read("grams").groupBy("h")
+                   .agg(F.sum("n").alias("n"))})
 
 
 def duplicated_spans_against_index(spark, index_path: str, new_df,
@@ -887,8 +871,8 @@ def duplicated_spans_against_index(spark, index_path: str, new_df,
     is the shared per-doc window.  History text is never read, never
     re-hashed, never shuffled.
     """
-    meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-    k, hasher = meta["k"], meta["hasher"]
+    store = IndexStore(spark, index_path)
+    k, hasher = store.params["k"], store.params["hasher"]
     if min_count < 2:
         raise ValueError(
             f"min_count must be >= 2 (got {min_count}): every position "
@@ -897,7 +881,7 @@ def duplicated_spans_against_index(spark, index_path: str, new_df,
     grams = _gram_table(new_df, text_col, id_col, k, hasher) \
         .localCheckpoint()  # used twice: freq + position semi-join
     batch_freq = grams.groupBy("h").agg(F.count(F.lit(1)).alias("n_batch"))
-    stored = (spark.read.parquet(f"{index_path}/grams")
+    stored = (store.read("grams")
               .join(batch_freq.select("h"), "h", "left_semi")
               .groupBy("h").agg(F.sum("n").alias("n_stored")))
     self_n = F.col("n_batch") if include_batch else F.lit(1)
@@ -1833,7 +1817,7 @@ class GopherQualityConstraint(_Constraint):
 # Persisted BM25 postings index — the retrieval serving tier
 # ---------------------------------------------------------------------------
 
-#: tokenizer identity pinned into BM25 index metas — bump when
+#: tokenizer identity pinned into BM25 index params — bump when
 #: norm_tokens changes so stale indexes refuse to serve silently-wrong
 #: postings instead of mixing two tokenizations
 BM25_TOKENIZER_TAG = "norm_tokens_v1"
@@ -1847,10 +1831,9 @@ def build_bm25_index(df, index_path: str, text_col: str = "text",
     the serving half of ``bm25_topk``: build once per ingest, serve
     many query batches.
 
-    Layout under ``index_path``:
-    - ``meta``      1 row — the tokenizer tag is pinned (a probe or
-                    append under a different tokenization is a
-                    different term space and would silently miss).
+    The tokenizer tag is pinned (a probe or append under a different
+    tokenization is a different term space and would silently miss).
+    Tables:
     - ``postings``  (doc_id, term, tf) — the corpus side of the score.
     - ``doclens``   (doc_id, dl) — the length-normalization side.
 
@@ -1868,27 +1851,16 @@ def build_bm25_index(df, index_path: str, text_col: str = "text",
     groupBy per shard — the exact postings pass ``bm25_topk`` runs,
     now amortized across every future query batch.
     """
-    spark = df.sparkSession
-    if mode == "append":
-        try:
-            meta = spark.read.parquet(f"{index_path}/meta").collect()[0]
-        except Exception:
-            meta = None
-        if meta is not None and meta["tokenizer"] != BM25_TOKENIZER_TAG:
-            raise ValueError(
-                f"append with tokenizer={BM25_TOKENIZER_TAG!r} onto an "
-                f"index built with {meta['tokenizer']!r} — the term "
-                "space is pinned at build time")
     base = df.filter(F.col(text_col).isNotNull())
     ex = base.select(F.col(id_col).alias("doc_id"),
                      F.explode(norm_tokens(text_col)).alias("term"))
-    (ex.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-     .write.mode(mode).parquet(f"{index_path}/postings"))
-    (base.select(F.col(id_col).alias("doc_id"),
-                 F.size(norm_tokens(text_col)).cast("double").alias("dl"))
-     .write.mode(mode).parquet(f"{index_path}/doclens"))
-    local_df(spark, [(BM25_TOKENIZER_TAG,)], "tokenizer string") \
-        .write.mode("overwrite").parquet(f"{index_path}/meta")
+    IndexStore(df.sparkSession, index_path).write(
+        {"postings": ex.groupBy("doc_id", "term")
+                       .agg(F.count(F.lit(1)).alias("tf")),
+         "doclens": base.select(F.col(id_col).alias("doc_id"),
+                                F.size(norm_tokens(text_col))
+                                .cast("double").alias("dl"))},
+        {"tokenizer": BM25_TOKENIZER_TAG}, mode)
 
 
 def bm25_topk_from_index(spark, index_path: str, queries,
@@ -1912,8 +1884,8 @@ def bm25_topk_from_index(spark, index_path: str, queries,
         raise ValueError(f"need k1 >= 0 and 0 <= b <= 1, got {k1}, {b}")
     from pyspark.sql import Window
 
-    tf = spark.read.parquet(f"{index_path}/postings")
-    dl = spark.read.parquet(f"{index_path}/doclens")
+    store = IndexStore(spark, index_path)
+    tf, dl = store.read("postings"), store.read("doclens")
     stats = dl.agg(F.count(F.lit(1)).alias("__n"),
                    F.avg("dl").alias("__avgdl"))
     qt = (queries.select(F.col(query_id_col).alias("query_id"),
@@ -1952,18 +1924,11 @@ def compact_bm25_index(spark, index_path: str,
     aggregation, byte-identical row set, estimates and scores
     unchanged by construction.  After thousands of ingest appends the
     win is file-count, not bytes: a probe's postings scan stops paying
-    per-file open/footer costs.  Write-then-swap, so a concurrent
-    probe never sees a half-written table.
+    per-file open/footer costs.
     """
     if target_partitions < 1:
         raise ValueError(
             f"target_partitions must be >= 1, got {target_partitions}")
-    from ..sources import hadoop_swap_dir
-    for table in ("postings", "doclens"):
-        src = f"{index_path}/{table}"
-        tmp = f"{index_path}/{table}__compacting"
-        spark.read.parquet(src).coalesce(int(target_partitions)) \
-            .write.mode("overwrite").parquet(tmp)
-        # checked swap: rename returns false on failure; an unchecked
-        # false here would delete the only copy of the postings
-        hadoop_swap_dir(spark, src, tmp)
+    store = IndexStore(spark, index_path)
+    store.compact({t: store.read(t).coalesce(int(target_partitions))
+                   for t in ("postings", "doclens")})

@@ -94,10 +94,7 @@ class SuiteRunner:
         # ---- build independent job thunks -----------------------------
         fused_jobs = {}   # (table, where) -> (pairs, fusion groups)
         for key, pairs in scalar.items():
-            merged: Dict[str, "F.Column"] = {SIZE_ALIAS: F.count(F.lit(1))}
-            for _, _, exprs in pairs:
-                for alias, col in exprs.items():
-                    merged.setdefault(alias, col)  # dedup by alias
+            merged = self._merge(exprs for _, _, exprs in pairs)
             fused_jobs[key] = (pairs, self._fusion_groups(merged))
 
         def agg_group(df, group):
@@ -219,6 +216,15 @@ class SuiteRunner:
     # inputs.  Classification comes from the alias tag (metric_alias
     # tag=): 'md_' = distinct, 'mk_' = sketch, 'ms_' = plain.
     @staticmethod
+    def _merge(expr_maps) -> Dict[str, "F.Column"]:
+        """Row count + every constraint's metrics, first alias wins."""
+        merged: Dict[str, "F.Column"] = {SIZE_ALIAS: F.count(F.lit(1))}
+        for exprs in expr_maps:
+            for alias, col in exprs.items():
+                merged.setdefault(alias, col)
+        return merged
+
+    @staticmethod
     def _fusion_groups(merged: Dict[str, "F.Column"]) -> List[Dict[str, "F.Column"]]:
         plain: Dict[str, "F.Column"] = {}
         distinct: List[Dict[str, "F.Column"]] = []
@@ -254,7 +260,7 @@ class SuiteRunner:
         import io
 
         ctx = EngineContext(spark, tables, suite.default_table)
-        merged_by_table: Dict[Tuple, Dict[str, "F.Column"]] = defaultdict(dict)
+        exprs_by_table: Dict[Tuple, List[Dict]] = defaultdict(list)
         distinct_keys: Dict[str, "F.Column"] = {}
         for check in suite.checks:
             for con in check.constraints:
@@ -263,15 +269,17 @@ class SuiteRunner:
                     exprs = con.scalar_metrics(ctx.df(table))
                 except Exception:
                     continue
-                merged_by_table[(table, check.where)].update(exprs)
+                if not exprs:
+                    continue
+                exprs_by_table[(table, check.where)].append(exprs)
                 grouping = getattr(con, "distinct_groupings", None)
                 if grouping is not None:
                     distinct_keys.update(grouping())
         out = []
-        for (table, where), merged in merged_by_table.items():
-            # the SAME grouping run() executes — explain must never
-            # render a fusion the runner wouldn't use (round-8 review)
-            groups = self._fusion_groups(merged)
+        for (table, where), expr_maps in exprs_by_table.items():
+            # the SAME merge and grouping run() executes — explain must
+            # never render a fusion the runner wouldn't use
+            groups = self._fusion_groups(self._merge(expr_maps))
             for group in groups:
                 first = next(iter(group))
                 label = ("distinct" if first.startswith("md_")

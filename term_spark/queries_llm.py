@@ -3342,7 +3342,7 @@ def q_incremental_distinct_docs(spark, sf_dir) -> DataFrame:
     FOURTH incremental-ingestion tier: analyzers/distinct_index.py):
     the corpus slice (doc_id % 4 != 0) is sketched ONCE into a scratch
     index (one DataSketches HLL blob per tracked column, lgK pinned in
-    meta), the new batch (doc_id % 4 == 0) sketches ONLY ITSELF and
+    the manifest), the new batch (doc_id % 4 == 0) sketches ONLY ITSELF and
     appends, and the probe unions the shard blobs — the corpus is
     never rescanned.  Per column the row carries the exact distinct
     count (oracle-computable) plus the Spark-verified attestation the
@@ -3854,7 +3854,7 @@ def q_incremental_quantile_docs(spark, sf_dir) -> DataFrame:
     incremental-ingestion tier: analyzers/quantile_index.py): the
     corpus slice (doc_id % 4 != 0) is sketched ONCE into a scratch
     index (one equi-depth grid per tracked column, k/accuracy pinned
-    in meta), the new batch (doc_id % 4 == 0) sketches ONLY ITSELF in
+    in the manifest), the new batch (doc_id % 4 == 0) sketches ONLY ITSELF in
     one fused percentile_approx pass and appends, and the probe merges
     the O(shards x columns) grid rows driver-side — the corpus is
     never rescanned.  Per (column, prob) the row carries the EXACT
@@ -4350,7 +4350,7 @@ def q_quantile_by_source_docs(spark, sf_dir) -> DataFrame:
     symmetry for the SIXTH tier: per-(source, column) grids from the
     SAME fused percentile_approx pass keyed on the group column, so a
     per-crawl p25/p50/p75 length dashboard merges kilobyte grid rows;
-    group_col is pinned in meta like k/accuracy — an ungrouped append
+    group_col is pinned like k/accuracy — an ungrouped append
     onto a grouped index refuses).  Same 2-shard build→append→probe
     shape as q_incremental_quantile_docs; per (source, prob) the row
     carries the EXACT per-group quantile (oracle-computable) plus the

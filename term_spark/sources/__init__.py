@@ -339,40 +339,3 @@ def configure_azure(spark: SparkSession, account: str,
         conf.set(f"fs.azure.account.oauth2.client.endpoint.{host}",
                  f"https://login.microsoftonline.com/{tenant_id}/oauth2/token")
     return spark
-
-
-def hadoop_swap_dir(spark: SparkSession, live: str, tmp: str) -> None:
-    """Replace directory ``live`` with freshly-written ``tmp`` through
-    the Hadoop FileSystem API — the write-then-swap step every index
-    compaction ends with.
-
-    FileSystem.rename reports failure by RETURNING FALSE, not by
-    throwing, and renaming onto an existing directory moves the source
-    INSIDE it instead of replacing it — so an unchecked swap can
-    destroy the only copy of an index (rename(live→bak) succeeds,
-    rename(tmp→live) silently fails, delete(bak) removes the last
-    copy), and a stale ``__old`` left by a crashed prior compaction
-    turns the backup rename into a nesting. This helper checks every
-    return, clears stale backups first (live is canonical after a
-    crash — the old swap never completed), restores the original on a
-    failed second rename, and deletes the backup only after the new
-    live path verifiably exists.
-    """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path_cls = jvm.org.apache.hadoop.fs.Path
-    fs = path_cls(live).getFileSystem(conf)
-    live_p, tmp_p = path_cls(live), path_cls(tmp)
-    bak = path_cls(live + "__old")
-    if fs.exists(bak) and not fs.delete(bak, True):
-        raise IOError(f"could not clear stale backup {live}__old")
-    if not fs.rename(live_p, bak):
-        raise IOError(f"rename {live} -> {live}__old returned false")
-    if not fs.rename(tmp_p, live_p):
-        fs.rename(bak, live_p)  # put the original back — never leave no live
-        raise IOError(f"rename {tmp} -> {live} returned false; "
-                      "original table restored")
-    if not fs.exists(live_p):
-        raise IOError(f"{live} missing after swap; backup kept at "
-                      f"{live}__old")
-    fs.delete(bak, True)

@@ -7,6 +7,7 @@ import pytest
 
 import pyspark.sql.functions as F
 
+from term_spark.index_store import IndexStore
 from term_spark.operators.text import (BM25_TOKENIZER_TAG, bm25_topk,
                                        bm25_topk_from_index,
                                        build_bm25_index)
@@ -96,7 +97,8 @@ def test_compaction_is_a_pure_rewrite(spark, tmp_path):
     compact_bm25_index(spark, path, target_partitions=1)
     after = _rows(bm25_topk_from_index(spark, path, q, k=5))
     assert after == before
-    n_files = len([f for f in os.listdir(f"{path}/postings")
+    n_files = len([f for f in os.listdir(
+                       IndexStore(spark, path).paths("postings")[0])
                    if f.endswith(".parquet")])
     assert n_files == 1
     # appends keep composing after compaction

@@ -11,6 +11,7 @@ from term_spark.analyzers.distinct_index import (DEFAULT_LGK,
                                                  build_distinct_index,
                                                  distinct_estimates_from_index,
                                                  distinct_index_report, rse)
+from term_spark.index_store import IndexStore
 
 
 def _docs(spark, n=600, start=0):
@@ -145,7 +146,7 @@ def test_compaction_preserves_estimates_and_append_composes(spark, tmp_path):
         # fix): compaction folds rows but sums the shard counters
         assert after[col]["n_shards"] == 4
     # the table itself DID fold to one blob per column
-    assert spark.read.parquet(f"{path}/sketches").count() == 2
+    assert IndexStore(spark, path).read("sketches").count() == 2
     # appends keep composing after compaction
     build_distinct_index(_docs(spark, n=100, start=400),
                          ["doc_id", "lang"], path, mode="append")
@@ -154,10 +155,9 @@ def test_compaction_preserves_estimates_and_append_composes(spark, tmp_path):
 
 
 def test_compaction_clears_stale_backup_and_checks_renames(spark, tmp_path):
-    """Round-12 advice pin: a crashed prior compaction can leave a
-    ``sketches__old`` dir; rename onto an existing directory NESTS the
-    source inside it instead of replacing it, so the swap must clear
-    stale backups first and check every rename's boolean return."""
+    """A crashed prior compaction leaves an uncommitted shard
+    directory; probes must ignore it and the next commit must delete
+    it."""
     import os
 
     from term_spark.analyzers.distinct_index import compact_distinct_index
@@ -167,13 +167,13 @@ def test_compaction_clears_stale_backup_and_checks_renames(spark, tmp_path):
     build_distinct_index(_docs(spark, n=50, start=200), ["doc_id"], path,
                          mode="append")
     before = _est(spark, path)["doc_id"]
-    # plant a stale backup from a "crashed" prior compaction
-    stale = tmp_path / "idx" / "sketches__old"
-    stale.mkdir()
+    # plant the uncommitted shard of a "crashed" prior compaction
+    stale = tmp_path / "idx" / "shard-crashed" / "sketches"
+    stale.mkdir(parents=True)
     (stale / "junk.parquet").write_bytes(b"not parquet")
     compact_distinct_index(spark, path)
     after = _est(spark, path)["doc_id"]
     assert after["n_distinct_est"] == before["n_distinct_est"]
     assert after["n_shards"] == 2
-    # backup cleaned up, no nested live-table-inside-backup wreckage
+    # the next commit deleted the uncommitted shard
     assert not os.path.exists(str(stale))

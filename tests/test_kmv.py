@@ -133,15 +133,13 @@ def test_overlap_from_index_sorts_legacy_null_group(spark, tmp_path):
     """An index persisted before the NULL-group fix may carry a None
     key; the probe must order it deterministically, not raise."""
     from term_spark.analyzers.kmv_index import overlap_from_index
-    import pyspark.sql.functions as F
+    from term_spark.index_store import IndexStore
     p = str(tmp_path / "kmv_null")
-    spark.createDataFrame([(8, "src", "val")],
-                          "k int, group_col string, column string") \
-        .write.parquet(f"{p}/meta")
-    spark.createDataFrame(
-        [("a", ["0a", "0b"], 1), (None, ["0a", "0c"], 1)],
-        "grp string, hashes array<string>, n_shards bigint") \
-        .write.parquet(f"{p}/sketches")
+    IndexStore(spark, p).write(
+        {"sketches": spark.createDataFrame(
+            [("a", ["0a", "0b"], 1), (None, ["0a", "0c"], 1)],
+            "grp string, hashes array<string>, n_shards bigint")},
+        {"k": 8, "group_col": "src", "column": "val"})
     rows = overlap_from_index(spark, p).collect()
     assert len(rows) == 1
     assert rows[0]["grp_a"] == "a" and rows[0]["grp_b"] is None

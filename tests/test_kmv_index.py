@@ -10,6 +10,7 @@ import pytest
 from term_spark.analyzers.kmv_index import (build_kmv_index,
                                             compact_kmv_index,
                                             overlap_from_index)
+from term_spark.index_store import IndexStore
 
 
 def _grouped(spark, n=300):
@@ -83,7 +84,7 @@ def test_compaction_is_byte_identical(spark, tmp_path):
     build_kmv_index(thirds[1], "source", "val", path, k=64, mode="append")
     before = _probe(spark, path)
     compact_kmv_index(spark, path)
-    sk = spark.read.parquet(f"{path}/sketches")
+    sk = IndexStore(spark, path).read("sketches")
     assert sk.count() == 3  # one row per group
     after = _probe(spark, path)
     for key in before:
@@ -95,7 +96,7 @@ def test_compaction_is_byte_identical(spark, tmp_path):
                     batch, k=64)
     live = {r["grp"]: r["hashes"] for r in sk.collect()}
     ref = {r["grp"]: r["hashes"] for r in
-           spark.read.parquet(f"{batch}/sketches").collect()}
+           IndexStore(spark, batch).read("sketches").collect()}
     assert live == ref
     # post-compaction append keeps composing
     build_kmv_index(thirds[2], "source", "val", path, k=64, mode="append")

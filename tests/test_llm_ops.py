@@ -4,6 +4,7 @@ similarity search, text analysis, multimodal plumbing."""
 import pytest
 
 import pyspark.sql.functions as F
+from term_spark.index_store import IndexStore
 from term_spark.operators import dedup as D
 from term_spark.operators import multimodal as M
 from term_spark.operators import similarity as S
@@ -709,7 +710,8 @@ def test_ivf_index_persist_roundtrip(spark, tmp_path):
 
     # cid partitioning is real: hive-style dirs + partition pruning
     import os
-    subdirs = [d for d in os.listdir(f"{path}/assignments")
+    subdirs = [d for d in os.listdir(
+                   IndexStore(spark, path).paths("assignments")[0])
                if d.startswith("cid=")]
     assert len(subdirs) == n_cells
     plan = (assignments.filter(F.col("cid").isin([0, 1]))
@@ -2062,7 +2064,8 @@ def test_ivfpq_index_persist_roundtrip(spark, tmp_path):
         codes, queries, model, k=4, nprobe=3).collect()))
     assert served == in_mem
 
-    subdirs = [d for d in os.listdir(f"{path}/codes")
+    subdirs = [d for d in os.listdir(
+                   IndexStore(spark, path).paths("codes")[0])
                if d.startswith("cid=")]
     assert 2 <= len(subdirs) <= 8
     plan = (codes.filter(F.col("cid").isin([0, 1]))

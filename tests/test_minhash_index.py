@@ -5,6 +5,7 @@ copies vs novel text. md5 hashing — deterministic, no RNG."""
 
 import pytest
 
+from term_spark.index_store import IndexStore
 from term_spark.operators.dedup import (build_minhash_index,
                                         minhash_lsh_candidates,
                                         minhash_signatures,
@@ -97,7 +98,7 @@ def test_append_is_linear_not_quadratic(spark, tmp_path):
     build_minhash_index(_df(spark, _CORPUS[1:2]), idx, mode="append")
     build_minhash_index(_df(spark, _CORPUS[2:3]), idx, mode="append")
 
-    buckets = spark.read.parquet(f"{idx}/buckets")
+    buckets = IndexStore(spark, idx).read("buckets")
     # 3 docs x 4 bands, no duplicated rows from repeated appends
     assert buckets.count() == 3 * bands
     per_doc = {r["id"]: r["n"] for r in
@@ -139,3 +140,19 @@ def test_append_param_mismatch_fails_loudly(spark, tmp_path):
     with pytest.raises(ValueError, match="pinned at build time"):
         build_minhash_index(_df(spark, _BATCH), idx, num_hashes=32,
                             bands=4, mode="append")
+
+
+@pytest.mark.parametrize("entry", ["lsh", "oph", "index"])
+def test_bands_must_divide_num_hashes(spark, tmp_path, entry):
+    """A remainder would leave the trailing minhashes outside every
+    band; the check must raise, not assert (asserts vanish under -O)."""
+    from term_spark.operators.dedup import minhash_oph_candidates
+    df = _df(spark, _CORPUS)
+    call = {"lsh": lambda: minhash_lsh_candidates(df, num_hashes=10,
+                                                  bands=4),
+            "oph": lambda: minhash_oph_candidates(df, num_hashes=10,
+                                                  bands=4),
+            "index": lambda: build_minhash_index(
+                df, str(tmp_path / "idx"), num_hashes=10, bands=4)}[entry]
+    with pytest.raises(ValueError, match=r"num_hashes \(10\).*bands \(4\)"):
+        call()

@@ -372,3 +372,29 @@ def test_partitioned_write_prunes_partitions(spark, tpch, tmp_path):
     n_parts = q.withColumn("f", F.input_file_name()) \
                .select("f").distinct().count()
     assert n_parts == 1
+
+
+def test_explain_renders_the_plain_group_run_executes(spark, tpch,
+                                                      monkeypatch):
+    """A suite whose scalar constraints are all distinct-class still
+    runs a plain group (the row count rides it); explain must render
+    that same group, metric for metric."""
+    import re
+
+    from term_spark.plans.executor import SuiteRunner
+    suite = (ValidationSuite.builder("distinct_only")
+             .with_check(Check("c", Level.ERROR).is_unique("l_orderkey")))
+    ran = []
+    fusion_groups = SuiteRunner._fusion_groups
+
+    def spy(merged):
+        groups = fusion_groups(merged)
+        ran.extend(groups)
+        return groups
+
+    monkeypatch.setattr(SuiteRunner, "_fusion_groups", staticmethod(spy))
+    suite.run(spark, tpch["lineitem"])
+    plain = [g for g in ran if not next(iter(g)).startswith(("md_", "mk_"))]
+    assert len(plain) == 1
+    text = suite.explain(spark, tpch["lineitem"])
+    assert re.findall(r"\[plain, (\d+) metrics", text) == [str(len(plain[0]))]

@@ -14,6 +14,7 @@ from term_spark.analyzers.quantile_index import (DEFAULT_ACCURACY,
                                                  compact_quantile_index,
                                                  quantile_index_report,
                                                  quantiles_from_index)
+from term_spark.index_store import IndexStore
 
 PROBS = [0.1, 0.5, 0.9]
 
@@ -138,7 +139,7 @@ def test_compaction_bounded_and_append_composes(spark, tmp_path):
     build_quantile_index(thirds[0], ["sq", "mod"], path)
     build_quantile_index(thirds[1], ["sq", "mod"], path, mode="append")
     compact_quantile_index(spark, path)
-    grids = spark.read.parquet(f"{path}/grids")
+    grids = IndexStore(spark, path).read("grids")
     assert grids.count() == 2  # one row per column
     assert {r["n_shards"] for r in grids.collect()} == {2}
     # post-compaction append keeps composing; the report's two-level
@@ -176,7 +177,7 @@ def test_grouped_index_per_group_quantiles(spark, tmp_path):
         build_quantile_index(d, ["v"], path, mode="append")
     # compaction folds to one row per (group, column) and keeps probing
     compact_quantile_index(spark, path)
-    grids = spark.read.parquet(f"{path}/grids")
+    grids = IndexStore(spark, path).read("grids")
     assert grids.count() == 2
     rep2 = {r["grp"]: r for r in quantile_index_report(
         spark, path, [0.5], exact_df=d).collect()}

@@ -6,6 +6,7 @@ include_batch=False "against history only" mode."""
 
 import pytest
 
+from term_spark.index_store import IndexStore
 from term_spark.operators.text import (build_substring_index,
                                        compact_substring_index,
                                        duplicated_spans,
@@ -86,7 +87,7 @@ def test_compact_preserves_probe(spark, tmp_path):
     before = _probe(spark, idx, _df(spark, _BATCH))
     compact_substring_index(spark, idx)
     # compaction folds partials to one row per distinct gram
-    grams = spark.read.parquet(f"{idx}/grams")
+    grams = IndexStore(spark, idx).read("grams")
     assert grams.count() == grams.select("h").distinct().count()
     assert _probe(spark, idx, _df(spark, _BATCH)) == before
 
