@@ -5,11 +5,18 @@ Spark jobs its construction runs eagerly, and summarize the plan
 properties that matter at 100 TB via term_spark.plans.audit (the plan
 itself is never executed).
 
-Run: python scripts/plan_audit.py   (writes /root/repo/PLANS.md)
+Run: python scripts/plan_audit.py [--sf-dir DIR] [--out PATH]
+
+It writes PLANS.md at the root of the checkout that holds this script
+(``--out`` elsewhere) and prints the total build jobs and the number
+of queries whose build starts no job.  The committed PLANS.md is the
+sf0.001 audit; ``--sf-dir`` audits another scale, e.g. to count build
+jobs at sf0.01 with ``--out`` pointing outside the checkout.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -19,7 +26,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 HEADER = """# PLANS — physical-plan audit of all contract queries
 
-Generated by `python scripts/plan_audit.py` at sf0.001 (the final
+Generated by `python scripts/plan_audit.py` at {sf} (the final
 plans are audited, not executed). Columns: Spark `jobs` started while
 the query's DataFrame is built (eager build work, counted as new
 ungrouped job ids in `statusTracker`), parquet scans and their
@@ -47,6 +54,12 @@ Reading the flags:
 
 
 def main() -> None:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--sf-dir", default=SF_DIR)
+    ap.add_argument("--out", default=os.path.join(root, "PLANS.md"))
+    args = ap.parse_args()
+
     from term_spark.plans.audit import audit_plan
     from term_spark.queries import QUERIES
     from term_spark.session import get_spark
@@ -55,20 +68,22 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     tracker = spark.sparkContext.statusTracker()
-    out = [HEADER,
+    out = [HEADER.format(sf=os.path.basename(args.sf_dir.rstrip("/"))),
            "| query | jobs | scans | cols/scan | pushed | exch | bcast | smj |"
            " shj | top-k | win | unpart-win | flags |",
            "|---|---|---|---|---|---|---|---|---|---|---|---|---|"]
-    n = 0
+    n = total = lazy = 0
     for name in sorted(QUERIES):
         before = set(tracker.getJobIdsForGroup())
         try:
-            df = QUERIES[name](spark, SF_DIR)
+            df = QUERIES[name](spark, args.sf_dir)
             jobs = len(set(tracker.getJobIdsForGroup()) - before)
             a = audit_plan(df)
         except Exception as exc:  # pragma: no cover
             out.append(f"| {name} | ERROR: {exc} |" + " |" * 11)
             continue
+        total += jobs
+        lazy += jobs == 0
         flags = " ".join(x for x in (
             "EXPAND(rollup)" if a["expand"] else "",
             "CARTESIAN" if a["cartesian"] else "",
@@ -81,11 +96,10 @@ def main() -> None:
             f" {a['unpartitioned_windows']} | {flags} |")
         n += 1
     out.append("")
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "PLANS.md")
-    with open(path, "w") as f:
+    with open(args.out, "w") as f:
         f.write("\n".join(out))
-    print(f"wrote {path} ({n} queries)")
+    print(f"wrote {args.out} ({n} queries)")
+    print(f"build jobs: {total} total, {lazy} queries with none")
     spark.stop()
 
 

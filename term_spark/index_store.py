@@ -29,10 +29,13 @@ the existing version name (checked before the rename, since the local
 filesystem's rename replaces files); a commit's GC may delete another
 writer's uncommitted shard, and a probe racing a commit may fail.
 
-Reads pass one directory per committed shard to ``spark.read.parquet``,
-not file lists: Spark lists more than 32 paths with an extra parallel
-listing job, so only an index with more than 32 uncompacted appends
-pays that job.
+Reads pass one directory per committed shard to
+``sources.scan_parquet``, not file lists: the schema comes from one
+driver-side footer read, so a read starts no Spark job, except that
+Spark lists more than 32 paths with an extra parallel listing job
+(only an index with more than 32 uncompacted appends pays it) and a
+``partition_by`` table keeps Spark's schema inference, which types
+its partition column.
 """
 
 from __future__ import annotations
@@ -44,6 +47,8 @@ from typing import Dict, List, Mapping, Optional
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
+
+from .sources import scan_parquet
 
 FORMAT = 1
 _MANIFEST = "_manifest"
@@ -114,7 +119,7 @@ class IndexStore:
         return [f"{self.root}/{s}/{table}" for s in self.shards]
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(*self.paths(table))
+        return scan_parquet(self.spark, *self.paths(table))
 
     # ---- writes -------------------------------------------------------
 

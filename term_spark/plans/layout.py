@@ -47,6 +47,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from ..functions.security import validate_identifiers
+from ..sources import scan_parquet
 
 
 def zorder_key(cols: Sequence[str],
@@ -140,7 +141,7 @@ def file_pruning_stats(spark, path: str, cols: Sequence[str]) -> DataFrame:
     you can count exactly how many files overlap it.  One scan of the
     audited columns only."""
     cols = list(validate_identifiers(cols))
-    df = spark.read.parquet(path)
+    df = scan_parquet(spark, path)
     return (df.groupBy(F.input_file_name().alias("file"))
             .agg(*[f for c in cols
                    for f in (F.min(c).alias(f"min_{c}"),

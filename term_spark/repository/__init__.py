@@ -29,6 +29,7 @@ from dataclasses import dataclass
 from typing import Dict, List, Mapping, Optional
 
 from ..analyzers.base import MetricValue
+from ..sources import scan_parquet
 
 
 @dataclass(frozen=True)
@@ -211,7 +212,7 @@ class ParquetRepository(MetricsRepository):
         parity): spark.sql over the returned temp view. Committed files
         only: a directory read also serves a crashed compaction's .tmp."""
         files = self._files()
-        df = (spark.read.parquet(*files) if files
+        df = (scan_parquet(spark, *files) if files
               else spark.createDataFrame([], _SCHEMA))
         df.createOrReplaceTempView("metrics_history")
         return df

@@ -14,15 +14,24 @@ Nanosecond-timestamp note: the driver's testdata parquet carries
 TIMESTAMP(NANOS) columns, which Spark refuses by default. read_parquet
 reads them via ``spark.sql.legacy.parquet.nanosAsLong`` and rebuilds
 proper timestamps (microsecond precision).
+
+Parquet schemas come from one driver-side footer read: every engine
+Parquet read (read_parquet, IndexStore.read, ParquetRepository's SQL
+view, the layout audit) goes through scan_parquet, which resolves the
+schema with Spark's own footer code and passes it to the reader, so no
+read starts Spark's schema-inference job.
 """
 
 from __future__ import annotations
 
 import glob as _glob
+import json
+import posixpath
 from typing import Dict, List, Optional, Sequence
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -88,6 +97,88 @@ def _parquet_footer_info(path: str):
     return nanos, row_groups, rows
 
 
+_SUMMARIES = ("_common_metadata", "_metadata")
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file listing keeps ``name``
+    (``HadoopFSUtils.shouldFilterOutPathName``)."""
+    hidden = ((name.startswith("_") and "=" not in name)
+              or name.startswith(".") or name.endswith("._COPYING_"))
+    return not hidden or name.startswith(_SUMMARIES)
+
+
+def parquet_schema(spark: SparkSession,
+                   paths: Sequence[str]) -> Optional[T.StructType]:
+    """The schema ``spark.read.parquet(*paths)`` infers, resolved on the
+    driver; None where only Spark's inference can tell.
+
+    Spark's inference (``ParquetUtils.inferSchema`` with mergeSchema
+    off) reads one footer, ``_common_metadata``, else ``_metadata``,
+    else the first data file in path order, but reads it inside a
+    Spark job.  This reads the same footer in-process with Spark's own
+    code (``readParquetFootersInParallel`` + ``readSchema``: the same
+    converter, session conf and preference for Spark's row metadata).
+    A nested layout (a partitioned table, whose partition columns Spark
+    types from directory names), a missing path, no data file, or a
+    footer the driver cannot read returns None, so the caller falls
+    back to Spark's inference and Spark raises its own errors.
+    """
+    jvm = spark.sparkContext._jvm
+    session = spark._jsparkSession
+    try:
+        conf = session.sessionState().newHadoopConf()
+        leaves = {}
+        for p in paths:
+            path = jvm.org.apache.hadoop.fs.Path(p)
+            fs = path.getFileSystem(conf)
+            matched = fs.globStatus(path)
+            if not matched:
+                return None
+            for st in matched:
+                for leaf in (fs.listStatus(st.getPath()) if st.isDirectory()
+                             else [st]):
+                    full = leaf.getPath().toString()
+                    if not _listed(posixpath.basename(full)):
+                        continue
+                    if leaf.isDirectory():
+                        return None
+                    leaves[full] = leaf
+        names = sorted(leaves)
+        summaries = [n for s in _SUMMARIES for n in names
+                     if posixpath.basename(n) == s]
+        data = [n for n in names if posixpath.basename(n) not in _SUMMARIES]
+        if not data:
+            return None
+        touch = leaves[(summaries or data)[0]]
+        parquet = getattr(getattr(
+            jvm.org.apache.spark.sql.execution.datasources.parquet,
+            "ParquetFileFormat$"), "MODULE$")
+        files = jvm.scala.jdk.javaapi.CollectionConverters.asScala(
+            jvm.java.util.Collections.singletonList(touch)).toList()
+        schema = parquet.readSchema(
+            parquet.readParquetFootersInParallel(conf, files, False), session)
+    except Py4JError:
+        return None
+    if schema.isEmpty():
+        return None
+    return T.StructType.fromJson(json.loads(schema.get().json()))
+
+
+def scan_parquet(spark: SparkSession, *paths: str, **options) -> DataFrame:
+    """``spark.read.options(**options).parquet(*paths)`` with the schema
+    from ``parquet_schema``: no schema-inference job.  Reads with
+    options (``mergeSchema``, path filters) or a session-wide
+    ``spark.sql.parquet.mergeSchema`` keep Spark's inference."""
+    reader = spark.read.options(**options)
+    if not options and spark.conf.get(
+            "spark.sql.parquet.mergeSchema", "false").lower() != "true":
+        schema = parquet_schema(spark, paths)
+        if schema is not None:
+            reader = reader.schema(schema)
+    return reader.parquet(*paths)
+
+
 def read_parquet(spark: SparkSession, path: str, spread: bool = False,
                  **options) -> DataFrame:
     """Read parquet with nanos-timestamp handling and scan-width repair.
@@ -110,7 +201,7 @@ def read_parquet(spark: SparkSession, path: str, spread: bool = False,
     nanos, row_groups, rows = _parquet_footer_info(path)
     if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.options(**options).parquet(path)
+    df = scan_parquet(spark, path, **options)
     cores = spark.sparkContext.defaultParallelism
     if spread is None:
         spread = (row_groups is not None and row_groups < max(2, cores // 2)

@@ -398,3 +398,18 @@ def test_explain_renders_the_plain_group_run_executes(spark, tpch,
     assert len(plain) == 1
     text = suite.explain(spark, tpch["lineitem"])
     assert re.findall(r"\[plain, (\d+) metrics", text) == [str(len(plain[0]))]
+
+
+@pytest.mark.parametrize("name", ["approx_distinct_orderkey",
+                                  "national_market_share"])
+def test_query_build_starts_no_spark_job(spark, name):
+    """A query that only reads and transforms tables is lazy: its
+    Parquet reads resolve their schemas on the driver, so building it
+    starts no Spark job (PLANS.md `jobs` = 0)."""
+    from conftest import SF_DIR
+    from term_spark.queries import QUERIES
+    sc = spark.sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    before = set(sc.statusTracker().getJobIdsForGroup(group))
+    QUERIES[name](spark, SF_DIR)
+    assert set(sc.statusTracker().getJobIdsForGroup(group)) == before
