@@ -20,6 +20,7 @@ import pyspark.sql.functions as F
 
 from ..functions.security import validate_identifiers
 from ..operators.grouped import GroupingConfig
+from ..plans.executor import merge_exprs
 from .base import Analyzer, MetricValue
 
 
@@ -37,10 +38,7 @@ class GroupedAnalysisRunner:
 
     def run(self, df) -> Dict[tuple, Dict[str, MetricValue]]:
         """Returns {group_key_tuple: {metric_key: MetricValue}}."""
-        merged = {}
-        for an in self.analyzers:
-            for alias, col in an.state_exprs().items():
-                merged.setdefault(alias, col)
+        merged = merge_exprs(an.state_exprs() for an in self.analyzers)
         g = df.groupBy(*self.group_by).agg(
             F.count(F.lit(1)).alias("__group_rows"),
             *[c.alias(a) for a, c in merged.items()])
@@ -69,9 +67,6 @@ class GroupedAnalysisRunner:
     def run_df(self, df):
         """Distributed variant: per-group metric DataFrame (never
         collected) for pipelines that feed grouped metrics onward."""
-        merged = {}
-        for an in self.analyzers:
-            for alias, col in an.state_exprs().items():
-                merged.setdefault(alias, col)
+        merged = merge_exprs(an.state_exprs() for an in self.analyzers)
         return df.groupBy(*self.group_by).agg(
             *[c.alias(a) for a, c in merged.items()])

@@ -5,10 +5,10 @@ analyzers, run, collect metrics into an AnalyzerContext keyed
 "{analyzer}.{column}"; per-analyzer errors recorded with
 continue_on_error (default true). The reference runs analyzers
 sequentially (one SQL each — grouping is an acknowledged TODO,
-runner.rs:159); here all analyzers' state expressions fuse into at most
-TWO ``df.agg`` jobs (SURVEY §3 entry-2 mapping; the suite executor's
-distinct/sketch split keeps Expand plans away from sketch buffers), so
-N analyzers cost one scan, two when sketches mix with DISTINCT.
+runner.rs:159); here all analyzers' state expressions share the suite
+executor's fused aggregation jobs (``plans.executor.fused_aggs``): one
+plain group, one per DISTINCT alias, and one sketch group, so N
+analyzers cost one scan per fusion class, not one each.
 
 IncrementalAnalysisRunner — parity with analyzers/incremental/
 runner.rs:165-230 + state_store.rs: compute per-partition states,
@@ -21,8 +21,10 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Dict, List, Mapping, Optional
 
+from ..plans.executor import fused_aggs, merge_exprs
 from .base import Analyzer, AnalyzerState, MetricValue
 
 
@@ -38,19 +40,22 @@ class AnalyzerContext:
         return self.metrics.get(key)
 
 
-def _collect_fused(df, merged) -> Dict[str, object]:
-    """Evaluate merged state expressions under the suite executor's
-    fusion policy (at most two jobs: {plain+distinct} and {sketches}) —
-    mixing DISTINCT aggregates with sketch aggregates in one ``df.agg``
-    plans an Expand that drags sketch buffers through a sort (~100×;
-    see plans/executor.py:150)."""
-    from ..plans.executor import SuiteRunner
-
+def _states(analyzers, df, spark):
+    """``[(analyzer, state thunk)]``, fused analyzers first. Their state
+    expressions run as the suite executor's fused jobs; direct-state
+    analyzers (MG frequency sketch) can't express their data-dependent
+    state as agg Columns and run their own job (the reference's
+    compute_state_from_data path)."""
+    fused, direct = [], []
+    for an in analyzers:
+        if spark is not None and hasattr(an, "bind_spark"):
+            an.bind_spark(spark)
+        (direct if hasattr(an, "compute_state_from_df") else fused).append(an)
     values: Dict[str, object] = {}
-    for group in SuiteRunner._fusion_groups(merged):
-        row = df.agg(*[c.alias(a) for a, c in group.items()]).collect()[0]
-        values.update(row.asDict())
-    return values
+    for _, _, build in fused_aggs(df, merge_exprs(an.state_exprs() for an in fused)):
+        values.update(build().collect()[0].asDict())
+    return ([(an, partial(an.state_from_row, values)) for an in fused]
+            + [(an, partial(an.compute_state_from_df, df)) for an in direct])
 
 
 class AnalysisRunner:
@@ -64,35 +69,9 @@ class AnalysisRunner:
 
     def run(self, df, spark=None) -> AnalyzerContext:
         ctx = AnalyzerContext()
-        merged = {}
-        fused, direct = [], []
-        for an in self.analyzers:
-            if spark is not None and hasattr(an, "bind_spark"):
-                an.bind_spark(spark)
-            # direct-state analyzers (MG frequency sketch) can't express
-            # their data-dependent state as agg Columns — they run their
-            # own job (the reference's compute_state_from_data path)
-            if hasattr(an, "compute_state_from_df"):
-                direct.append(an)
-                continue
-            fused.append(an)
-            for alias, col in an.state_exprs().items():
-                merged.setdefault(alias, col)
-        if not merged and not direct:
-            return ctx
-        values = _collect_fused(df, merged) if merged else {}
-        for an in fused:
+        for an, state in _states(self.analyzers, df, spark):
             try:
-                state = an.state_from_row(values)
-                ctx.store_metric(an.metric_key(), an.metric_from_state(state))
-            except Exception as exc:
-                if not self.continue_on_error:
-                    raise
-                ctx.errors[an.metric_key()] = str(exc)
-        for an in direct:
-            try:
-                state = an.compute_state_from_df(df)
-                ctx.store_metric(an.metric_key(), an.metric_from_state(state))
+                ctx.store_metric(an.metric_key(), an.metric_from_state(state()))
             except Exception as exc:
                 if not self.continue_on_error:
                     raise
@@ -173,23 +152,9 @@ class IncrementalAnalysisRunner:
         return self
 
     def analyze_partition(self, df, partition: str, spark=None) -> None:
-        merged = {}
-        fused, direct = [], []
-        for an in self.analyzers:
-            if spark is not None and hasattr(an, "bind_spark"):
-                an.bind_spark(spark)
-            if hasattr(an, "compute_state_from_df"):
-                direct.append(an)
-                continue
-            fused.append(an)
-            for alias, col in an.state_exprs().items():
-                merged.setdefault(alias, col)
-        values = _collect_fused(df, merged) if merged else {}
-        states = {an.metric_key(): an.state_from_row(values).to_json()
-                  for an in fused}
-        states.update({an.metric_key(): an.compute_state_from_df(df).to_json()
-                       for an in direct})
-        self.store.save(partition, states)
+        self.store.save(partition, {
+            an.metric_key(): state().to_json()
+            for an, state in _states(self.analyzers, df, spark)})
 
     def aggregate_partitions(self, partitions: Optional[List[str]] = None,
                              spark=None) -> AnalyzerContext:

@@ -26,6 +26,11 @@ if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql import Column, DataFrame, SparkSession
 
 
+#: alias of the row count every scalar job carries: an empty table
+#: skips its constraints instead of judging NULL aggregates
+SIZE_ALIAS = "__size"
+
+
 class EngineContext:
     """Explicit table registry handed to self-executing constraints."""
 
@@ -108,9 +113,9 @@ class Constraint(ABC):
                 f"{type(self).__name__} implements neither protocol")
         import pyspark.sql.functions as F
 
-        row = df.agg(F.count(F.lit(1)).alias("__size"),
+        row = df.agg(F.count(F.lit(1)).alias(SIZE_ALIAS),
                      *[c.alias(a) for a, c in exprs.items()]).collect()[0]
-        if row["__size"] == 0:
+        if row[SIZE_ALIAS] == 0:
             return self._finish(ConstraintResult.skipped())
         return self._finish(self.result_from_metrics(row.asDict()))
 

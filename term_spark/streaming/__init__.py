@@ -23,8 +23,8 @@ from ..session import local_df
 
 class StreamingSuiteRunner:
     """foreachBatch adapter: validates every micro-batch with the batch
-    engine (one fused agg per batch — the per-batch cost is the same
-    1-2 jobs as the batch path)."""
+    engine — the per-batch cost is the batch path's fused jobs: one
+    plain group, one per DISTINCT alias, and one sketch group."""
 
     def __init__(self, suite, repository=None, on_result: Optional[Callable] = None,
                  fail_on_error: bool = False):

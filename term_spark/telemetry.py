@@ -14,9 +14,9 @@ core/debug_context.rs — DebugLevel tiers (:57), builder toggles
 queries, and constraint-type-specific suggestions (:320-360).
 
 Threading note: the suite executor evaluates independent jobs from a
-thread pool (plans/executor.py:107), so all mutation is lock-guarded —
-the reference wraps its collector in Arc<Mutex<…>> for the same reason
-(debug_context.rs:75).
+thread pool (``SuiteRunner.run`` in plans/executor.py), so all mutation
+is lock-guarded — the reference wraps its collector in Arc<Mutex<…>>
+for the same reason (debug_context.rs:75).
 """
 
 from __future__ import annotations

@@ -36,22 +36,19 @@ def test_runner_fusion_splits_distinct_from_sketch(spark, nulls_df):
     each DISTINCT alias gets its OWN singleton group — two different
     COUNT(DISTINCT) in one agg would themselves force the Expand plan."""
     from term_spark.analyzers.base import DistinctnessAnalyzer
-    from term_spark.plans.executor import SuiteRunner
+    from term_spark.plans.executor import fused_aggs, merge_exprs
 
     runner = (AnalysisRunner()
               .add(DistinctnessAnalyzer("name"))
               .add(DistinctnessAnalyzer("score"))
               .add(ApproxCountDistinctAnalyzer("age")))
-    merged = {}
-    for an in runner.analyzers:
-        for a, c in an.state_exprs().items():
-            merged.setdefault(a, c)
-    groups = SuiteRunner._fusion_groups(merged)
+    merged = merge_exprs(an.state_exprs() for an in runner.analyzers)
+    groups = [aliases for _, aliases, _ in fused_aggs(nulls_df, merged)]
     assert len(groups) == 4  # {plain}, {distinct name}, {distinct score}, {sketches}
     plain, d1, d2, sketch = groups
     for d in (d1, d2):
-        assert len(d) == 1 and all(a.startswith("md_") for a in d), d.keys()
-    assert all(a.startswith("mk_") for a in sketch), sketch.keys()
+        assert len(d) == 1 and all(a.startswith("md_") for a in d), d
+    assert all(a.startswith("mk_") for a in sketch), sketch
     assert not any(a.startswith(("md_", "mk_")) for a in plain)
     # and the split runner still produces correct metrics
     ctx = runner.run(nulls_df, spark=spark)

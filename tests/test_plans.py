@@ -7,11 +7,13 @@ Expand+sort degenerate plans, salting utilities.
 
 import contextlib
 import io
+import re
 
 import pytest
 
 import pyspark.sql.functions as F
-from term_spark import Assertion, Check, Level, ValidationSuite
+from term_spark import Assertion, Check, Level, Status, ValidationSuite
+from term_spark.telemetry import DebugContext, DebugLevel
 
 
 def plan_of(df, mode="formatted") -> str:
@@ -374,30 +376,79 @@ def test_partitioned_write_prunes_partitions(spark, tpch, tmp_path):
     assert n_parts == 1
 
 
-def test_explain_renders_the_plain_group_run_executes(spark, tpch,
-                                                      monkeypatch):
+_FUSED_TITLE = r"(\S+) \[(\w+), (\d+) metrics(?:, where (.*))?\]"
+_JOB_ALIAS = re.compile(r"\b(__size|m[sdk]_[0-9a-f]{12})\b")
+
+
+def _ran_and_rendered(spark, suite, data):
+    """``(result, ran, rendered)``: every fused job as ``(table, where,
+    label, aliases)``, once as run executes it (its debug query log)
+    and once as explain renders it (section header + the plan's
+    output aliases)."""
+    dbg = DebugContext(DebugLevel.DETAILED)
+    result = suite.run(spark, data, debug=dbg)
+    ran = []
+    for q in dbg.queries:
+        m = re.fullmatch("fused agg on " + _FUSED_TITLE + r": (.*)", q.query)
+        if m:
+            table, label, n, where, aliases = m.groups()
+            aliases = tuple(sorted(aliases.split(", ")))
+            assert int(n) == len(aliases), q.query
+            ran.append((table, where, label, aliases))
+    rendered = []
+    for section in suite.explain(spark, data).split("== table: ")[1:]:
+        header, body = section.split("\n", 1)
+        table, label, n, where = re.fullmatch(_FUSED_TITLE + " ==", header).groups()
+        aliases = tuple(sorted(set(_JOB_ALIAS.findall(body))))
+        assert int(n) == len(aliases), section
+        rendered.append((table, where, label, aliases))
+    return result, sorted(ran, key=str), sorted(rendered, key=str)
+
+
+def test_explain_renders_the_plain_group_run_executes(spark, tpch):
     """A suite whose scalar constraints are all distinct-class still
     runs a plain group (the row count rides it); explain must render
     that same group, metric for metric."""
-    import re
-
-    from term_spark.plans.executor import SuiteRunner
     suite = (ValidationSuite.builder("distinct_only")
              .with_check(Check("c", Level.ERROR).is_unique("l_orderkey")))
-    ran = []
-    fusion_groups = SuiteRunner._fusion_groups
+    _, ran, rendered = _ran_and_rendered(spark, suite, tpch["lineitem"])
+    assert [job[2] for job in ran].count("plain") == 1
+    assert rendered == ran
 
-    def spy(merged):
-        groups = fusion_groups(merged)
-        ran.extend(groups)
-        return groups
 
-    monkeypatch.setattr(SuiteRunner, "_fusion_groups", staticmethod(spy))
-    suite.run(spark, tpch["lineitem"])
-    plain = [g for g in ran if not next(iter(g)).startswith(("md_", "mk_"))]
-    assert len(plain) == 1
-    text = suite.explain(spark, tpch["lineitem"])
-    assert re.findall(r"\[plain, (\d+) metrics", text) == [str(len(plain[0]))]
+def test_explain_renders_exactly_the_jobs_run_executes(spark, tpch):
+    """Two tables, a row scope, every fusion class (plain, two-stage
+    exact DISTINCT, sketch), an own-job constraint and one whose
+    expression fails to build: explain renders the jobs run collects,
+    table, scope, class and aliases alike, and nothing else."""
+    suite = (ValidationSuite.builder("explain_equals_run").on_table("lineitem")
+             .with_check(Check("li", Level.ERROR)
+                         .is_complete("l_quantity")
+                         .has_min("l_discount", Assertion.ge(0))
+                         .is_unique("l_orderkey")
+                         .has_approx_count_distinct("l_partkey", Assertion.gt(1))
+                         .has_entropy("l_returnflag", Assertion.gt(0))
+                         .has_custom_aggregate("l_quantity + 1", Assertion.gt(0)))
+             .with_check(Check("big", Level.WARNING, where="l_quantity > 10")
+                         .is_complete("l_discount")
+                         .uniqueness(["l_orderkey", "l_linenumber"], 0.5))
+             .with_check(Check("orders", Level.ERROR, table="orders")
+                         .is_complete("o_orderkey")
+                         .has_approx_quantile("o_totalprice", 0.5,
+                                              Assertion.gt(0))))
+    data = {"lineitem": tpch["lineitem"], "orders": tpch["orders"]}
+    result, ran, rendered = _ran_and_rendered(spark, suite, data)
+    assert rendered == ran
+    assert {(t, w, label) for t, w, label, _ in ran} == {
+        ("lineitem", None, "plain"), ("lineitem", None, "distinct"),
+        ("lineitem", None, "sketch"), ("lineitem", "l_quantity > 10", "plain"),
+        ("lineitem", "l_quantity > 10", "distinct"),
+        ("orders", None, "plain"), ("orders", None, "sketch")}
+    status = {o.result.name: o.result.status for o in result.report.outcomes}
+    assert status["custom_aggregate"] == Status.ERROR
+    assert status["entropy"] == Status.SUCCESS
+    # fused jobs plus the entropy constraint's own job
+    assert result.report.num_spark_jobs == len(ran) + 1
 
 
 @pytest.mark.parametrize("name", ["approx_distinct_orderkey",

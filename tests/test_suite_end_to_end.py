@@ -123,3 +123,25 @@ def test_run_and_store(spark, nulls_df):
     suite.run_and_store(spark, nulls_df, repo, timestamp=1.0, env="test")
     suite.run_and_store(spark, nulls_df, repo, timestamp=2.0, env="test")
     assert repo.series("completeness.name", tags={"env": "test"}) == [0.8, 0.8]
+
+
+def test_suite_reused_on_another_schema_matches_a_fresh_suite(spark):
+    """A constraint's aggregate depends on its column's type (a date
+    column's min aggregates epoch seconds), so one suite object run on
+    a numeric table and then on a date table answers the date table as
+    a fresh suite does."""
+    import datetime
+
+    def suite():
+        return ValidationSuite.builder("reuse").with_check(
+            Check("c", Level.ERROR).has_min("v", Assertion.ge(0)))
+
+    numbers = spark.createDataFrame([(5,), (7,)], "v long")
+    dates = spark.createDataFrame(
+        [(datetime.date(2024, 1, 1),), (datetime.date(2024, 3, 1),)], "v date")
+    reused = suite()
+    assert reused.run(spark, numbers).metrics["min.v"] == 5
+    again, fresh = reused.run(spark, dates), suite().run(spark, dates)
+    assert fresh.metrics["min.v"] == 1704067200.0
+    assert [(o.result.status, o.result.metric) for o in again.report.outcomes] \
+        == [(o.result.status, o.result.metric) for o in fresh.report.outcomes]

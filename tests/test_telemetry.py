@@ -120,6 +120,26 @@ def test_suite_run_with_debug(spark):
     assert rep.failed_constraints[0].related_queries
 
 
+@pytest.mark.parametrize("add_bad", [
+    # the fused job fails analysis; its members rerun as own jobs
+    lambda c: c.is_complete("does_not_exist"),
+    # the constraint's expression fails to build (row-level, not an agg)
+    lambda c: c.has_custom_aggregate("l_quantity + 1", Assertion.gt(0)),
+], ids=["fused_job_fails", "expression_build_fails"])
+def test_suite_run_debug_records_every_outcome(spark, add_bad):
+    df = spark.createDataFrame([(1, 1.0), (2, 2.0)], "id long, l_quantity double")
+    suite = ValidationSuite.builder("dbg_errors").with_check(
+        add_bad(Check("c", Level.ERROR).has_size(Assertion.eq(2))))
+    d = DebugContext(DebugLevel.DETAILED)
+    result = suite.run(spark, df, debug=d)
+    assert sorted(o.result.status.value for o in result.report.outcomes) == \
+        ["error", "success"]
+    assert d.debug_info().summary.total_constraints == 2
+    rep = d.error_report()
+    assert rep.total_failures == 1
+    assert rep.failed_constraints[0].name != "size"
+
+
 def test_suite_run_debug_none_is_default(spark):
     df = spark.createDataFrame([(1,)], "id long")
     suite = (ValidationSuite.builder("nodbg")
