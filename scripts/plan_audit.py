@@ -33,7 +33,10 @@ ungrouped job ids in `statusTracker`), parquet scans and their
 projected column counts (pruning), scan-pushed filters, exchanges
 (shuffles), join strategies (broadcast-hash, sort-merge `smj` and
 shuffled-hash `shj` counted apart), bounded top-k, window count,
-windows without PARTITION BY, and flags.
+windows without PARTITION BY, scans of a pickled Python RDD
+(`py_rdd`: driver rows sent through createDataFrame's row path, whose
+evaluation forks a Python worker; a localCheckpoint scan is not one),
+and flags.
 
 Reading the flags:
 - `EXPAND(rollup)` on rollup_pricing is ANSI ROLLUP's grouping-sets
@@ -70,8 +73,8 @@ def main() -> None:
     tracker = spark.sparkContext.statusTracker()
     out = [HEADER.format(sf=os.path.basename(args.sf_dir.rstrip("/"))),
            "| query | jobs | scans | cols/scan | pushed | exch | bcast | smj |"
-           " shj | top-k | win | unpart-win | flags |",
-           "|---|---|---|---|---|---|---|---|---|---|---|---|---|"]
+           " shj | top-k | win | unpart-win | py_rdd | flags |",
+           "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|"]
     n = total = lazy = 0
     for name in sorted(QUERIES):
         before = set(tracker.getJobIdsForGroup())
@@ -80,7 +83,7 @@ def main() -> None:
             jobs = len(set(tracker.getJobIdsForGroup()) - before)
             a = audit_plan(df)
         except Exception as exc:  # pragma: no cover
-            out.append(f"| {name} | ERROR: {exc} |" + " |" * 11)
+            out.append(f"| {name} | ERROR: {exc} |" + " |" * 12)
             continue
         total += jobs
         lazy += jobs == 0
@@ -93,7 +96,7 @@ def main() -> None:
             f" {a['pushed_filters']} | {a['exchanges']} |"
             f" {a['bcast_joins']} | {a['smj_joins']} | {a['shj_joins']} |"
             f" {'Y' if a['topk'] else ''} | {a['windows']} |"
-            f" {a['unpartitioned_windows']} | {flags} |")
+            f" {a['unpartitioned_windows']} | {a['py_rdd']} | {flags} |")
         n += 1
     out.append("")
     with open(args.out, "w") as f:

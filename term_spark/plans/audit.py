@@ -14,6 +14,9 @@ import re
 from typing import Dict
 
 
+_PY_RDD_SCAN = r"Arguments: .* at applySchemaToPythonRDD at "
+
+
 def plan_text(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -46,6 +49,11 @@ def audit_plan(df) -> Dict[str, object]:
         # its build side; SMJ can)
         "smj_joins": t.count("SortMergeJoin"),
         "shj_joins": t.count("ShuffledHashJoin"),
+        # scans of a pickled Python RDD (driver rows sent through
+        # createDataFrame's row path): evaluating one forks a Python
+        # worker. A localCheckpoint is also a `Scan ExistingRDD`, but
+        # its RDD is the JVM's own.
+        "py_rdd": len(re.findall(_PY_RDD_SCAN, t)),
         "topk": "TakeOrderedAndProject" in t,
         "expand": "Expand" in t,
         "rollup": "expand(" in ext or "Expand" in t and "spark_grouping_id" in ext,

@@ -32,6 +32,7 @@ from typing import (TYPE_CHECKING, Callable, Dict, Iterable, List, Mapping,
                     NamedTuple, Optional, Tuple)
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JError, Py4JNetworkError
 
 from ..core.constraint import SIZE_ALIAS, Constraint, EngineContext
 from ..core.result import (ConstraintOutcome, ConstraintResult, ValidationReport,
@@ -130,6 +131,30 @@ def fused_aggs(df: "DataFrame", merged: Mapping[str, "Column"],
 Key = Tuple[str, Optional[str]]  # (table, check.where)
 
 
+def _engine_fatal(exc: BaseException, spark: "SparkSession") -> bool:
+    """True for an error no constraint owns, after which no other job
+    can run either: the driver lost the JVM (a py4j network error), the
+    SparkContext is stopped, or the JVM ran out of memory. ``run`` lets
+    these propagate; any other error is attributed to the constraint
+    that raised it."""
+    if isinstance(exc, Py4JNetworkError):
+        return True
+    try:
+        jsc = spark.sparkContext._jsc
+        if jsc is None or jsc.sc().isStopped():
+            return True
+        # Py4JJavaError keeps the Java throwable in ``java_exception``,
+        # PySpark's captured exceptions in ``_origin``
+        java = getattr(exc, "java_exception", None) or getattr(exc, "_origin", None)
+        while java is not None:
+            if java.getClass().getName() == "java.lang.OutOfMemoryError":
+                return True
+            java = java.getCause()
+    except Py4JError:  # the JVM no longer answers
+        return True
+    return False
+
+
 class SuitePlan(NamedTuple):
     """One walk of a suite: what ``run`` executes and ``explain`` renders."""
     scoped: Dict[Key, "DataFrame"]                # the row-scoped table per key
@@ -181,6 +206,8 @@ class SuiteRunner:
                         plan.scoped[key] = df.filter(key[1]) if key[1] else df
                     exprs = _scalar_exprs(con, plan.scoped[key])
                 except Exception as exc:  # bad column etc. — record, continue
+                    if _engine_fatal(exc, ctx.spark):
+                        raise
                     plan.errors.append(
                         (check, con, con._finish(ConstraintResult.error(str(exc)))))
                     continue
@@ -234,6 +261,8 @@ class SuiteRunner:
                 try:
                     res = fut.result()
                 except Exception as exc:
+                    if _engine_fatal(exc, spark):
+                        raise
                     res = con._finish(ConstraintResult.error(str(exc)))
                 report.num_spark_jobs += 1
                 self._record(report, check, con, res, dbg)
@@ -245,7 +274,9 @@ class SuiteRunner:
                 for fut in futures:
                     metrics.update(fut.result().asDict())
                     report.num_spark_jobs += 1
-            except Exception:
+            except Exception as exc:
+                if _engine_fatal(exc, spark):
+                    raise
                 return None
             return metrics
 
@@ -278,6 +309,8 @@ class SuiteRunner:
                         try:
                             res = con._finish(con.result_from_metrics(metrics))
                         except Exception as exc:
+                            if _engine_fatal(exc, spark):
+                                raise
                             res = con._finish(ConstraintResult.error(str(exc)))
                     self._record(report, check, con, res, dbg)
 

@@ -29,6 +29,7 @@ from dataclasses import dataclass
 from typing import Dict, List, Mapping, Optional
 
 from ..analyzers.base import MetricValue
+from ..session import local_df
 from ..sources import scan_parquet
 
 
@@ -213,6 +214,6 @@ class ParquetRepository(MetricsRepository):
         only: a directory read also serves a crashed compaction's .tmp."""
         files = self._files()
         df = (scan_parquet(spark, *files) if files
-              else spark.createDataFrame([], _SCHEMA))
+              else local_df(spark, [], _SCHEMA))
         df.createOrReplaceTempView("metrics_history")
         return df

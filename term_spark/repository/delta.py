@@ -32,6 +32,7 @@ import json
 from typing import Mapping, Optional
 
 from ..analyzers.base import MetricValue
+from ..session import local_df
 from . import _SCHEMA, MetricsRepository, ResultKey, _decode
 
 try:  # import-gated: delta-spark is optional
@@ -72,7 +73,7 @@ class DeltaRepository(MetricsRepository):
         tags = json.dumps(key.tag_dict, sort_keys=True)
         rows = [(float(key.timestamp), tags, name, v.kind,
                  json.dumps(v.value)) for name, v in metrics.items()]
-        (self.spark.createDataFrame(rows, _SCHEMA)
+        (local_df(self.spark, rows, _SCHEMA)
              .write.format("delta").mode("append").save(self.path))
 
     def delete(self, key: ResultKey) -> None:

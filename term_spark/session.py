@@ -8,8 +8,11 @@ pandas-UDF paths, sane shuffle partitioning).
 from __future__ import annotations
 
 import os
+from decimal import MAX_PREC, ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import (ArrayType, DataType, DecimalType, MapType,
+                               StructType, _make_type_verifier)
 
 
 def get_spark(app_name: str = "term_spark", shuffle_partitions: int = None,
@@ -49,19 +52,72 @@ def get_spark(app_name: str = "term_spark", shuffle_partitions: int = None,
 
 
 def local_df(spark: SparkSession, rows, schema):
-    """Driver-local rows as a ONE-partition DataFrame.
+    """Driver-local rows as a one-partition DataFrame backed by a
+    ``LocalRelation``.
 
-    ``spark.createDataFrame(list, schema)`` spreads the rows over
-    ``sc.defaultParallelism`` pickled partitions (32 on this host), and
-    every downstream evaluation — a collect, a broadcast-relation
-    build, a ``coalesce(1)`` metadata write — then pays one
-    Python-worker roundtrip PER partition; a coalesced single task
-    walks all of them sequentially (measured r15: ~6 s to write a
-    16-row centroid table, ~0.35 s with one partition).  Small
-    driver-side tables are tiny by construction, so one partition is
-    always the right shape; row order and values are identical to the
-    default path (same element conversion, same schema machinery —
-    only the slice count changes).
+    Each row is checked and converted by PySpark's own machinery
+    (``_make_type_verifier`` and ``StructType.toInternal``, which
+    ``createDataFrame`` applies to a list), so tuples, dicts, ``Row``s
+    and collected rows map to columns exactly as they do there; a DDL
+    ``schema`` is parsed to a ``StructType`` once per call.  The
+    columns go to the JVM as one ``pyarrow.Table``, which Spark parses
+    into a ``LocalRelation``: evaluation stays in the JVM (a
+    ``LocalTableScan``) and no Python worker is forked, whereas a
+    pickled RDD of rows made ``pyspark.daemon`` start one that imports
+    pyspark again on every evaluation.
+
+    Small driver-side tables are tiny by construction, so the result is
+    ``coalesce(1)``-ed to ONE partition: a written ``local_df`` (the
+    index compactions) stays one file, no downstream evaluation pays a
+    task per slice of a few rows, and a sort over it plans no exchange
+    (one partition satisfies every required distribution).
+
+    Size statistics: a ``LocalRelation`` reports its real size, where
+    the RDD-backed ``LogicalRDD`` reported
+    ``spark.sql.defaultSizeInBytes`` and so never auto-broadcast.  A
+    join against a ``local_df`` may now plan as a broadcast-hash join.
+
+    Decimals are rescaled HALF_UP to their type's scale as the JVM's
+    ``Decimal.set`` does (Arrow refuses a lossy rescale).  Under
+    pyarrow < 17, PySpark's timestamp localisation turns a NULL map
+    whose keys or values are nested or timestamps into an empty map.
     """
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(list(rows), 1), schema)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    verify = _make_type_verifier(struct)
+    rescale = _half_up(struct)
+    internal = []
+    for row in rows:
+        verify(row)
+        row = struct.toInternal(row)
+        internal.append(rescale(row) if rescale else row)
+    arrow = to_arrow_schema(struct, error_on_duplicated_field_names_in_struct=True)
+    columns = list(zip(*internal)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, field.type) for col, field in zip(columns, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, struct).coalesce(1)
+
+
+def _half_up(dt: DataType):
+    """A function rescaling every decimal inside a ``dt`` value, or
+    None when ``dt`` holds no decimal."""
+    if isinstance(dt, DecimalType):
+        quantum, ctx = Decimal(1).scaleb(-dt.scale), Context(prec=MAX_PREC)
+        return lambda v: None if v is None else v.quantize(quantum, ROUND_HALF_UP, ctx)
+    if isinstance(dt, ArrayType):
+        f = _half_up(dt.elementType)
+        return f and (lambda v: None if v is None else [f(x) for x in v])
+    if isinstance(dt, MapType):
+        fk, fv = _half_up(dt.keyType), _half_up(dt.valueType)
+        if fk or fv:
+            fk, fv = fk or (lambda k: k), fv or (lambda v: v)
+            return lambda m: None if m is None else {fk(k): fv(v) for k, v in m.items()}
+    if isinstance(dt, StructType):
+        fs = [_half_up(f.dataType) for f in dt.fields]
+        if any(fs):
+            return lambda t: None if t is None else tuple(
+                f(x) if f else x for f, x in zip(fs, t))
+    return None

@@ -237,18 +237,24 @@ def test_top_customers_uses_bounded_topk_and_broadcast(spark, tpch):
     assert "BroadcastHashJoin" in text or "BroadcastExchange" in text, text
 
 
-def test_all_query_plans_scale_safe(spark):
-    """Whole-catalog gate: no contract query may plan a cartesian
-    product, an Expand outside ROLLUP, or an unpartitioned window on
-    an unbounded row set — the three shapes that do not survive a
-    100x scale-up."""
+@pytest.fixture(scope="module")
+def catalog_audits(spark):
+    """``audit_plan`` of every contract query's final plan at sf0.001,
+    built once for the whole-catalog gates."""
     from term_spark.plans.audit import audit_plan
     from term_spark.queries import QUERIES
 
     sf = "/root/testdata/sf0.001"
+    return {name: audit_plan(QUERIES[name](spark, sf)) for name in sorted(QUERIES)}
+
+
+def test_all_query_plans_scale_safe(catalog_audits):
+    """Whole-catalog gate: no contract query may plan a cartesian
+    product, an Expand outside ROLLUP, or an unpartitioned window on
+    an unbounded row set — the three shapes that do not survive a
+    100x scale-up."""
     failures = []
-    for name in sorted(QUERIES):
-        a = audit_plan(QUERIES[name](spark, sf))
+    for name, a in catalog_audits.items():
         if a["cartesian"]:
             failures.append(f"{name}: CartesianProduct")
         if a["expand"] and name != "rollup_pricing":
@@ -256,6 +262,26 @@ def test_all_query_plans_scale_safe(spark):
         if a["unpartitioned_windows"] and not a["bounded_by_limit"]:
             failures.append(f"{name}: unpartitioned window, unbounded rows")
     assert not failures, failures
+
+
+def test_no_query_plan_scans_a_python_rdd(catalog_audits):
+    """Whole-catalog gate: driver-side rows reach a query's plan as a
+    ``LocalTableScan`` (``session.local_df``), never as a ``Scan
+    ExistingRDD`` of pickled rows, whose evaluation forks a Python
+    worker. A localCheckpoint's ``Scan ExistingRDD`` is JVM-side and
+    allowed."""
+    offenders = {name: a["py_rdd"] for name, a in catalog_audits.items() if a["py_rdd"]}
+    assert not offenders, offenders
+
+
+def test_audit_counts_python_rdd_scans_not_checkpoints(spark):
+    from term_spark.plans.audit import audit_plan
+    from term_spark.session import local_df
+
+    rows = [(1,), (2,)]
+    assert audit_plan(spark.createDataFrame(rows, "a long"))["py_rdd"] == 1
+    assert audit_plan(spark.range(3).localCheckpoint())["py_rdd"] == 0
+    assert audit_plan(local_df(spark, rows, "a long"))["py_rdd"] == 0
 
 
 # like every audit counter, these count operator names in the formatted

@@ -50,12 +50,17 @@ def delta_stub(spark, monkeypatch):
             # pin the exact call sequence the backend promises: a
             # single delta-format APPEND transaction per save
             assert self._fmt == "delta" and self._mode == "append"
+            # driver-local metric rows are one partition: one file per save
+            assert self._df.rdd.getNumPartitions() == 1
             store.setdefault(path, []).extend(
                 tuple(r) for r in self._df.collect())
 
     class FakeDF:
         def __init__(self, df):
             self._df = df
+
+        def coalesce(self, n):
+            return FakeDF(self._df.coalesce(n))
 
         @property
         def write(self):

@@ -9,6 +9,8 @@ against TPC-H customer and produces correct pass/fail + metrics.
 import pytest
 
 from term_spark import Assertion, Check, Level, Status, ValidationSuite
+from term_spark.core.constraint import Constraint
+from term_spark.core.result import ConstraintResult
 
 
 def test_minimum_end_to_end(spark, tpch):
@@ -145,3 +147,98 @@ def test_suite_reused_on_another_schema_matches_a_fresh_suite(spark):
     assert fresh.metrics["min.v"] == 1704067200.0
     assert [(o.result.status, o.result.metric) for o in again.report.outcomes] \
         == [(o.result.status, o.result.metric) for o in fresh.report.outcomes]
+
+
+class _Raises(Constraint):
+    """A scalar constraint (an own-job one for ``step="own_job"``) that
+    raises ``make_exc()`` in one step of a suite run."""
+
+    name = "raises"
+
+    def __init__(self, step, make_exc):
+        self.step, self.make_exc, self.evaluated = step, make_exc, 0
+
+    def scalar_metrics(self, df):
+        if self.step == "plan":
+            raise self.make_exc()
+        if self.step == "own_job":
+            return {}
+        import pyspark.sql.functions as F
+        return {"ms_raises": F.max(F.lit(1))}
+
+    def result_from_metrics(self, metrics):
+        if self.step == "result":
+            raise self.make_exc()
+        return ConstraintResult.success(1.0)
+
+    def evaluate(self, ctx):
+        self.evaluated += 1
+        if self.step == "own_job":
+            raise self.make_exc()
+        return super().evaluate(ctx)
+
+
+def _error_kinds(spark, monkeypatch):
+    from py4j.protocol import Py4JJavaError, Py4JNetworkError
+
+    def network():
+        return Py4JNetworkError("Answer from Java side is empty")
+
+    def oom():
+        jvm = spark.sparkContext._jvm
+        cause = jvm.org.apache.spark.SparkException(
+            "Job aborted", jvm.java.lang.OutOfMemoryError("Java heap space"))
+        return Py4JJavaError("An error occurred while calling o1.collectToPython.\n",
+                             cause)
+
+    def stopped():
+        # what PySpark raises once SparkContext.stop() has run
+        monkeypatch.setattr(spark.sparkContext, "_jsc", None)
+        return AttributeError("'NoneType' object has no attribute 'setCallSite'")
+
+    return {"network": (network, Py4JNetworkError), "oom": (oom, Py4JJavaError),
+            "stopped": (stopped, AttributeError),
+            "constraint": (lambda: ValueError("bad metric"), ValueError)}
+
+
+def _raising_fused_aggs(monkeypatch, make_exc):
+    """Every fused job of the run raises ``make_exc()`` when collected."""
+    from term_spark.plans import executor
+
+    real = executor.fused_aggs
+
+    def fail():
+        raise make_exc()
+
+    monkeypatch.setattr(executor, "fused_aggs", lambda *a, **k: [
+        (label, aliases, fail) for label, aliases, _ in real(*a, **k)])
+
+
+@pytest.mark.parametrize("step", ["plan", "fused_job", "own_job", "result"])
+@pytest.mark.parametrize("kind", ["network", "oom", "stopped", "constraint"])
+def test_engine_fatal_errors_propagate_constraint_errors_stay_owned(
+        spark, monkeypatch, kind, step):
+    """A lost JVM, a stopped SparkContext or a JVM OutOfMemoryError
+    leaves ``SuiteRunner.run`` at once: no ERROR outcome per member, no
+    rerun of a failed fused group's members. Any other error is an
+    ERROR outcome of the constraint that raised it."""
+    df = spark.createDataFrame([(1,), (2,)], "id long")
+    make_exc, exc_type = _error_kinds(spark, monkeypatch)[kind]
+    con = _Raises("scalar" if step == "fused_job" else step, make_exc)
+    suite = ValidationSuite.builder("errors").with_check(
+        Check("c", Level.ERROR).has_size(Assertion.eq(2)).with_constraint(con))
+    if step == "fused_job":
+        _raising_fused_aggs(monkeypatch, make_exc)
+
+    if kind != "constraint":
+        with pytest.raises(exc_type):
+            suite.run(spark, df)
+        assert con.evaluated == (1 if step == "own_job" else 0)
+        return
+    statuses = {o.result.name: o.result.status
+                for o in suite.run(spark, df).report.outcomes}
+    if step == "fused_job":  # both members rerun as their own jobs
+        assert con.evaluated == 1
+        assert statuses == {"size": Status.SUCCESS, "raises": Status.SUCCESS}
+    else:
+        assert statuses == {"size": Status.SUCCESS, "raises": Status.ERROR}
