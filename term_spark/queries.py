@@ -431,11 +431,12 @@ def q_cross_table_sum_orders_lineitem(spark, sf_dir) -> DataFrame:
     # per-group aggregates) shuffles comparable volume but then SORTS
     # both 15M-group sides for the merge join — two extra stages and
     # two spill surfaces that this plan simply doesn't have. Local
-    # sf10 A/B (scripts/ab_cross_table_sum.py) reads parity-to-modest
-    # -gain (both exchange-bound on one node); the win is structural:
-    # fewest stages, zero sorts, one failure/skew domain. Missing
-    # sides fall out as NULL sums -> COALESCE 0, preserving full-outer
-    # semantics exactly.
+    # sf10 A/B (scripts/ab_cross_table_sum.py, deleted; read it with
+    # `git show d5a071c:scripts/ab_cross_table_sum.py`) reads
+    # parity-to-modest-gain (both exchange-bound on one node); the
+    # win is structural: fewest stages, zero sorts, one failure/skew
+    # domain. Missing sides fall out as NULL sums -> COALESCE 0,
+    # preserving full-outer semantics exactly.
     dec = "decimal(25,6)"
     charge = (F.col("l_extendedprice") * (1 - F.col("l_discount")) *
               (1 + F.col("l_tax"))).cast(dec)
@@ -2923,31 +2924,6 @@ ORACLES.update({
 })
 
 
-# ---------------------------------------------------------------------------
-# Driver-window rotation schedule (round 8: data-driven).
-#
-# The driver's correctness gate reads only the FIRST ``DRIVER_WINDOW_SIZE``
-# entries of this dict.  With ~2x as many registered queries as slots, the
-# window must ROTATE so every query keeps a recent driver-green row
-# (rows+schema+hash vs its DuckDB oracle in CORRECTNESS_r{N}.json).
-#
-# ROTATION POLICY: the window is computed, not hand-picked — the 50
-# STALEST oracle-backed queries, never-driver-proven first, then by
-# oldest last-green round, alphabetical tie-break.  With ~2x as many
-# oracle-eligible queries as slots (100 vs 50 as of round 9; the exact
-# count lives in len(QUERIES) - len(NO_ORACLE)) every query re-proves
-# at least every ~2 rounds,
-# which subsumes the family-level freshness bound ("no family's newest
-# driver-green row older than 3 rounds") that
-# tests/test_registry_window.py asserts.  A query that FAILS its driver
-# check keeps its stale last-green and therefore stays in the window
-# next round automatically.
-#
-# After each round: run ``python scripts/update_rotation.py --apply`` to
-# fold the new CORRECTNESS_r{N}.json into LAST_GREEN and bump
-# CURRENT_ROUND — the next window then falls out mechanically.
-# ---------------------------------------------------------------------------
-
 def q_salted_join_sum_orders_customer(spark, sf_dir) -> DataFrame:
     """Pre-flight -> remedy composition, driver-oracle-checkable
     (round 11): ``estimate_join_cardinality`` sketches orders.o_custkey
@@ -2995,8 +2971,6 @@ QUERIES.update(
 ORACLES.update(
     {"salted_join_sum_orders_customer": SQL_SALTED_JOIN_SUM_ORDERS_CUSTOMER})
 
-
-DRIVER_WINDOW_SIZE = 50
 
 def q_funnel_events(spark, sf_dir) -> DataFrame:
     """Ordered view→click→purchase funnel over the events stream
@@ -3093,8 +3067,6 @@ ORACLES.update({
     "funnel_events": SQL_FUNNEL_EVENTS,
     "retention_cohorts_events": SQL_RETENTION_COHORTS_EVENTS,
 })
-
-
 
 
 def q_event_transitions_events(spark, sf_dir) -> DataFrame:
@@ -3978,422 +3950,9 @@ ORACLES.update({
 })
 
 
-#: Queries with no DuckDB oracle by design (the driver can only ever
-#: record a weaker rows-only row for them); they never take a window
-#: slot from an oracle-checkable query.  Empty since round 9:
+#: Queries with no DuckDB oracle by design; tests/test_docs.py requires
+#: every registered query to have an oracle or be named here, and
+#: tests/test_oracle_parity.py checks every oracle.  Empty since round 9:
 #: approx_distinct_orderkey became checkable by returning the exact
 #: count plus a Spark-side within_tolerance attestation.
 NO_ORACLE = frozenset()
-
-#: query -> operator family, for family-level freshness accounting and
-#: the judge's SURVEY §2 cross-check.  Every registered query appears.
-FAMILY = {
-    "size_lineitem": "size",
-    "completeness_customer": "completeness",
-    "grouped_completeness_events": "grouped_completeness",
-    "stats_quantity": "stats",
-    "shape_stats_quantity": "stats",
-    "distinctness_orders": "uniqueness",
-    "unique_value_ratio_custkey": "uniqueness",
-    "compliance_discount": "compliance",
-    "containment_orderstatus": "compliance",
-    "format_orderpriority": "format",
-    "length_customer_name": "length",
-    "datatype_detection": "datatype",
-    "histogram_returnflag": "histogram",
-    "numeric_histogram_quantity": "histogram",
-    "entropy_returnflag": "entropy",
-    "mutual_information_lineitem": "mutual_information",
-    "corr_quantity_price": "correlation",
-    "spearman_quantity_price": "correlation",
-    "corr_matrix_lineitem": "correlation",
-    "quantile_exact_quantity": "quantile",
-    "quantile_sketch_merge_quantity": "quantile_sketch",
-    "median_by_returnflag": "quantile",
-    "profile_customer": "profiler",
-    "approx_distinct_orderkey": "approx_distinct",
-    "fk_orders_customer": "multitable",
-    "fk_violation_examples": "violation_sampling",
-    "join_coverage_lineitem_orders": "multitable",
-    "cross_table_sum_orders_lineitem": "multitable",
-    "join_cardinality_orders_lineitem": "join_cardinality",
-    "salted_join_sum_orders_customer": "join_cardinality",
-    "temporal_ordering_orders_lineitem": "multitable",
-    "dataset_diff_orders": "dataset_diff",
-    "max_time_gap_events": "temporal",
-    "business_hours_events": "temporal",
-    "date_range_orders": "temporal",
-    "sessionize_events": "sessionize",
-    "asof_click_error": "asof_join",
-    "range_join_events": "range_join",
-    "interval_join_events": "range_join",
-    "rolling_daily_events": "rolling_window",
-    "top_customers_revenue": "topk",
-    "top3_customers_per_segment": "topk",
-    "pivot_returnflag_linestatus": "reshape",
-    "unpivot_pricing": "reshape",
-    "rollup_pricing": "grouped_stats",
-    "grouped_stats_mktsegment": "grouped_stats",
-    "pricing_summary": "tpch_suite",
-    "shipping_priority_orders": "tpch_suite",
-    "regional_supplier_volume": "tpch_suite",
-    "returned_item_customers": "tpch_suite",
-    "benford_acctbal": "benford",
-    "drift_psi_quantity": "drift",
-    "drift_ks_quantity": "drift",
-    "drift_chi2_returnflag": "drift",
-    "drift_js_quantity": "drift",
-    "drift_psi_by_returnflag": "drift",
-    "drift_w1_quantity": "drift",
-    "outlier_mad_acctbal": "robust_outliers",
-    "dominant_value_orderstatus": "snapshot_gates",
-    "dedup_exact_docs": "dedup_exact",
-    "fingerprint_docs": "dedup_exact",
-    "dedup_pipeline_docs": "dedup_exact",
-    "ngram_jaccard_pairs": "ngram_jaccard",
-    "jaccard_prefix_pairs_docs": "ngram_jaccard",
-    "ngram_novelty_docs": "ngram_novelty",
-    "minhash_lsh_candidates": "minhash",
-    "minhash_oph_candidates_docs": "minhash",
-    "simhash_docs": "simhash",
-    "simhash_near_pairs": "simhash",
-    "winnow_overlap_docs": "winnowing",
-    "neardup_components": "neardup_graph",
-    "cosine_topk_embeddings": "embedding_cosine",
-    "embedding_neardup_pairs": "embedding_cosine",
-    "ivfpq_recall_embeddings": "ann_pq",
-    "ivf_index_recall_embeddings": "ann_ivf_index",
-    "lsh_neardup_recall_embeddings": "ann_lsh",
-    "semantic_dedup_embeddings": "semantic_dedup",
-    "embedding_centroid_drift": "embedding_drift",
-    "stratified_sample_docs": "curation",
-    "decontaminate_docs": "curation",
-    "source_mixing_docs": "curation",
-    "split_counts_docs": "curation",
-    "token_budget_sample_docs": "curation",
-    "curation_pipeline_docs": "curation",
-    "weighted_exact_sample_docs": "curation",
-    "embedding_quality_embeddings": "embedding_cosine",
-    "dsir_weights_docs": "dsir",
-    "decontamination_report_docs": "decontamination_report",
-    "line_dedup_summary_docs": "line_dedup",
-    "paragraph_dedup_summary_docs": "paragraph_dedup",
-    "substring_dedup_docs": "substring_dedup",
-    "substring_rewrite_docs": "substring_dedup",
-    "incremental_substring_docs": "substring_dedup",
-    "text_tokens": "text",
-    "lang_id": "text",
-    "text_quality": "text",
-    "text_cleaning_docs": "text",
-    "quality_model_docs": "quality_model",
-    "unigram_surprisal_docs": "surprisal",
-    "bigram_surprisal_docs": "surprisal",
-    "readability_docs": "readability",
-    "gopher_rules_docs": "gopher_rules",
-    "script_profile_docs": "script_profile",
-    "tfidf_top_terms_docs": "tfidf",
-    "bm25_topk_docs": "retrieval",
-    "frequent_terms_docs": "heavy_hitters",
-    "mg_heavy_hitters_docs": "heavy_hitters",
-    "mg_grouped_heavy_hitters_docs": "heavy_hitters",
-    "cdc_dedup_docs": "cdc",
-    "cdc_rewrite_docs": "cdc",
-    "incremental_cdc_docs": "cdc",
-    "incremental_neardup_docs": "minhash",
-    "chunk_documents_docs": "chunking",
-    "packing_stats_docs": "chunking",
-    "doc_length_buckets": "chunking",
-    "repetition_docs": "repetition",
-    "corpus_profile_by_lang": "corpus_profile",
-    "row_violations_docs": "row_level",
-    "fd_custkey_orderstatus": "functional_dependency",
-    "key_skew_custkey": "key_skew",
-    "brand_profile_part": "histogram",
-    "supplier_stats_by_nation": "grouped_stats",
-    "source_overlap_docs": "curation",
-    "lexical_diversity_docs": "text",
-    "pii_scan_docs": "pii",
-    "pii_redact_docs": "pii",
-    "domain_counts_docs": "web_curation",
-    "badwords_ratio_docs": "web_curation",
-    "weighted_sample_docs": "curation",
-    "incremental_distinct_docs": "distinct_index",
-    "semantic_contamination_embeddings": "decontamination",
-    "large_volume_customers": "tpch_suite",
-    "small_quantity_revenue": "tpch_suite",
-    "late_shipment_priority": "tpch_suite",
-    "multimodal_probe_docs": "multimodal",
-    "csv_source_roundtrip": "sources",
-    "json_source_roundtrip": "sources",
-    "metrics_repository_roundtrip": "repository",
-    "quantile_sketch_by_returnflag": "quantile_sketch",
-    "knn_label_agreement_embeddings": "label_quality",
-    "knn_label_agreement_lsh_embeddings": "label_quality",
-    "incremental_bm25_docs": "retrieval",
-    "funnel_events": "event_analytics",
-    "retention_cohorts_events": "event_analytics",
-    "event_transitions_events": "event_analytics",
-    "waiting_suppliers": "tpch_suite",
-    "global_sales_opportunity": "tpch_suite",
-    "zorder_key_orders": "layout",
-    "hybrid_rrf_docs": "retrieval",
-    "sq8_recall_embeddings": "embedding_cosine",
-    "incremental_quantile_docs": "quantile_sketch",
-    "quantile_by_source_docs": "quantile_sketch",
-    "incremental_overlap_docs": "source_overlap",
-    "drift_psi_timeline_events": "drift",
-    "forecast_revenue_change": "tpch_suite",
-    "volume_shipping": "tpch_suite",
-    "national_market_share": "tpch_suite",
-    "product_profit_by_nation": "tpch_suite",
-    "customer_order_distribution": "tpch_suite",
-    "promo_revenue": "tpch_suite",
-    "top_supplier_revenue": "tpch_suite",
-    "discounted_revenue_brands": "tpch_suite",
-    "benford_totalprice": "drift",
-    "hybrid_rrf_from_index_docs": "retrieval",
-    "fuzzy_name_pairs_part": "fuzzy",
-    "fuzzy_canonical_part": "fuzzy",
-    "equidepth_price_histogram": "histogram",
-    "equidepth_from_grid_price": "histogram",
-    "equidepth_by_source_grid_docs": "histogram",
-}
-
-# BEGIN GENERATED ROTATION DATA (scripts/update_rotation.py)
-#: Most recent round whose CORRECTNESS_r{N}.json holds a green
-#: (rows_match + schema_match + hash_match) driver row for each query;
-#: None = never driver-proven.  Source artifacts: r01, r02, r03, r04, r05, r06, r07, r08, r09, r10, r11, r12, r13, r14, r15.
-CURRENT_ROUND = 16
-LAST_GREEN = {
-    "late_shipment_priority": 15,
-    "mg_grouped_heavy_hitters_docs": 15,
-    "pii_scan_docs": 15,
-    "quantile_sketch_by_returnflag": 15,
-    "retention_cohorts_events": 15,
-    "salted_join_sum_orders_customer": 15,
-    "shape_stats_quantity": 15,
-    "simhash_near_pairs": 15,
-    "small_quantity_revenue": 15,
-    "source_mixing_docs": 15,
-    "source_overlap_docs": 15,
-    "spearman_quantity_price": 15,
-    "split_counts_docs": 15,
-    "stratified_sample_docs": 15,
-    "supplier_stats_by_nation": 15,
-    "temporal_ordering_orders_lineitem": 15,
-    "text_quality": 15,
-    "text_tokens": 15,
-    "weighted_sample_docs": 15,
-    "distinctness_orders": 15,
-    "dominant_value_orderstatus": 15,
-    "drift_chi2_returnflag": 15,
-    "drift_js_quantity": 15,
-    "drift_ks_quantity": 15,
-    "drift_psi_by_returnflag": 15,
-    "drift_psi_quantity": 15,
-    "drift_psi_timeline_events": 15,
-    "entropy_returnflag": 15,
-    "fk_orders_customer": 15,
-    "format_orderpriority": 15,
-    "global_sales_opportunity": 15,
-    "grouped_completeness_events": 15,
-    "histogram_returnflag": 15,
-    "hybrid_rrf_docs": 15,
-    "incremental_overlap_docs": 15,
-    "incremental_quantile_docs": 15,
-    "join_coverage_lineitem_orders": 15,
-    "length_customer_name": 15,
-    "line_dedup_summary_docs": 15,
-    "median_by_returnflag": 15,
-    "mutual_information_lineitem": 15,
-    "outlier_mad_acctbal": 15,
-    "paragraph_dedup_summary_docs": 15,
-    "profile_customer": 15,
-    "quality_model_docs": 15,
-    "rolling_daily_events": 15,
-    "semantic_dedup_embeddings": 15,
-    "sessionize_events": 15,
-    "size_lineitem": 15,
-    "zorder_key_orders": 15,
-    "completeness_customer": 14,
-    "stats_quantity": 12,
-    "unique_value_ratio_custkey": 14,
-    "compliance_discount": 14,
-    "containment_orderstatus": 13,
-    "datatype_detection": 14,
-    "corr_quantity_price": 14,
-    "cross_table_sum_orders_lineitem": 14,
-    "business_hours_events": 13,
-    "date_range_orders": 13,
-    "max_time_gap_events": 12,
-    "pricing_summary": 12,
-    "dedup_exact_docs": 14,
-    "fingerprint_docs": 13,
-    "lang_id": 14,
-    "ngram_jaccard_pairs": 12,
-    "minhash_lsh_candidates": 12,
-    "simhash_docs": 14,
-    "cosine_topk_embeddings": 14,
-    "embedding_neardup_pairs": 13,
-    "ivfpq_recall_embeddings": 13,
-    "ivf_index_recall_embeddings": 13,
-    "lsh_neardup_recall_embeddings": 13,
-    "neardup_components": 13,
-    "decontaminate_docs": 13,
-    "weighted_exact_sample_docs": 14,
-    "embedding_quality_embeddings": 14,
-    "equidepth_by_source_grid_docs": 14,
-    "repetition_docs": 13,
-    "packing_stats_docs": 12,
-    "dedup_pipeline_docs": 13,
-    "curation_pipeline_docs": 14,
-    "doc_length_buckets": 13,
-    "dsir_weights_docs": 13,
-    "winnow_overlap_docs": 14,
-    "script_profile_docs": 14,
-    "decontamination_report_docs": 13,
-    "tfidf_top_terms_docs": 14,
-    "bm25_topk_docs": 13,
-    "readability_docs": 13,
-    "jaccard_prefix_pairs_docs": 14,
-    "ngram_novelty_docs": 13,
-    "chunk_documents_docs": 13,
-    "frequent_terms_docs": 13,
-    "corpus_profile_by_lang": 13,
-    "minhash_oph_candidates_docs": 14,
-    "row_violations_docs": 14,
-    "embedding_centroid_drift": 13,
-    "gopher_rules_docs": 13,
-    "lexical_diversity_docs": 14,
-    "mg_heavy_hitters_docs": 14,
-    "cdc_dedup_docs": 13,
-    "incremental_neardup_docs": 13,
-    "incremental_substring_docs": 14,
-    "cdc_rewrite_docs": 14,
-    "incremental_cdc_docs": 14,
-    "pii_redact_docs": 14,
-    "domain_counts_docs": 14,
-    "badwords_ratio_docs": 14,
-    "incremental_distinct_docs": 14,
-    "semantic_contamination_embeddings": 14,
-    "multimodal_probe_docs": 14,
-    "csv_source_roundtrip": 14,
-    "json_source_roundtrip": 14,
-    "metrics_repository_roundtrip": 14,
-    "knn_label_agreement_embeddings": 14,
-    "incremental_bm25_docs": 14,
-    "knn_label_agreement_lsh_embeddings": 12,
-    "hybrid_rrf_from_index_docs": 13,
-    "sq8_recall_embeddings": 12,
-    "quantile_by_source_docs": 12,
-    "quantile_exact_quantity": 12,
-    "numeric_histogram_quantity": 14,
-    "approx_distinct_orderkey": 14,
-    "quantile_sketch_merge_quantity": 14,
-    "fk_violation_examples": 13,
-    "grouped_stats_mktsegment": 13,
-    "rollup_pricing": 12,
-    "top_customers_revenue": 14,
-    "asof_click_error": 13,
-    "range_join_events": 12,
-    "interval_join_events": 13,
-    "pivot_returnflag_linestatus": 12,
-    "top3_customers_per_segment": 13,
-    "unpivot_pricing": 14,
-    "benford_acctbal": 14,
-    "drift_w1_quantity": 13,
-    "substring_dedup_docs": 14,
-    "substring_rewrite_docs": 14,
-    "token_budget_sample_docs": 12,
-    "text_cleaning_docs": 12,
-    "unigram_surprisal_docs": 14,
-    "bigram_surprisal_docs": 13,
-    "corr_matrix_lineitem": 13,
-    "fd_custkey_orderstatus": 13,
-    "dataset_diff_orders": 13,
-    "key_skew_custkey": 13,
-    "brand_profile_part": 13,
-    "shipping_priority_orders": 12,
-    "regional_supplier_volume": 12,
-    "returned_item_customers": 12,
-    "large_volume_customers": 14,
-    "join_cardinality_orders_lineitem": 14,
-    "funnel_events": 14,
-    "event_transitions_events": 14,
-    "waiting_suppliers": 12,
-    "forecast_revenue_change": 13,
-    "volume_shipping": 13,
-    "national_market_share": 13,
-    "product_profit_by_nation": 13,
-    "customer_order_distribution": 13,
-    "promo_revenue": 13,
-    "top_supplier_revenue": 13,
-    "discounted_revenue_brands": 13,
-    "benford_totalprice": 13,
-    "fuzzy_name_pairs_part": 13,
-    "fuzzy_canonical_part": 13,
-    "equidepth_price_histogram": 13,
-    "equidepth_from_grid_price": 14,
-}
-# END GENERATED ROTATION DATA
-
-
-def driver_window(size: int = DRIVER_WINDOW_SIZE, lg: dict = None,
-                  current_round: int = None) -> list:
-    """The ``size`` stalest oracle-backed queries: never-driver-proven
-    first, then oldest last-green round, alphabetical tie-break.
-
-    Family-freshness guard (round 13): once the registry outgrew
-    3 × size (161 queries, 50 slots), pure stalest-first could starve
-    a FAMILY — ten new round-13 queries took slots and three families
-    whose only members last proved in r10 fell out on the alphabetical
-    tie-break, aging past the 3-round bound test_registry_window pins.
-    So after the stalest-first fill, any family at the bound with no
-    member in-window swaps its stalest member in, evicting the
-    LEAST-stale window member whose family stays covered (fresh
-    elsewhere or represented twice).  Still fully mechanical — the
-    window remains a pure function of (LAST_GREEN, FAMILY, names).
-
-    ``lg``/``current_round`` default to the module's generated
-    LAST_GREEN/CURRENT_ROUND; scripts/update_rotation.py passes
-    candidate values to preview the window a new artifact set would
-    produce (r13 advice: the script previously maintained a verbatim
-    replica of this rule, which any future edit would silently
-    desynchronize)."""
-    if lg is None:
-        lg = LAST_GREEN
-    if current_round is None:
-        current_round = CURRENT_ROUND
-    eligible = [q for q in QUERIES if q not in NO_ORACLE]
-    order = sorted(
-        eligible,
-        key=lambda q: (lg.get(q) is not None, lg.get(q) or 0, q),
-    )
-    window = order[:size]
-    fam_newest: dict = {}
-    for q in eligible:
-        f = FAMILY[q]
-        fam_newest[f] = max(fam_newest.get(f, 0), lg.get(q) or 0)
-    in_window = set(window)
-    for q in order[size:]:
-        f = FAMILY[q]
-        if fam_newest[f] >= current_round - 2:
-            continue  # family fresh enough without a slot this round
-        if any(FAMILY[w] == f for w in in_window):
-            continue  # family already represented
-        # evict the least-stale window member whose family survives it
-        for victim in reversed(window):
-            vf = FAMILY[victim]
-            if (fam_newest[vf] >= current_round - 2
-                    or sum(1 for w in in_window if FAMILY[w] == vf) > 1):
-                window.remove(victim)
-                in_window.discard(victim)
-                window.append(q)
-                in_window.add(q)
-                break
-    return window
-
-
-_WINDOW = driver_window()
-QUERIES = {k: QUERIES[k] for k in _WINDOW} | {
-    k: v for k, v in QUERIES.items() if k not in _WINDOW}

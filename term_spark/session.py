@@ -12,7 +12,13 @@ from decimal import MAX_PREC, ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import SparkSession
 from pyspark.sql.types import (ArrayType, DataType, DecimalType, MapType,
-                               StructType, _make_type_verifier)
+                               StructType, TimestampNTZType, TimestampType,
+                               _make_type_verifier)
+
+#: The directory holding the ``term_spark`` package, put on the Python
+#: workers' path: a script that only ``sys.path.insert``s the repo makes
+#: the driver find the package, but workers import by PYTHONPATH/cwd.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "term_spark", shuffle_partitions: int = None,
@@ -47,6 +53,7 @@ def get_spark(app_name: str = "term_spark", shuffle_partitions: int = None,
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("TERM_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .getOrCreate()
     )
 
@@ -79,8 +86,9 @@ def local_df(spark: SparkSession, rows, schema):
 
     Decimals are rescaled HALF_UP to their type's scale as the JVM's
     ``Decimal.set`` does (Arrow refuses a lossy rescale).  Under
-    pyarrow < 17, PySpark's timestamp localisation turns a NULL map
-    whose keys or values are nested or timestamps into an empty map.
+    pyarrow < 17, PySpark's timestamp localisation would turn a NULL
+    map whose keys or values are nested or timestamps into an empty
+    map, so such a NULL raises a ``ValueError`` naming its column.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -88,10 +96,19 @@ def local_df(spark: SparkSession, rows, schema):
     struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
     verify = _make_type_verifier(struct)
     rescale = _half_up(struct)
+    null_maps = []
+    if int(pa.__version__.split(".")[0]) < 17:
+        null_maps = [(i, f.name, held) for i, f in enumerate(struct.fields)
+                     if (held := _holds_lossy_null_map(f.dataType))]
     internal = []
     for row in rows:
         verify(row)
         row = struct.toInternal(row)
+        for i, name, held in null_maps:
+            if held(row[i]):
+                raise ValueError(
+                    f"local_df: column {name!r} holds a NULL map that "
+                    f"pyarrow {pa.__version__} (< 17) would read back as {{}}")
         internal.append(rescale(row) if rescale else row)
     arrow = to_arrow_schema(struct, error_on_duplicated_field_names_in_struct=True)
     columns = list(zip(*internal)) or [()] * len(arrow)
@@ -120,4 +137,29 @@ def _half_up(dt: DataType):
         if any(fs):
             return lambda t: None if t is None else tuple(
                 f(x) if f else x for f, x in zip(fs, t))
+    return None
+
+
+def _holds_lossy_null_map(dt: DataType):
+    """A predicate telling whether a ``dt`` value (internal form) holds
+    a NULL map whose keys or values are nested or timestamps, the maps
+    PySpark rebuilds without their null mask under pyarrow < 17; None
+    when ``dt`` holds no such map."""
+    if isinstance(dt, ArrayType):
+        f = _holds_lossy_null_map(dt.elementType)
+        return f and (lambda v: v is not None and any(f(x) for x in v))
+    if isinstance(dt, MapType):
+        fk, fv = _holds_lossy_null_map(dt.keyType), _holds_lossy_null_map(dt.valueType)
+        lossy = any(isinstance(t, (ArrayType, MapType, StructType, TimestampType,
+                                   TimestampNTZType))
+                    for t in (dt.keyType, dt.valueType))
+        if lossy or fk or fv:
+            fk, fv = fk or (lambda k: False), fv or (lambda v: False)
+            return lambda m: lossy if m is None else any(
+                fk(k) or fv(v) for k, v in m.items())
+    if isinstance(dt, StructType):
+        fs = [(i, f) for i, fld in enumerate(dt.fields)
+              if (f := _holds_lossy_null_map(fld.dataType))]
+        if fs:
+            return lambda t: t is not None and any(f(t[i]) for i, f in fs)
     return None

@@ -118,6 +118,31 @@ def test_local_df_rejects_what_create_dataframe_rejects(spark):
         local_df(spark, [Row(b="q", a=1)], "a long, b string")
 
 
+@pytest.mark.parametrize("ddl, value, null", [
+    ("map<string,timestamp>", {"a": dt.datetime(2024, 1, 1, 12)}, None),
+    ("map<string,array<int>>", {"a": [1, None]}, None),
+    ("struct<x:map<string,timestamp>>", ({"a": dt.datetime(2024, 1, 1)},),
+     (None,)),
+])
+def test_local_df_keeps_or_refuses_a_null_map(spark, ddl, value, null):
+    """A NULL map whose keys or values are nested or timestamps: under
+    pyarrow < 17 PySpark's Arrow path rebuilds it as ``{}``, so
+    ``local_df`` refuses it by column name instead of returning a
+    different row than ``createDataFrame``; newer pyarrow keeps it."""
+    import pyarrow as pa
+
+    schema = f"k int, m {ddl}"
+    rows = [(1, value), (2, null)]
+    assert (local_df(spark, rows[:1], schema).collect()
+            == spark.createDataFrame(rows[:1], schema).collect())
+    if int(pa.__version__.split(".")[0]) < 17:
+        with pytest.raises(ValueError, match="'m'"):
+            local_df(spark, rows, schema)
+    else:
+        assert (local_df(spark, rows, schema).collect()
+                == spark.createDataFrame(rows, schema).collect())
+
+
 def test_local_df_plans_a_local_table_scan(spark):
     """The executed plan reads a LocalRelation (``LocalTableScan``); no
     ``Scan ExistingRDD`` of pickled rows, so no Python worker."""

@@ -1,8 +1,9 @@
-"""Local replica of the driver's correctness gate: run every entry in
-queries() on Spark and the matching oracle_sql() in DuckDB on the same
-parquet tables, then compare row count, column names, and (order-
-insensitive) values — exactly, since the query contract guarantees
-determinism (decimal sums, rounded float aggregates).
+"""Registry correctness check: run every entry in queries() on Spark
+and the matching oracle_sql() in DuckDB on the same parquet tables,
+then compare row count, column names, and (order-insensitive) values —
+exactly, since the query contract guarantees determinism (decimal sums,
+rounded float aggregates).  Every oracle-backed query runs on every
+test run.
 
 Both sides go through pandas (Spark ``toPandas``, DuckDB ``fetchdf``)
 because that is how the driver renders values before hashing — a DuckDB

@@ -1,0 +1,34 @@
+"""``get_spark`` session configuration."""
+
+import os
+import subprocess
+import sys
+
+import pytest
+
+import tests.conftest as C
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.mark.skipif(not os.path.isdir(C.SF_DIR), reason="no testdata")
+def test_python_workers_import_term_spark_from_another_directory(tmp_path):
+    """A script that only ``sys.path.insert``s the repo and runs from
+    another directory: the driver finds ``term_spark``, and the Python
+    workers behind a ``mapInArrow`` query must find it too."""
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {REPO!r})\n"
+        "from term_spark.queries import QUERIES\n"
+        "from term_spark.session import get_spark\n"
+        "spark = get_spark('foreign_cwd', shuffle_partitions=1, master='local[1]')\n"
+        f"rows = QUERIES['mg_heavy_hitters_docs'](spark, {C.SF_DIR!r}).collect()\n"
+        "print('rows', len(rows))\n"
+        "spark.stop()\n")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["TERM_SPARK_DRIVER_MEM"] = "1g"
+    proc = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.split()[-2:] == ["rows", "5"], proc.stdout
