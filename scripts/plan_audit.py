@@ -1,17 +1,18 @@
 """Generate PLANS.md: a physical-plan audit of every contract query.
 
 For each `queries()` entry, build the DataFrame at sf0.001, count the
-Spark jobs its construction runs eagerly, and summarize the plan
-properties that matter at 100 TB via term_spark.plans.audit (the plan
-itself is never executed).
+Spark jobs its construction runs eagerly and the jobs its `collect()`
+then runs, and summarize the plan properties that matter at 100 TB via
+term_spark.plans.audit (the plan is audited before it is collected).
 
 Run: python scripts/plan_audit.py [--sf-dir DIR] [--out PATH]
 
 It writes PLANS.md at the root of the checkout that holds this script
-(``--out`` elsewhere) and prints the total build jobs and the number
-of queries whose build starts no job.  The committed PLANS.md is the
-sf0.001 audit; ``--sf-dir`` audits another scale, e.g. to count build
-jobs at sf0.01 with ``--out`` pointing outside the checkout.
+(``--out`` elsewhere) and prints the total build and collect jobs and
+the number of queries whose build starts no job.  The committed
+PLANS.md is the sf0.001 audit; ``--sf-dir`` audits another scale, e.g.
+to count build jobs at sf0.01 with ``--out`` pointing outside the
+checkout.
 """
 
 from __future__ import annotations
@@ -26,17 +27,18 @@ SF_DIR = "/root/testdata/sf0.001"
 
 HEADER = """# PLANS — physical-plan audit of all contract queries
 
-Generated by `python scripts/plan_audit.py` at {sf} (the final
-plans are audited, not executed). Columns: Spark `jobs` started while
+Generated by `python scripts/plan_audit.py` at {sf} (each final
+plan is audited, then collected). Columns: Spark `jobs` started while
 the query's DataFrame is built (eager build work, counted as new
-ungrouped job ids in `statusTracker`), parquet scans and their
-projected column counts (pruning), scan-pushed filters, exchanges
-(shuffles), join strategies (broadcast-hash, sort-merge `smj` and
-shuffled-hash `shj` counted apart), bounded top-k, window count,
-windows without PARTITION BY, scans of a pickled Python RDD
-(`py_rdd`: driver rows sent through createDataFrame's row path, whose
-evaluation forks a Python worker; a localCheckpoint scan is not one),
-and flags.
+ungrouped job ids in `statusTracker`), `collect_jobs` started while
+the built DataFrame is collected (so work moved from build to collect
+shows), parquet scans and their projected column counts (pruning),
+scan-pushed filters, exchanges (shuffles), join strategies
+(broadcast-hash, sort-merge `smj` and shuffled-hash `shj` counted
+apart), bounded top-k, window count, windows without PARTITION BY,
+scans of a pickled Python RDD (`py_rdd`: driver rows sent through
+createDataFrame's row path, whose evaluation forks a Python worker; a
+localCheckpoint scan is not one), and flags.
 
 Reading the flags:
 - `EXPAND(rollup)` on rollup_pricing is ANSI ROLLUP's grouping-sets
@@ -72,27 +74,32 @@ def main() -> None:
 
     tracker = spark.sparkContext.statusTracker()
     out = [HEADER.format(sf=os.path.basename(args.sf_dir.rstrip("/"))),
-           "| query | jobs | scans | cols/scan | pushed | exch | bcast | smj |"
-           " shj | top-k | win | unpart-win | py_rdd | flags |",
-           "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|"]
-    n = total = lazy = 0
+           "| query | jobs | collect_jobs | scans | cols/scan | pushed | exch |"
+           " bcast | smj | shj | top-k | win | unpart-win | py_rdd | flags |",
+           "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|"]
+    n = total = collect_total = lazy = 0
     for name in sorted(QUERIES):
         before = set(tracker.getJobIdsForGroup())
         try:
             df = QUERIES[name](spark, args.sf_dir)
             jobs = len(set(tracker.getJobIdsForGroup()) - before)
             a = audit_plan(df)
+            built = set(tracker.getJobIdsForGroup())
+            df.collect()
+            collect_jobs = len(set(tracker.getJobIdsForGroup()) - built)
         except Exception as exc:  # pragma: no cover
-            out.append(f"| {name} | ERROR: {exc} |" + " |" * 12)
+            out.append(f"| {name} | ERROR: {exc} |" + " |" * 13)
             continue
         total += jobs
+        collect_total += collect_jobs
         lazy += jobs == 0
         flags = " ".join(x for x in (
             "EXPAND(rollup)" if a["expand"] else "",
             "CARTESIAN" if a["cartesian"] else "",
             "NLJ" if a["nlj"] else "") if x)
         out.append(
-            f"| {name} | {jobs} | {a['scans']} | {a['scan_cols']} |"
+            f"| {name} | {jobs} | {collect_jobs} | {a['scans']} |"
+            f" {a['scan_cols']} |"
             f" {a['pushed_filters']} | {a['exchanges']} |"
             f" {a['bcast_joins']} | {a['smj_joins']} | {a['shj_joins']} |"
             f" {'Y' if a['topk'] else ''} | {a['windows']} |"
@@ -103,6 +110,7 @@ def main() -> None:
         f.write("\n".join(out))
     print(f"wrote {args.out} ({n} queries)")
     print(f"build jobs: {total} total, {lazy} queries with none")
+    print(f"collect jobs: {collect_total} total")
     spark.stop()
 
 

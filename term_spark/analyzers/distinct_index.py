@@ -8,7 +8,7 @@ distinct count for any tracked column is a union of sketch blobs: the
 probe reads kilobytes, not terabytes, and a new ingest batch sketches
 ONLY ITSELF and appends one row per column.
 
-Append soundness (the build_minhash_index standard, dedup.py:980):
+Append soundness (the operators.dedup.build_minhash_index standard):
 an HLL sketch is a register array holding, per register, the MAX
 leading-zero rank observed among items hashing there.  MAX is
 commutative, associative and idempotent, so
@@ -153,8 +153,7 @@ def distinct_index_report(spark, index_path: str,
             .withColumn(
                 "within_tolerance",
                 F.abs(F.col("n_distinct_est") - F.col("n_exact"))
-                <= F.lit(tol) * F.col("n_exact"))
-            .orderBy("col_name"))
+                <= F.lit(tol) * F.col("n_exact")))
 
 
 def compact_distinct_index(spark, index_path: str) -> None:

@@ -21,7 +21,7 @@ verbatim; the group column is pinned in the params like every other
 param (an ungrouped probe of a grouped index would silently pool
 groups — it refuses instead).
 
-Append soundness (the build_minhash_index standard, dedup.py:980):
+Append soundness (the operators.dedup.build_minhash_index standard):
 each shard's grid is computed from that shard's rows alone, so shard
 rows are row-local by construction — appending shard B's rows next to
 shard A's touches nothing of A, and the probe's weighted-grid merge

@@ -83,21 +83,25 @@ def _check_bands(num_hashes: int, bands: int) -> None:
                          f"of bands ({bands})")
 
 
-def _band_stack(sig: DataFrame, cols, bands: int) -> DataFrame:
-    """(id, band, h) bucket rows: md5 of each band's signature slice,
-    exploded one row per band — the unit both the in-memory self-join
-    and the persisted index share."""
+def _band_hashes(cols, bands: int):
+    """band_0..band_{B-1}: md5 of each band's ``|``-joined signature
+    slice — the one band-hash definition the in-memory self-join, the
+    persisted index build and its probe share."""
     r = len(cols) // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(c) for c in cols[b * r:(b + 1) * r]]
-        band_cols.append(F.md5(F.concat_ws("|", *parts)).alias(f"band_{b}"))
-    banded = sig.select("id", *band_cols)
+    return [F.md5(F.concat_ws("|", *[F.col(c) for c in
+                                     cols[b * r:(b + 1) * r]]))
+            .alias(f"band_{b}") for b in range(bands)]
+
+
+def _explode_bands(banded: DataFrame, bands: int, keep=()) -> DataFrame:
+    """(id, *keep, band, h) bucket rows, one per band, from a frame
+    carrying band_0..band_{B-1}."""
     return banded.select(
-        "id", F.explode(F.array(*[
+        "id", *keep, F.explode(F.array(*[
             F.struct(F.lit(b).alias("band"), F.col(f"band_{b}").alias("h"))
             for b in range(bands)])).alias("bh")
-    ).select("id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
+    ).select("id", *keep, F.col("bh.band").alias("band"),
+             F.col("bh.h").alias("h"))
 
 
 def _est_plan_bytes(df: DataFrame) -> int:
@@ -142,7 +146,8 @@ def _banded_pairs(sig: DataFrame, cols, bands: int,
     an unknown estimate defaults to the merge (scale-safe) branch.
     At 100 TB the broadcast regime never applies and this is always
     the single-pass merge plan."""
-    stacked = _band_stack(sig, cols, bands)
+    stacked = _explode_bands(sig.select("id", *_band_hashes(cols, bands)),
+                             bands)
     a = stacked.alias("a")
     b_ = stacked.alias("b")
     if src is not None and (2 * _est_plan_bytes(src)
@@ -1052,27 +1057,23 @@ def build_minhash_index(df: DataFrame, index_path: str,
 
     Params (k, num_hashes, bands) are pinned at build time; a
     mismatched probe is a different hash family and would silently
-    miss. Tables:
-    - ``signatures``  (id, mh_0..mh_{n-1}) for the est-Jaccard verify.
-    - ``buckets``     (id, band, h) — the LSH join side.
+    miss. One table per shard:
+    - ``signatures``  (id, mh_0..mh_{n-1}, band_0..band_{B-1}) — the
+      minhashes for the est-Jaccard verify and the band hashes the
+      probe explodes into its bucket join side (a column-pruned scan).
 
-    Bucket rows are derived from THIS shard's signatures only — the
-    same pinned rows that were just written (localCheckpoint fixes the
-    data before both writes, so the tables cannot diverge). That makes
-    mode='append' sound AND linear: each shard contributes exactly
-    ``bands`` bucket rows per document, once; re-deriving from the
-    whole persisted signatures table would re-append every earlier
-    shard's bucket rows on every append (quadratic bucket growth and
-    inflated n_bands_matched — the bug this shard-local derivation
-    prevents). Min-per-shingle signatures are row-local and bucket
-    membership is per-document, so shard-wise union == batch build.
+    ``mode='append'`` writes the new documents as one more shard, so
+    each shard holds exactly one row per document, derived from that
+    shard's documents only: nothing is re-derived from earlier shards
+    and no second table has to stay in lockstep. Min-per-shingle
+    signatures and their band hashes are row-local, so shard-wise
+    union == batch build.
     """
     _check_bands(num_hashes, bands)
-    sig = minhash_signatures(df, text_col, id_col, k, num_hashes) \
-        .localCheckpoint()  # pin: the written shard IS the banded shard
     cols = [f"mh_{i}" for i in range(num_hashes)]
+    sig = minhash_signatures(df, text_col, id_col, k, num_hashes)
     IndexStore(df.sparkSession, index_path).write(
-        {"signatures": sig, "buckets": _band_stack(sig, cols, bands)},
+        {"signatures": sig.select("id", *cols, *_band_hashes(cols, bands))},
         {"k": k, "num_hashes": num_hashes, "bands": bands}, mode)
 
 
@@ -1081,7 +1082,7 @@ def neardup_against_index(spark, index_path: str, new_df: DataFrame,
                           min_est_jaccard: float = 0.0) -> DataFrame:
     """Near-dup candidates between a NEW batch and a persisted index:
     sketch only the batch (params read from the index), join its
-    band hashes against the stored buckets, and score every candidate
+    band hashes against the stored ones, and score every candidate
     with the standard signature estimate of Jaccard — the fraction of
     the num_hashes minhashes that agree (each agrees with probability
     exactly J). Returns (new_id, index_id, n_bands_matched,
@@ -1089,32 +1090,37 @@ def neardup_against_index(spark, index_path: str, new_df: DataFrame,
 
     Scale shape: the bucket join is the only corpus-sized touch and it
     shuffles on the 32-hex band hash; the batch side is typically the
-    small one, so AQE broadcasts it. The est-Jaccard verify joins the
-    TWO bounded signature tables (candidates only), never the texts.
+    small one, so AQE broadcasts it. The batch is sketched once: its
+    minhashes ride the band stack into the (new_id, index_id) pairs
+    aggregate (exact, since they depend on new_id only), so the
+    est-Jaccard verify joins the candidates with the stored signatures
+    alone, never the texts.
     """
     store = IndexStore(spark, index_path)
     k, num_hashes, bands = (store.params["k"], store.params["num_hashes"],
                             store.params["bands"])
     cols = [f"mh_{i}" for i in range(num_hashes)]
+    ncols = [f"n_{c}" for c in cols]
 
-    new_sig = minhash_signatures(new_df, text_col, id_col, k, num_hashes) \
-        .localCheckpoint()  # used twice: band stack + est verify
-    new_stack = _band_stack(new_sig, cols, bands) \
-        .select(F.col("id").alias("new_id"), "band", "h")
-    buckets = store.read("buckets") \
-        .select(F.col("id").alias("index_id"), "band", "h")
+    new_sig = minhash_signatures(new_df, text_col, id_col, k, num_hashes)
+    new_stack = _explode_bands(
+        new_sig.select("id", *[F.col(c).alias(n) for c, n in zip(cols, ncols)],
+                       *_band_hashes(cols, bands)), bands, keep=ncols) \
+        .withColumnRenamed("id", "new_id")
+    stored = store.read("signatures")
+    buckets = _explode_bands(
+        stored.select("id", *[f"band_{b}" for b in range(bands)]), bands) \
+        .withColumnRenamed("id", "index_id")
     pairs = (new_stack.join(buckets, ["band", "h"])
              .groupBy("new_id", "index_id")
-             .agg(F.count(F.lit(1)).alias("n_bands_matched")))
+             .agg(F.count(F.lit(1)).alias("n_bands_matched"),
+                  *[F.any_value(c).alias(c) for c in ncols]))
 
-    nsig = new_sig.select(F.col("id").alias("new_id"),
-                          *[F.col(c).alias(f"n_{c}") for c in cols])
-    isig = (store.read("signatures")
-            .select(F.col("id").alias("index_id"),
-                    *[F.col(c).alias(f"i_{c}") for c in cols]))
+    isig = stored.select(F.col("id").alias("index_id"),
+                         *[F.col(c).alias(f"i_{c}") for c in cols])
     agree = sum(F.when(F.col(f"n_{c}") == F.col(f"i_{c}"), 1).otherwise(0)
                 for c in cols)
-    return (pairs.join(nsig, "new_id").join(isig, "index_id")
+    return (pairs.join(isig, "index_id")
             .select("new_id", "index_id", "n_bands_matched",
                     (agree / F.lit(num_hashes)).alias("est_jaccard"))
             .filter(F.col("est_jaccard") >= min_est_jaccard))

@@ -824,8 +824,8 @@ def build_substring_index(df, index_path: str, text_col: str = "text",
     sums per hash — and the ``n >= min_count`` test is monotone in the
     summed count, so shard-wise appends are equivalent to a batch
     build over the union (test_substring_index proves it probe-output
-    -for-probe-output).  Unlike the MinHash index nothing per-document
-    is stored, so there is no bucket table to keep in lockstep.
+    -for-probe-output).  Unlike the MinHash index, whose shards hold
+    one row per document, nothing per-document is stored here.
     ``compact_substring_index`` folds shard partials into one row per
     hash when the shard count grows.
     """

@@ -2528,9 +2528,9 @@ LLM_ORACLES.update({"cdc_dedup_docs": SQL_CDC_DEDUP_DOCS})
 def q_incremental_neardup_docs(spark, sf_dir) -> DataFrame:
     """Persisted MinHash-LSH index lifecycle, made driver-oracle
     -checkable: the corpus slice (doc_id % 4 != 0) is sketched ONCE
-    into a scratch index (``build_minhash_index`` — signatures +
-    band buckets + pinned params on disk), then the new batch
-    (doc_id % 4 == 0) dedups against it WITHOUT the corpus being
+    into a scratch index (``build_minhash_index`` — one table of
+    minhashes and band hashes + pinned params on disk), then the new
+    batch (doc_id % 4 == 0) dedups against it WITHOUT the corpus being
     re-sketched (``neardup_against_index``), the incremental
     -ingestion workflow. Returned pairs carry the banded match count
     and the signature-estimated Jaccard (fraction of agreeing
@@ -2553,13 +2553,12 @@ def q_incremental_neardup_docs(spark, sf_dir) -> DataFrame:
                               num_hashes=NUM_HASHES, bands=BANDS)
         res = (D.neardup_against_index(spark, tmp, batch)
                .select("new_id", "index_id", "n_bands_matched",
-                       F.round("est_jaccard", 6).alias("est_jaccard"))
-               .orderBy("new_id", "index_id"))
+                       F.round("est_jaccard", 6).alias("est_jaccard")))
         rows = res.collect()
         schema = res.schema
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema)
+    return local_df(spark, rows, schema).orderBy("new_id", "index_id")
 
 
 def _incremental_neardup_sql() -> str:
@@ -2636,13 +2635,12 @@ def q_incremental_substring_docs(spark, sf_dir) -> DataFrame:
                        F.col("span_start").cast("bigint").alias("span_start"),
                        F.col("span_end").cast("bigint").alias("span_end"),
                        F.col("span_tokens").cast("bigint")
-                       .alias("span_tokens"))
-               .orderBy("doc_id", "span_start"))
+                       .alias("span_tokens")))
         rows = res.collect()
         schema = res.schema
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema)
+    return local_df(spark, rows, schema).orderBy("doc_id", "span_start")
 
 
 SQL_INCREMENTAL_SUBSTRING_DOCS = f"""
@@ -2896,13 +2894,12 @@ def q_incremental_cdc_docs(spark, sf_dir) -> DataFrame:
                        F.col("n_before").cast("bigint").alias("n_before"),
                        (F.col("n_before") - F.col("n_dropped"))
                        .cast("bigint").alias("n_after"),
-                       "cleaned_fp")
-               .orderBy("doc_id"))
+                       "cleaned_fp"))
         rows = res.collect()
         schema = res.schema
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema)
+    return local_df(spark, rows, schema).orderBy("doc_id")
 
 
 SQL_INCREMENTAL_CDC_DOCS = """
@@ -3371,13 +3368,12 @@ def q_incremental_distinct_docs(spark, sf_dir) -> DataFrame:
                        F.col("n_exact").cast("bigint").alias("n_exact"),
                        F.col("n_rows").cast("bigint").alias("n_rows"),
                        F.col("n_shards").cast("bigint").alias("n_shards"),
-                       "within_tolerance")
-               .orderBy("col_name"))
+                       "within_tolerance"))
         rows = res.collect()
         schema = res.schema
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema)
+    return local_df(spark, rows, schema).orderBy("col_name")
 
 
 SQL_INCREMENTAL_DISTINCT_DOCS = """
@@ -3573,13 +3569,12 @@ def q_csv_source_roundtrip(spark, sf_dir) -> DataFrame:
                     F.count_distinct("p_partkey").alias("n_keys"),
                     F.round(F.sum(F.col("p_retailprice")
                                   .cast("decimal(25,4)")).cast("double"), 4)
-                     .alias("sum_price"))
-               .orderBy("brand"))
+                     .alias("sum_price")))
         rows = res.collect()
         schema = res.schema
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema)
+    return local_df(spark, rows, schema).orderBy("brand")
 
 
 SQL_CSV_SOURCE_ROUNDTRIP = """
@@ -3621,13 +3616,12 @@ def q_json_source_roundtrip(spark, sf_dir) -> DataFrame:
                     F.count_distinct("o_orderkey").alias("n_keys"),
                     F.round(F.sum(F.col("o_totalprice")
                                   .cast("decimal(25,4)")).cast("double"), 4)
-                     .alias("sum_price"))
-               .orderBy("priority"))
+                     .alias("sum_price")))
         rows = res.collect()
         schema = res.schema
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema)
+    return local_df(spark, rows, schema).orderBy("priority")
 
 
 SQL_JSON_SOURCE_ROUNDTRIP = """
@@ -3774,13 +3768,12 @@ def q_incremental_bm25_docs(spark, sf_dir) -> DataFrame:
         build_bm25_index(d.filter(F.col("doc_id") % 4 != 0), tmp)
         build_bm25_index(d.filter(F.col("doc_id") % 4 == 0), tmp,
                          mode="append")
-        res = (bm25_topk_from_index(spark, tmp, q, k=10)
-               .orderBy("query_id", "rank"))
+        res = bm25_topk_from_index(spark, tmp, q, k=10)
         rows = res.collect()
         schema = res.schema
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema)
+    return local_df(spark, rows, schema).orderBy("query_id", "rank")
 
 
 LLM_QUERIES.update({"incremental_bm25_docs": q_incremental_bm25_docs})
@@ -3910,13 +3903,12 @@ def q_incremental_quantile_docs(spark, sf_dir) -> DataFrame:
                .select("col_name", "p", "q_exact",
                        F.col("n_rows").cast("bigint").alias("n_rows"),
                        F.col("n_shards").cast("bigint").alias("n_shards"),
-                       "within_bound")
-               .orderBy("col_name", "p"))
+                       "within_bound"))
         rows = res.collect()
         schema = res.schema
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema)
+    return local_df(spark, rows, schema).orderBy("col_name", "p")
 
 
 SQL_INCREMENTAL_QUANTILE_DOCS = """
@@ -4102,14 +4094,13 @@ def q_hybrid_rrf_from_index_docs(spark, sf_dir) -> DataFrame:
         ann = (ivf_topk_from_index(spark, f"{tmp}/ivf", qv, k=20,
                                    nprobe=n_cents)
                .select("query_id", F.col("nbr_id").alias("doc_id"), "rank"))
-        res = (rrf_fuse({"bm25": bm.select("query_id", "doc_id", "rank"),
-                         "cosine": ann}, k=10)
-               .orderBy("query_id", "rank"))
+        res = rrf_fuse({"bm25": bm.select("query_id", "doc_id", "rank"),
+                        "cosine": ann}, k=10)
         rows = res.collect()
         schema = res.schema
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema)
+    return local_df(spark, rows, schema).orderBy("query_id", "rank")
 
 
 LLM_QUERIES.update(
@@ -4188,13 +4179,12 @@ def q_incremental_overlap_docs(spark, sf_dir) -> DataFrame:
                                       * (1.0 - F.col("jaccard"))
                                       / F.lit(float(k))) + 2.0 / k))
                .select("source_a", "source_b", "n_a", "n_b", "n_common",
-                       "jaccard", "est_ok")
-               .orderBy("source_a", "source_b"))
+                       "jaccard", "est_ok"))
         rows = res.collect()
         schema = res.schema
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema)
+    return local_df(spark, rows, schema).orderBy("source_a", "source_b")
 
 
 SQL_INCREMENTAL_OVERLAP_DOCS = f"""
@@ -4385,13 +4375,12 @@ def q_quantile_by_source_docs(spark, sf_dir) -> DataFrame:
                .select(F.col("grp").alias("source"), "p", "q_exact",
                        F.col("n_rows").cast("bigint").alias("n_rows"),
                        F.col("n_shards").cast("bigint").alias("n_shards"),
-                       "within_bound")
-               .orderBy("source", "p"))
+                       "within_bound"))
         rows = res.collect()
         schema = res.schema
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema)
+    return local_df(spark, rows, schema).orderBy("source", "p")
 
 
 SQL_QUANTILE_BY_SOURCE_DOCS = """

@@ -61,7 +61,7 @@ TIERS = {
             root, mode=mode),
         lambda spark, root: _sorted(D.neardup_against_index(
             spark, root, _docs(spark, [(100, _BASE), (102, _NOVEL)]))),
-        2, "append", None),
+        1, "append", None),
     "substring": (
         lambda spark, root, part, mode: T.build_substring_index(
             _docs(spark, [(part + 1, f"history {part} says {_PHRASE}")]),

@@ -87,24 +87,23 @@ def test_append_shard(spark, tmp_path):
 
 
 def test_append_is_linear_not_quadratic(spark, tmp_path):
-    """Each append adds exactly bands rows per NEW document to the
-    buckets table — earlier shards' bucket rows are never re-appended
-    (the quadratic-growth bug: deriving the band stack from the whole
-    persisted signatures table duplicates every prior shard on every
-    append, inflating n_bands_matched past `bands`)."""
+    """Each append adds exactly one signatures row per NEW document —
+    earlier shards' rows are never re-appended (the quadratic-growth
+    bug: re-deriving bucket rows from the whole persisted index
+    duplicates every prior shard on every append, inflating
+    n_bands_matched past `bands`)."""
     idx = str(tmp_path / "mhidx_lin")
     bands = 4
     build_minhash_index(_df(spark, _CORPUS[:1]), idx)
     build_minhash_index(_df(spark, _CORPUS[1:2]), idx, mode="append")
     build_minhash_index(_df(spark, _CORPUS[2:3]), idx, mode="append")
 
-    buckets = IndexStore(spark, idx).read("buckets")
-    # 3 docs x 4 bands, no duplicated rows from repeated appends
-    assert buckets.count() == 3 * bands
+    sig = IndexStore(spark, idx).read("signatures")
+    assert sig.count() == 3
     per_doc = {r["id"]: r["n"] for r in
-               buckets.groupBy("id").count().withColumnRenamed("count", "n")
+               sig.groupBy("id").count().withColumnRenamed("count", "n")
                .collect()}
-    assert per_doc == {1: bands, 2: bands, 3: bands}
+    assert per_doc == {1: 1, 2: 1, 3: 1}
 
     # probe of an exact copy: n_bands_matched == bands exactly, and the
     # three-append index behaves identically to a one-shot batch build
@@ -156,3 +155,29 @@ def test_bands_must_divide_num_hashes(spark, tmp_path, entry):
                 df, str(tmp_path / "idx"), num_hashes=10, bands=4)}[entry]
     with pytest.raises(ValueError, match=r"num_hashes \(10\).*bands \(4\)"):
         call()
+
+
+def test_build_and_probe_write_once_and_pin_nothing(spark, tmp_path,
+                                                    monkeypatch):
+    """One table per shard and a batch sketched once with no pin: a
+    build followed by a probe writes one Parquet table and checkpoints
+    nothing."""
+    from pyspark.sql.readwriter import DataFrameWriter
+    calls = {"parquet": 0, "localCheckpoint": 0}
+
+    def count(cls, name):
+        orig = getattr(cls, name)
+
+        def counted(*args, **kwargs):
+            calls[name] += 1
+            return orig(*args, **kwargs)
+        monkeypatch.setattr(cls, name, counted)
+
+    corpus, batch = _df(spark, _CORPUS), _df(spark, _BATCH)
+    count(DataFrameWriter, "parquet")
+    count(type(corpus), "localCheckpoint")
+    idx = str(tmp_path / "mhidx_once")
+    build_minhash_index(corpus, idx)
+    out = neardup_against_index(spark, idx, batch).collect()
+    assert calls == {"parquet": 1, "localCheckpoint": 0}
+    assert {(r["new_id"], r["index_id"]) for r in out} >= {(100, 1)}

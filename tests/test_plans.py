@@ -490,3 +490,40 @@ def test_query_build_starts_no_spark_job(spark, name):
     before = set(sc.statusTracker().getJobIdsForGroup(group))
     QUERIES[name](spark, SF_DIR)
     assert set(sc.statusTracker().getJobIdsForGroup(group)) == before
+
+
+# registry queries that build a scratch index, probe it, collect the
+# result and delete the index while their DataFrame is built
+EAGER_LIFECYCLE_QUERIES = [
+    "csv_source_roundtrip", "hybrid_rrf_from_index_docs",
+    "incremental_bm25_docs", "incremental_cdc_docs",
+    "incremental_distinct_docs", "incremental_neardup_docs",
+    "incremental_overlap_docs", "incremental_quantile_docs",
+    "incremental_substring_docs", "json_source_roundtrip",
+    "quantile_by_source_docs"]
+
+
+@pytest.mark.parametrize("name", EAGER_LIFECYCLE_QUERIES)
+def test_eager_lifecycle_collects_without_a_global_sort(spark, monkeypatch,
+                                                        name):
+    """An eager lifecycle query sorts the rows it returns on the driver
+    -local frame (one partition, no exchange), not the distributed
+    probe it collects: a range-partitioned sort there costs a sampling
+    job and a shuffle for rows that are about to be collected."""
+    from conftest import SF_DIR
+    from term_spark.queries import QUERIES
+
+    cls = type(spark.range(1))
+    orig = cls.collect
+    plans = []
+
+    def collect(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self)
+
+    with monkeypatch.context() as m:
+        m.setattr(cls, "collect", collect)
+        df = QUERIES[name](spark, SF_DIR)
+    assert plans
+    assert not [p for p in plans if "rangepartitioning" in p], plans
+    assert "rangepartitioning" not in plan_of(df, "simple")
