@@ -311,19 +311,16 @@ def _bench_index_lifecycles(spark, sf_dir: str, ivf_centroids: int = 16,
     {bm25_index_build, hybrid_bm25_probe, hybrid_ann_probe,
     hybrid_fuse}.
     """
-    import shutil
-    import tempfile
-
     import pyspark.sql.functions as F
 
     from term_spark.operators import dedup as D
     from term_spark.operators import similarity as S
     from term_spark.operators import text as T
+    from term_spark.session import scratch_dir
     from term_spark.sources import read_parquet
 
     out = {}
-    tmp = tempfile.mkdtemp(prefix="term_spark_bench_idx_")
-    try:
+    with scratch_dir() as tmp:
         if {"minhash", "substring", "hll", "kmv", "hybrid"} & set(which):
             docs = read_parquet(spark, f"{sf_dir}/documents.parquet")
             corpus = docs.filter(F.col("doc_id") % 4 != 0)
@@ -469,8 +466,6 @@ def _bench_index_lifecycles(spark, sf_dir: str, ivf_centroids: int = 16,
             fuse()
             out["hybrid_fuse"] = round(min(
                 _timed(fuse) for _ in range(2)), 4)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -567,7 +562,7 @@ def sf10_fresh_main() -> None:
     the warm-up count + first sample).  Prints one JSON line."""
     from term_spark import ValidationSuite
     from term_spark.queries import QUERIES
-    from term_spark.session import get_spark
+    from term_spark.session import get_spark, scratch_dir
     from term_spark.sources import read_parquet
 
     sf10_dir = _sf10_dir()
@@ -628,14 +623,10 @@ def sf10_fresh_main() -> None:
     # matters — 64 files over the 15M-row orders table, then the
     # measured overlap of a 25% box on the NON-LEAD dimension (the
     # predicate a linear sort cannot prune: every file would overlap)
-    import shutil
-    import tempfile
-
     import pyspark.sql.functions as F
 
     from term_spark.plans.layout import file_pruning_stats, write_zordered
-    ztmp = tempfile.mkdtemp(prefix="term_spark_bench_z_")
-    try:
+    with scratch_dir() as ztmp:
         orders = read_parquet(spark, f"{sf10_dir}/orders.parquet")
         t0 = time.perf_counter()
         spans = write_zordered(
@@ -681,8 +672,6 @@ def sf10_fresh_main() -> None:
         out["sq8_codes_bytes"] = _dir_bytes(f"{ztmp}/codes")
         out["raw_embeddings_bytes"] = _dir_bytes(
             f"{sf10_dir}/embeddings.parquet")
-    finally:
-        shutil.rmtree(ztmp, ignore_errors=True)
     meta_path = os.path.join(sf10_dir, "_meta.json")
     if os.path.exists(meta_path):
         with open(meta_path) as fh:

@@ -18,7 +18,7 @@ from term_spark.analyzers.suggestions import SuggestionEngine
 from term_spark.formatters import HumanFormatter
 from term_spark.operators import dedup, similarity, text
 from term_spark.repository import InMemoryRepository
-from term_spark.session import get_spark
+from term_spark.session import get_spark, scratch_dir
 from term_spark.sources import load_tpch_tables
 
 
@@ -317,9 +317,6 @@ def main():
     # round 10: bounded-cost sketch tiers — MG heavy hitters (map-only
     # frequency summary), join-explosion pre-flight, and a persisted
     # MinHash index for incremental ingestion
-    import shutil
-    import tempfile
-
     from term_spark.analyzers.heavy_hitters import mg_sketch
     from term_spark.operators.dedup import (build_minhash_index,
                                             neardup_against_index)
@@ -337,8 +334,7 @@ def main():
           f"{jc['lower_bound']} rows (estimate {jc['estimate']:.0f}) "
           "from 4 sketch jobs, no join executed")
 
-    idx = tempfile.mkdtemp(prefix="term_spark_quickstart_mhidx_")
-    try:
+    with scratch_dir() as idx:
         build_minhash_index(sdocs, idx)
         batch = spark.createDataFrame(
             [(10, "the quick brown fox jumps over the lazy dog other tail")],
@@ -347,8 +343,6 @@ def main():
         print("incremental dedup vs persisted index: batch doc 10 matches "
               + ", ".join(f"corpus {r['index_id']} "
                           f"(est J={r['est_jaccard']:.2f})" for r in cand))
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
 
     # round 11: the incremental tier completed — a persisted gram index
     # rewrites new batches against history (ExactSubstr), grouped MG
@@ -359,8 +353,7 @@ def main():
     from term_spark.operators.text import (
         build_substring_index, remove_duplicated_spans_against_index)
 
-    ssidx = tempfile.mkdtemp(prefix="term_spark_quickstart_ssidx_")
-    try:
+    with scratch_dir() as ssidx:
         build_substring_index(sdocs, ssidx, k=5)
         batch = spark.createDataFrame(
             [(20, "fresh crawl where the quick brown fox jumps over the "
@@ -372,8 +365,6 @@ def main():
               f"doc 20 had {spans2.count()} duplicated span(s) vs history "
               f"and rewrites to: "
               f"{cleaned2.collect()[0]['text']!r}")
-    finally:
-        shutil.rmtree(ssidx, ignore_errors=True)
 
     gdocs = sdocs.withColumn(
         "source", F.when(F.col("doc_id") < 3, "crawlA").otherwise("crawlB"))
@@ -407,8 +398,7 @@ def main():
           f"carry confirmed PII (Luhn rejects the order id); doc 1 "
           f"redacts to: {red!r}")
 
-    hidx = tempfile.mkdtemp(prefix="term_spark_quickstart_hllidx_")
-    try:
+    with scratch_dir() as hidx:
         build_distinct_index(gdocs.filter("doc_id < 3"),
                              ["doc_id", "source"], hidx)
         build_distinct_index(gdocs.filter("doc_id >= 3"),
@@ -419,8 +409,6 @@ def main():
               "blobs): "
               + ", ".join(f"{c}~{int(ests[c]['n_distinct_est'])} distinct"
                           for c in sorted(ests)))
-    finally:
-        shutil.rmtree(hidx, ignore_errors=True)
 
     # --- round 12: hybrid retrieval + the quantile tier -----------------
     from term_spark.analyzers.quantile_index import (build_quantile_index,
@@ -442,16 +430,13 @@ def main():
           + ", ".join(f"doc {r['doc_id']} ({r['n_systems']} systems)"
                       for r in sorted(top, key=lambda r: r['rank'])))
 
-    qidx = tempfile.mkdtemp(prefix="term_spark_quickstart_qidx_")
-    try:
+    with scratch_dir() as qidx:
         build_quantile_index(gdocs.filter("doc_id < 3"), ["doc_id"], qidx)
         build_quantile_index(gdocs.filter("doc_id >= 3"), ["doc_id"], qidx,
                              mode="append")
         med = quantiles_from_index(spark, qidx, [0.5]).collect()[0]
         print(f"persisted quantile index (2 shards, probe merges KB grid "
               f"rows): median doc_id ~ {med['q_est']:.1f}")
-    finally:
-        shutil.rmtree(qidx, ignore_errors=True)
 
     # --- round 13: the Benford audit pair -------------------------------
     from term_spark.operators.drift import benford_deviation

@@ -8,8 +8,9 @@ term_spark.plans.audit (the plan is audited before it is collected).
 Run: python scripts/plan_audit.py [--sf-dir DIR] [--out PATH]
 
 It writes PLANS.md at the root of the checkout that holds this script
-(``--out`` elsewhere) and prints the total build and collect jobs and
-the number of queries whose build starts no job.  The committed
+(``--out`` elsewhere) and prints the total build and collect jobs, the
+number of queries whose build starts no job and the number that raised
+(each an ERROR row; the script then exits 1).  The committed
 PLANS.md is the sf0.001 audit; ``--sf-dir`` audits another scale, e.g.
 to count build jobs at sf0.01 with ``--out`` pointing outside the
 checkout.
@@ -77,7 +78,7 @@ def main() -> None:
            "| query | jobs | collect_jobs | scans | cols/scan | pushed | exch |"
            " bcast | smj | shj | top-k | win | unpart-win | py_rdd | flags |",
            "|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|"]
-    n = total = collect_total = lazy = 0
+    n = total = collect_total = lazy = errors = 0
     for name in sorted(QUERIES):
         before = set(tracker.getJobIdsForGroup())
         try:
@@ -88,7 +89,12 @@ def main() -> None:
             df.collect()
             collect_jobs = len(set(tracker.getJobIdsForGroup()) - built)
         except Exception as exc:  # pragma: no cover
-            out.append(f"| {name} | ERROR: {exc} |" + " |" * 13)
+            # one table row: Py4J errors carry the JVM stack trace
+            first = (str(exc).strip().splitlines() or [""])[0]
+            first = first.replace("|", "\\|")
+            out.append(f"| {name} | ERROR: {type(exc).__name__}: {first} |"
+                       + " |" * 13)
+            errors += 1
             continue
         total += jobs
         collect_total += collect_jobs
@@ -111,7 +117,10 @@ def main() -> None:
     print(f"wrote {args.out} ({n} queries)")
     print(f"build jobs: {total} total, {lazy} queries with none")
     print(f"collect jobs: {collect_total} total")
+    print(f"errors: {errors} queries")
     spark.stop()
+    if errors:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -18,7 +18,7 @@ Determinism rules (so Spark and DuckDB value-hashes match):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from .session import local_df
+from .session import local_df, scratch_dir
 from pyspark.sql import DataFrame, SparkSession
 
 from .functions import epoch_seconds
@@ -3850,13 +3850,7 @@ def q_equidepth_from_grid_price(spark, sf_dir) -> DataFrame:
       two independently-erring edges);
     * ``counts_complete`` — Σn over the approx-edge buckets equals the
       exact non-null population (the unbounded outer buckets make
-      this structural; a regression drops rows and trips it).
-
-    Eagerly materialized so the scratch index is deleted before
-    returning (the q_incremental_quantile_docs pattern)."""
-    import shutil
-    import tempfile
-
+      this structural; a regression drops rows and trips it)."""
     from .analyzers.quantile_index import (DEFAULT_ACCURACY, DEFAULT_K,
                                            build_quantile_index)
     from .operators.histogram import equidepth_histogram_from_index
@@ -3882,8 +3876,7 @@ def q_equidepth_from_grid_price(spark, sf_dir) -> DataFrame:
                        f"array({', '.join(map(repr, probs))}))"),
                 lambda e: F.round(e, 6)).alias("__edges")).collect()[0]
 
-    tmp = tempfile.mkdtemp(prefix="term_spark_eqgrid_")
-    try:
+    with scratch_dir() as tmp:
         with ThreadPoolExecutor(max_workers=1) as pool:
             exact_fut = pool.submit(_exact_edges)
             build_quantile_index(li.filter(F.col("l_orderkey") % 4 != 0),
@@ -3893,8 +3886,6 @@ def q_equidepth_from_grid_price(spark, sf_dir) -> DataFrame:
             hist = equidepth_histogram_from_index(
                 li, "l_extendedprice", tmp, buckets=buckets).collect()
             exact = exact_fut.result()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     total = sum(r["n"] for r in hist)
     edges = [float(e) for e in exact["__edges"]]
     band = 2.0 * 2.0 * (2.0 / DEFAULT_K + 1.0 / DEFAULT_ACCURACY)

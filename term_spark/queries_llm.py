@@ -13,7 +13,7 @@ Engine-portability techniques:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from .session import local_df
+from .session import local_df, scratch_dir
 from pyspark.sql import Column, DataFrame
 
 from .operators import dedup as D
@@ -421,25 +421,19 @@ def q_ivf_index_recall_embeddings(spark, sf_dir) -> DataFrame:
     directory can be removed before returning; the returned plan
     depends only on the embeddings table.
     """
-    import shutil
-    import tempfile
-
     e = _emb(spark, sf_dir)
     corpus = e.filter(F.col("vec_id") >= 5)
     queries = (e.filter(F.col("vec_id") < 5)
                .select(F.col("vec_id").alias("query_id"),
                        F.col("embedding").alias("query_vec")))
     exact = S.cosine_topk(corpus, queries, k=5)
-    tmp = tempfile.mkdtemp(prefix="term_spark_ivfidx_")
-    try:
+    with scratch_dir() as tmp:
         S.build_ivf_index(corpus, tmp, n_centroids=8,
                           train_iterations=2, seed=42)
         served = S.ivf_topk_from_index(spark, tmp, queries, k=5, nprobe=6)
         n_exact = exact.count()
         n_hit = (exact.join(served.select("query_id", "nbr_id"),
                             ["query_id", "nbr_id"], "left_semi").count())
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     ok = n_hit >= 0.8 * n_exact
     return (exact.withColumn("ivf_index_recall_ok", F.lit(bool(ok)))
             .orderBy("query_id", "rank"))
@@ -873,12 +867,7 @@ def q_equidepth_by_source_grid_docs(spark, sf_dir) -> DataFrame:
     maximal single-value multiplicity — the continuous-data form
     (2·rank band alone, which equidepth_from_grid_price uses over
     ~unique prices) is provably violated on tied data and DID trip at
-    sf0.01.
-
-    Eagerly materialized; scratch index deleted before returning."""
-    import shutil
-    import tempfile
-
+    sf0.01."""
     from .analyzers.quantile_index import (DEFAULT_ACCURACY, DEFAULT_K,
                                            build_quantile_index)
     from .operators.histogram import equidepth_histograms_by_group
@@ -913,8 +902,7 @@ def q_equidepth_by_source_grid_docs(spark, sf_dir) -> DataFrame:
     # the exact-replay aggs are independent of the index lifecycle —
     # overlap them with the build + serve (guide-§2.6 job overlap; the
     # docs table is small, so the row's cost is job latency, not data)
-    tmp = tempfile.mkdtemp(prefix="term_spark_eqgrid_src_")
-    try:
+    with scratch_dir() as tmp:
         with ThreadPoolExecutor(max_workers=2) as pool:
             exact_fut = pool.submit(_exact)
             ties_fut = pool.submit(_ties)
@@ -923,8 +911,6 @@ def q_equidepth_by_source_grid_docs(spark, sf_dir) -> DataFrame:
                 d, "n_chars", tmp, buckets=buckets).collect()
             exact = exact_fut.result()
             ties = ties_fut.result()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     totals: dict = {}
     for r in hist:
         totals[r["grp"]] = totals.get(r["grp"], 0) + int(r["n"])
@@ -2537,28 +2523,18 @@ def q_incremental_neardup_docs(spark, sf_dir) -> DataFrame:
     minhashes — agrees with probability exactly J per hash). Every
     hash is the engine-portable md5 family, so the DuckDB oracle
     replays the ENTIRE lifecycle — signatures, buckets, bucket join,
-    estimate — value-for-value.
-
-    Eagerly materialized so the scratch index is deleted before
-    returning (the ``q_ivf_index_recall_embeddings`` pattern)."""
-    import shutil
-    import tempfile
-
+    estimate — value-for-value."""
     d = _docs(spark, sf_dir)
     corpus = d.filter(F.col("doc_id") % 4 != 0)
     batch = d.filter(F.col("doc_id") % 4 == 0)
-    tmp = tempfile.mkdtemp(prefix="term_spark_mhidx_")
-    try:
+    with scratch_dir() as tmp:
         D.build_minhash_index(corpus, tmp, k=JACCARD_K,
                               num_hashes=NUM_HASHES, bands=BANDS)
         res = (D.neardup_against_index(spark, tmp, batch)
                .select("new_id", "index_id", "n_bands_matched",
                        F.round("est_jaccard", 6).alias("est_jaccard")))
-        rows = res.collect()
-        schema = res.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema).orderBy("new_id", "index_id")
+        out = local_df(spark, res.collect(), res.schema)
+    return out.orderBy("new_id", "index_id")
 
 
 def _incremental_neardup_sql() -> str:
@@ -2617,18 +2593,11 @@ def q_incremental_substring_docs(spark, sf_dir) -> DataFrame:
     EXACTLY ``duplicated_spans(history ∪ batch)`` restricted to batch
     docs, and spans are gram-hash-invariant, so the DuckDB oracle
     replays the whole lifecycle with md5 text grams: corpus-wide
-    frequency, batch-position cover, per-doc interval merge.
-
-    Eagerly materialized so the scratch index is deleted before
-    returning (the ``q_incremental_neardup_docs`` pattern)."""
-    import shutil
-    import tempfile
-
+    frequency, batch-position cover, per-doc interval merge."""
     d = _docs(spark, sf_dir)
     history = d.filter(F.col("doc_id") % 4 != 0)
     batch = d.filter(F.col("doc_id") % 4 == 0)
-    tmp = tempfile.mkdtemp(prefix="term_spark_ssidx_")
-    try:
+    with scratch_dir() as tmp:
         T.build_substring_index(history, tmp, k=10)
         res = (T.duplicated_spans_against_index(spark, tmp, batch)
                .select("doc_id",
@@ -2636,11 +2605,8 @@ def q_incremental_substring_docs(spark, sf_dir) -> DataFrame:
                        F.col("span_end").cast("bigint").alias("span_end"),
                        F.col("span_tokens").cast("bigint")
                        .alias("span_tokens")))
-        rows = res.collect()
-        schema = res.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema).orderBy("doc_id", "span_start")
+        out = local_df(spark, res.collect(), res.schema)
+    return out.orderBy("doc_id", "span_start")
 
 
 SQL_INCREMENTAL_SUBSTRING_DOCS = f"""
@@ -2872,14 +2838,10 @@ def q_incremental_cdc_docs(spark, sf_dir) -> DataFrame:
     and the reassembly — fingerprint match proves the rewrite
     byte-for-byte (the ``cdc_rewrite_docs`` standard, incremental
     form)."""
-    import shutil
-    import tempfile
-
     d = _docs(spark, sf_dir)
     history = d.filter(F.col("doc_id") % 4 != 0)
     batch = d.filter(F.col("doc_id") % 4 == 0)
-    tmp = tempfile.mkdtemp(prefix="term_spark_cdcidx_")
-    try:
+    with scratch_dir() as tmp:
         D.build_cdc_index(history, tmp, k=8, divisor=64)
         cleaned, dropped = D.remove_duplicate_chunks_against_index(
             spark, tmp, batch)
@@ -2895,11 +2857,8 @@ def q_incremental_cdc_docs(spark, sf_dir) -> DataFrame:
                        (F.col("n_before") - F.col("n_dropped"))
                        .cast("bigint").alias("n_after"),
                        "cleaned_fp"))
-        rows = res.collect()
-        schema = res.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema).orderBy("doc_id")
+        out = local_df(spark, res.collect(), res.schema)
+    return out.orderBy("doc_id")
 
 
 SQL_INCREMENTAL_CDC_DOCS = """
@@ -3345,13 +3304,7 @@ def q_incremental_distinct_docs(spark, sf_dir) -> DataFrame:
     count (oracle-computable) plus the Spark-verified attestation the
     oracle pins TRUE: the union estimate lands within 3·RSE(lgK) of
     exact (lgK=12 ⇒ ±4.9%), which fails loudly if a shard is lost,
-    params drift, or the union is wrong.
-
-    Eagerly materialized so the scratch index is deleted before
-    returning (the q_incremental_neardup_docs pattern)."""
-    import shutil
-    import tempfile
-
+    params drift, or the union is wrong."""
     from .analyzers.distinct_index import (build_distinct_index,
                                            distinct_index_report)
 
@@ -3359,8 +3312,7 @@ def q_incremental_distinct_docs(spark, sf_dir) -> DataFrame:
     corpus = d.filter(F.col("doc_id") % 4 != 0)
     batch = d.filter(F.col("doc_id") % 4 == 0)
     cols = ["doc_id", "lang", "source"]
-    tmp = tempfile.mkdtemp(prefix="term_spark_hllidx_")
-    try:
+    with scratch_dir() as tmp:
         build_distinct_index(corpus, cols, tmp)
         build_distinct_index(batch, cols, tmp, mode="append")
         res = (distinct_index_report(spark, tmp, exact_df=d)
@@ -3369,11 +3321,8 @@ def q_incremental_distinct_docs(spark, sf_dir) -> DataFrame:
                        F.col("n_rows").cast("bigint").alias("n_rows"),
                        F.col("n_shards").cast("bigint").alias("n_shards"),
                        "within_tolerance"))
-        rows = res.collect()
-        schema = res.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema).orderBy("col_name")
+        out = local_df(spark, res.collect(), res.schema)
+    return out.orderBy("col_name")
 
 
 SQL_INCREMENTAL_DISTINCT_DOCS = """
@@ -3550,15 +3499,10 @@ def q_csv_source_roundtrip(spark, sf_dir) -> DataFrame:
     shortest-round-trip double formatting guarantees the CSV text
     parses back to identical bits — the oracle aggregates the parquet
     directly, so any reader/writer asymmetry (quoting, header, type
-    inference) breaks the hash.  Eagerly materialized, scratch dir
-    deleted (the q_incremental_neardup_docs pattern)."""
-    import shutil
-    import tempfile
-
+    inference) breaks the hash."""
     from .sources import read_csv
     p = read_parquet(spark, f"{sf_dir}/part.parquet")
-    tmp = tempfile.mkdtemp(prefix="term_spark_csv_")
-    try:
+    with scratch_dir() as tmp:
         (p.select("p_partkey", "p_brand", "p_retailprice")
           .repartition(2)
           .write.mode("overwrite").option("header", True)
@@ -3570,11 +3514,8 @@ def q_csv_source_roundtrip(spark, sf_dir) -> DataFrame:
                     F.round(F.sum(F.col("p_retailprice")
                                   .cast("decimal(25,4)")).cast("double"), 4)
                      .alias("sum_price")))
-        rows = res.collect()
-        schema = res.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema).orderBy("brand")
+        out = local_df(spark, res.collect(), res.schema)
+    return out.orderBy("brand")
 
 
 SQL_CSV_SOURCE_ROUNDTRIP = """
@@ -3599,13 +3540,9 @@ def q_json_source_roundtrip(spark, sf_dir) -> DataFrame:
     ``multiline=False`` (the NDJSON path), aggregated per priority.
     Oracle aggregates the parquet — a quoting, escaping, or inference
     asymmetry breaks the hash."""
-    import shutil
-    import tempfile
-
     from .sources import read_json
     o = read_parquet(spark, f"{sf_dir}/orders.parquet")
-    tmp = tempfile.mkdtemp(prefix="term_spark_json_")
-    try:
+    with scratch_dir() as tmp:
         (o.select("o_orderkey", "o_orderpriority", "o_totalprice")
           .repartition(2)
           .write.mode("overwrite").json(f"{tmp}/orders_json"))
@@ -3617,11 +3554,8 @@ def q_json_source_roundtrip(spark, sf_dir) -> DataFrame:
                     F.round(F.sum(F.col("o_totalprice")
                                   .cast("decimal(25,4)")).cast("double"), 4)
                      .alias("sum_price")))
-        rows = res.collect()
-        schema = res.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema).orderBy("priority")
+        out = local_df(spark, res.collect(), res.schema)
+    return out.orderBy("priority")
 
 
 SQL_JSON_SOURCE_ROUNDTRIP = """
@@ -3650,16 +3584,12 @@ def q_metrics_repository_roundtrip(spark, sf_dir) -> DataFrame:
     serialization, and the read path in one hash.  l_quantity is
     integral-valued, so min/max/mean are exact doubles — no fold-order
     noise to round away."""
-    import shutil
-    import tempfile
-
     from .core.check import Check, Level
     from .core.suite import ValidationSuite
     from .repository import ParquetRepository
 
     li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
-    tmp = tempfile.mkdtemp(prefix="term_spark_repo_")
-    try:
+    with scratch_dir() as tmp:
         repo = ParquetRepository(f"{tmp}/metrics")
         check = (Check("repo_roundtrip", Level.ERROR)
                  .has_size(lambda n: n > 0)
@@ -3673,8 +3603,6 @@ def q_metrics_repository_roundtrip(spark, sf_dir) -> DataFrame:
         stored = sorted((name, float(val.value))
                         for _, name, val in repo.query()
                         if isinstance(val.value, (int, float)))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return local_df(
         spark,
         [(n, round(v, 6)) for n, v in stored],
@@ -3754,26 +3682,18 @@ def q_incremental_bm25_docs(spark, sf_dir) -> DataFrame:
     the corpus ever being re-tokenized.  The oracle is the SAME
     full-corpus BM25 replay that checks ``bm25_topk_docs`` — the index
     path must reproduce the in-memory path score-for-score, which is
-    exactly the claim worth pinning.  Eagerly materialized, scratch
-    deleted (the q_incremental_neardup_docs pattern)."""
-    import shutil
-    import tempfile
-
+    exactly the claim worth pinning."""
     from .operators.text import bm25_topk_from_index, build_bm25_index
 
     d = _docs(spark, sf_dir)
     q = local_df(spark, _BM25_PROBES, "query_id long, query string")
-    tmp = tempfile.mkdtemp(prefix="term_spark_bm25idx_")
-    try:
+    with scratch_dir() as tmp:
         build_bm25_index(d.filter(F.col("doc_id") % 4 != 0), tmp)
         build_bm25_index(d.filter(F.col("doc_id") % 4 == 0), tmp,
                          mode="append")
         res = bm25_topk_from_index(spark, tmp, q, k=10)
-        rows = res.collect()
-        schema = res.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema).orderBy("query_id", "rank")
+        out = local_df(spark, res.collect(), res.schema)
+    return out.orderBy("query_id", "rank")
 
 
 LLM_QUERIES.update({"incremental_bm25_docs": q_incremental_bm25_docs})
@@ -3856,13 +3776,7 @@ def q_incremental_quantile_docs(spark, sf_dir) -> DataFrame:
     Spark-verified attestation the oracle pins TRUE: the merged
     estimate's rank inside the exact data lands within the two-merge
     -level bound 2*(2/k + 1/accuracy) of the requested prob, which
-    fails loudly on a lost shard, a double append, or a wrong merge.
-
-    Eagerly materialized so the scratch index is deleted before
-    returning (the q_incremental_distinct_docs pattern)."""
-    import shutil
-    import tempfile
-
+    fails loudly on a lost shard, a double append, or a wrong merge."""
     from .analyzers.quantile_index import (build_quantile_index,
                                            quantile_index_report)
 
@@ -3886,8 +3800,7 @@ def q_incremental_quantile_docs(spark, sf_dir) -> DataFrame:
                 lambda e: F.round(e, 6)).alias(f"__q_{c}")
             for c in cols]).collect()[0]
 
-    tmp = tempfile.mkdtemp(prefix="term_spark_qidx_")
-    try:
+    with scratch_dir() as tmp:
         with ThreadPoolExecutor(max_workers=1) as pool:
             exact_fut = pool.submit(_exact_rows)
             build_quantile_index(corpus, cols, tmp)
@@ -3904,11 +3817,8 @@ def q_incremental_quantile_docs(spark, sf_dir) -> DataFrame:
                        F.col("n_rows").cast("bigint").alias("n_rows"),
                        F.col("n_shards").cast("bigint").alias("n_shards"),
                        "within_bound"))
-        rows = res.collect()
-        schema = res.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema).orderBy("col_name", "p")
+        out = local_df(spark, res.collect(), res.schema)
+    return out.orderBy("col_name", "p")
 
 
 SQL_INCREMENTAL_QUANTILE_DOCS = """
@@ -4046,12 +3956,7 @@ def q_hybrid_rrf_from_index_docs(spark, sf_dir) -> DataFrame:
     exact cosine, tie-break and all).  Recall at partial nprobe is a
     DIFFERENT claim, pinned by ``ivf_index_recall_embeddings``; the
     claim THIS row pins is that the fused, index-served pipeline
-    reproduces the brute-force pipeline exactly.  Eagerly
-    materialized, scratch deleted (the q_incremental_neardup_docs
-    pattern)."""
-    import shutil
-    import tempfile
-
+    reproduces the brute-force pipeline exactly."""
     from .operators.retrieval import rrf_fuse
     from .operators.similarity import build_ivf_index, ivf_topk_from_index
     from .operators.text import bm25_topk_from_index, build_bm25_index
@@ -4063,8 +3968,7 @@ def q_hybrid_rrf_from_index_docs(spark, sf_dir) -> DataFrame:
           .select(F.col("vec_id").alias("query_id"),
                   F.col("embedding").alias("query_vec")))
     n_cents = 16
-    tmp = tempfile.mkdtemp(prefix="term_spark_hybridx_")
-    try:
+    with scratch_dir() as tmp:
         # the IVF build writes only under {tmp}/ivf and shares nothing
         # with the BM25 lifecycle, so it overlaps the two BM25 shard
         # builds from a driver thread (guide §2.6 job overlap; the
@@ -4096,11 +4000,8 @@ def q_hybrid_rrf_from_index_docs(spark, sf_dir) -> DataFrame:
                .select("query_id", F.col("nbr_id").alias("doc_id"), "rank"))
         res = rrf_fuse({"bm25": bm.select("query_id", "doc_id", "rank"),
                         "cosine": ann}, k=10)
-        rows = res.collect()
-        schema = res.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema).orderBy("query_id", "rank")
+        out = local_df(spark, res.collect(), res.schema)
+    return out.orderBy("query_id", "rank")
 
 
 LLM_QUERIES.update(
@@ -4126,9 +4027,6 @@ def q_incremental_overlap_docs(spark, sf_dir) -> DataFrame:
     Jaccard within 3·√(J(1−J)/k) + 2/k absolute of exact — trips
     loudly on a lost shard, a truncated merge, or a wrong membership
     test."""
-    import shutil
-    import tempfile
-
     from .analyzers.kmv_index import build_kmv_index, compact_kmv_index, \
         overlap_from_index
     from .operators.curation import source_overlap_report
@@ -4142,8 +4040,7 @@ def q_incremental_overlap_docs(spark, sf_dir) -> DataFrame:
                   F.explode(T.word_shingles_from(T.norm_tokens("text"), 8))
                   .alias("shingle"))
     k = 4096
-    tmp = tempfile.mkdtemp(prefix="term_spark_kmvidx_")
-    try:
+    with scratch_dir() as tmp:
         # the exact attestation report never touches the index dir, so
         # it overlaps the two shard builds + compaction from a driver
         # thread (guide §2.6 job overlap) — same jobs, same
@@ -4180,11 +4077,8 @@ def q_incremental_overlap_docs(spark, sf_dir) -> DataFrame:
                                       / F.lit(float(k))) + 2.0 / k))
                .select("source_a", "source_b", "n_a", "n_b", "n_common",
                        "jaccard", "est_ok"))
-        rows = res.collect()
-        schema = res.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema).orderBy("source_a", "source_b")
+        out = local_df(spark, res.collect(), res.schema)
+    return out.orderBy("source_a", "source_b")
 
 
 SQL_INCREMENTAL_OVERLAP_DOCS = f"""
@@ -4346,16 +4240,12 @@ def q_quantile_by_source_docs(spark, sf_dir) -> DataFrame:
     carries the EXACT per-group quantile (oracle-computable) plus the
     group-wise rank-band attestation pinned TRUE — groups never
     interact, so the bound argument applies group-wise verbatim."""
-    import shutil
-    import tempfile
-
     from .analyzers.quantile_index import (build_quantile_index,
                                            quantile_index_report)
 
     d = _docs(spark, sf_dir)
     probs = [0.25, 0.5, 0.75]
-    tmp = tempfile.mkdtemp(prefix="term_spark_qgidx_")
-    try:
+    with scratch_dir() as tmp:
         build_quantile_index(d.filter(F.col("doc_id") % 4 != 0),
                              ["n_chars"], tmp, group_col="source")
         build_quantile_index(d.filter(F.col("doc_id") % 4 == 0),
@@ -4376,11 +4266,8 @@ def q_quantile_by_source_docs(spark, sf_dir) -> DataFrame:
                        F.col("n_rows").cast("bigint").alias("n_rows"),
                        F.col("n_shards").cast("bigint").alias("n_shards"),
                        "within_bound"))
-        rows = res.collect()
-        schema = res.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_df(spark, rows, schema).orderBy("source", "p")
+        out = local_df(spark, res.collect(), res.schema)
+    return out.orderBy("source", "p")
 
 
 SQL_QUANTILE_BY_SOURCE_DOCS = """

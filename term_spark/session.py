@@ -8,6 +8,9 @@ pandas-UDF paths, sane shuffle partitioning).
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from contextlib import contextmanager
 from decimal import MAX_PREC, ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import SparkSession
@@ -56,6 +59,23 @@ def get_spark(app_name: str = "term_spark", shuffle_partitions: int = None,
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .getOrCreate()
     )
+
+
+@contextmanager
+def scratch_dir():
+    """A fresh ``term_spark_*`` directory for the life of a ``with`` block.
+
+    The one place that decides how long a scratch index lives: it is
+    removed when the block exits, also when the body raises.  A query
+    that builds and probes an index in it therefore collects what it
+    returns inside the block (``local_df(spark, res.collect(),
+    res.schema)``), so no returned plan reads the deleted directory.
+    """
+    path = tempfile.mkdtemp(prefix="term_spark_")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def local_df(spark: SparkSession, rows, schema):

@@ -375,13 +375,18 @@ def configure_gcs(spark: SparkSession,
     if service_account_json and service_account_json.lstrip().startswith("{"):
         # inline JSON: the Hadoop GCS connector only takes a file path,
         # so persist to a private temp file (the reference passes JSON
-        # straight to object_store; this is the Hadoop-side equivalent)
+        # straight to object_store; this is the Hadoop-side equivalent).
+        # The conf names the file for the rest of the process, so it is
+        # removed at interpreter exit rather than when this call returns.
+        import atexit
         import os
         import tempfile
+        from pathlib import Path
         fd, path = tempfile.mkstemp(suffix=".json", prefix="gcs_sa_")
         with os.fdopen(fd, "w") as f:
             f.write(service_account_json)
         os.chmod(path, 0o600)
+        atexit.register(Path(path).unlink, missing_ok=True)
         keyfile = path
     if keyfile:
         conf.set("google.cloud.auth.service.account.enable", "true")

@@ -57,15 +57,24 @@ def test_gcs_keyfile(spark):
     assert c.get("google.cloud.auth.service.account.json.keyfile") == "/keys/sa.json"
 
 
-def test_gcs_inline_json_lands_in_private_file(spark):
+def test_gcs_inline_json_lands_in_private_file(spark, monkeypatch):
+    import atexit
+    import os
+    registered = []
+    monkeypatch.setattr(atexit, "register",
+                        lambda fn, *a, **kw: registered.append((fn, a, kw)))
     payload = {"type": "service_account", "project_id": "p"}
     configure_gcs(spark, service_account_json=json.dumps(payload))
     path = hconf(spark).get("google.cloud.auth.service.account.json.keyfile")
     assert path.endswith(".json")
     with open(path) as f:
         assert json.load(f) == payload
-    import os
     assert (os.stat(path).st_mode & 0o777) == 0o600
+    # the key is removed at interpreter exit: run that callback now
+    assert len(registered) == 1
+    fn, args, kwargs = registered[0]
+    fn(*args, **kwargs)
+    assert not os.path.exists(path)
 
 
 def test_azure_access_key(spark):

@@ -527,3 +527,35 @@ def test_eager_lifecycle_collects_without_a_global_sort(spark, monkeypatch,
     assert plans
     assert not [p for p in plans if "rangepartitioning" in p], plans
     assert "rangepartitioning" not in plan_of(df, "simple")
+
+
+SCRATCH_INDEX_QUERIES = EAGER_LIFECYCLE_QUERIES + [
+    "equidepth_by_source_grid_docs", "equidepth_from_grid_price",
+    "ivf_index_recall_embeddings", "metrics_repository_roundtrip"]
+
+
+@pytest.mark.parametrize("name", SCRATCH_INDEX_QUERIES)
+def test_scratch_index_is_gone_after_build_and_collect(spark, monkeypatch,
+                                                       tmp_path, name):
+    """A query that builds a scratch index deletes it before it returns,
+    and the DataFrame it returns never reads it: the collect after the
+    directory is gone succeeds and leaves nothing behind."""
+    import os
+    import tempfile
+
+    from conftest import SF_DIR
+    from term_spark.queries import QUERIES
+
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    QUERIES[name](spark, SF_DIR).collect()
+    assert [p for p in made if os.path.basename(p).startswith("term_spark_")]
+    assert not [e for e in os.listdir(tmp_path)
+                if e.startswith("term_spark_")]

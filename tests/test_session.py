@@ -32,3 +32,26 @@ def test_python_workers_import_term_spark_from_another_directory(tmp_path):
                           timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert proc.stdout.split()[-2:] == ["rows", "5"], proc.stdout
+
+
+def test_scratch_dir_is_removed_on_exit_and_on_error(tmp_path, monkeypatch):
+    import tempfile
+
+    from term_spark.session import scratch_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with scratch_dir() as path:
+        assert os.path.isdir(path)
+        assert os.path.dirname(path) == str(tmp_path)
+        assert os.path.basename(path).startswith("term_spark_")
+        open(os.path.join(path, "shard"), "w").close()
+    assert not os.path.exists(path)
+
+    boom = RuntimeError("probe failed")
+    with pytest.raises(RuntimeError) as raised:
+        with scratch_dir() as path:
+            os.mkdir(os.path.join(path, "index"))
+            raise boom
+    assert raised.value is boom
+    assert not os.path.exists(path)
+    assert os.listdir(tmp_path) == []
