@@ -28,9 +28,10 @@ SF_DIR = "/root/testdata/sf0.001"
 
 HEADER = """# PLANS — physical-plan audit of all contract queries
 
-Generated by `python scripts/plan_audit.py` at {sf} (each final
-plan is audited, then collected). Columns: Spark `jobs` started while
-the query's DataFrame is built (eager build work, counted as new
+Generated by `python scripts/plan_audit.py` at {sf} on `local[4]` with
+4 shuffle partitions, the test session's setting, on any host (each
+final plan is audited, then collected). Columns: Spark `jobs` started
+while the query's DataFrame is built (eager build work, counted as new
 ungrouped job ids in `statusTracker`), `collect_jobs` started while
 the built DataFrame is collected (so work moved from build to collect
 shows), parquet scans and their projected column counts (pruning),
@@ -70,7 +71,8 @@ def main() -> None:
     from term_spark.queries import QUERIES
     from term_spark.session import get_spark
 
-    spark = get_spark("plan_audit")
+    # job counts follow the partition count, so the audit pins it
+    spark = get_spark("plan_audit", shuffle_partitions=4, master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
 
     tracker = spark.sparkContext.statusTracker()

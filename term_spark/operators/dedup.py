@@ -117,10 +117,11 @@ def _est_plan_bytes(df: DataFrame) -> int:
 
 
 def _broadcast_threshold_bytes(spark) -> int:
-    try:
-        return int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except (TypeError, ValueError):
-        return 10 * 1024 * 1024
+    """The session's ``autoBroadcastJoinThreshold`` in bytes, as Spark
+    parsed it (``'64m'`` and the unset default ``'10485760b'`` carry a
+    unit suffix); -1 when broadcasting is off."""
+    return int(spark._jsparkSession.sessionState().conf()
+               .autoBroadcastJoinThreshold())
 
 
 def _banded_pairs(sig: DataFrame, cols, bands: int,
@@ -137,10 +138,12 @@ def _banded_pairs(sig: DataFrame, cols, bands: int,
     it cannot broadcast, the planner picks a sort-merge join, and
     hinting ``merge`` explicitly lets BOTH sides share ONE exchange
     (ReuseExchange), so the signature pipeline runs once instead of
-    twice — measured at sf10 (500k docs): 76.7 s → 46.6 s; un-hinted
-    sf1 stays at its faster BHJ plan (3.8 s vs 4.8 s hinted).  The
-    branch condition derives from the session's own broadcast
-    threshold against the planner's estimate of the SOURCE corpus
+    twice — measured at sf10 (500k docs): 76.7 s → 46.6 s.  At sf1
+    the two plans tie (plans/session_confs: at Spark's 10 MB threshold
+    sf1 takes the merge branch, at 64 MB the BHJ one, and each
+    median sits inside the other's quartiles).  The branch condition
+    derives from the session's own broadcast threshold against the
+    planner's estimate of the SOURCE corpus
     (bucket rows are bands × ~52 B per doc ≈ roughly 2× the
     compressed corpus bytes), so the cutover moves with the conf, and
     an unknown estimate defaults to the merge (scale-safe) branch.

@@ -44,9 +44,8 @@ def audit_plan(df) -> Dict[str, object]:
         "pushed_filters": sum(1 for p in pushed if p.strip()),
         "exchanges": t.count("Exchange"),
         "bcast_joins": t.count("BroadcastHashJoin"),
-        # the two shuffle-side strategies, counted apart so a
-        # preferSortMergeJoin flip shows up per query (SHJ cannot spill
-        # its build side; SMJ can)
+        # the two shuffle-side strategies, counted apart: SHJ cannot
+        # spill its build side; SMJ can
         "smj_joins": t.count("SortMergeJoin"),
         "shj_joins": t.count("ShuffledHashJoin"),
         # scans of a pickled Python RDD (driver rows sent through

@@ -2535,7 +2535,10 @@ def q_brand_profile_part(spark, sf_dir) -> DataFrame:
     g = (p.groupBy(F.col("p_brand").alias("brand"))
           .agg(F.count(F.lit(1)).alias("n_parts"),
                F.countDistinct("p_type").alias("n_types"),
-               r6(F.avg("p_retailprice")).alias("avg_price"),
+               # a decimal mean is exact; a double sum's value follows
+               # the partitioning and can flip a tie at the 6th decimal
+               r6(F.avg(F.col("p_retailprice").cast("decimal(25,4)")))
+               .cast("double").alias("avg_price"),
                r6(F.avg(F.col("p_size").cast("double"))).alias("avg_size")))
     return (g.withColumn("share", r6(F.col("n_parts") /
                                      F.sum("n_parts").over(Window.partitionBy())))

@@ -1,8 +1,9 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory.
 
-Local testing runs ``local[N]``; the same conf block is what we'd ship
-on a 1000-executor cluster (AQE on, skew handling, Arrow for any
-pandas-UDF paths, sane shuffle partitioning).
+``get_spark`` sets only what differs from Spark's defaults, one reason
+per line. Adaptive execution (partition coalescing, skew-join splits)
+and sort-merge joins, which can spill, are Spark's defaults and are
+left to it.
 """
 
 from __future__ import annotations
@@ -27,34 +28,20 @@ _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def get_spark(app_name: str = "term_spark", shuffle_partitions: int = None,
               master: str = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
-    shuffle = str(shuffle_partitions or os.environ.get(
-        "TERM_SPARK_SHUFFLE_PARTITIONS", cpus))
     return (
         SparkSession.builder
         .appName(app_name)
-        .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", shuffle)
-        # start shuffles wide and let AQE coalesce down — the setting
-        # that survives a 1000-executor scale-up unchanged
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                str(max(int(shuffle) * 4, 64)))
-        # r16 (guide §3.1/§9): let the planner pick shuffled-hash join
-        # when its per-partition size conditions hold instead of
-        # defaulting to sort-merge — the size gating (build side must
-        # fit partition-local memory) is what keeps this scale-safe,
-        # and it is data-relative, not tuned to local[32].  Measured
-        # interleaved at sf10: waiting_suppliers 16.8 -> 13.1 s (the
-        # 60M-row SMJ sort disappears), every other join query neutral
-        # or slightly better, zero regressions.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .master(master or f"local[{cpus}]")
+        # one shuffle partition per core instead of Spark's 200
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        # pandas <-> Spark conversions go through Arrow
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # the testdata's TIMESTAMP(NANOS) columns read as longs;
+        # sources.read_parquet rebuilds the timestamps from them
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # local mode: the executors live in the driver JVM
         .config("spark.driver.memory", os.environ.get("TERM_SPARK_DRIVER_MEM", "8g"))
+        # nothing reads the UI in batch and test runs
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .getOrCreate()

@@ -1,11 +1,27 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("TERM_SPARK_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@contextmanager
+def conf_override(spark, key, value):
+    """Set a conf of the shared session for a ``with`` block, then put
+    back the value it had, or unset it if it had none."""
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
 
 
 @pytest.fixture(scope="session")

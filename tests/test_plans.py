@@ -14,6 +14,7 @@ import pytest
 import pyspark.sql.functions as F
 from term_spark import Assertion, Check, Level, Status, ValidationSuite
 from term_spark.telemetry import DebugContext, DebugLevel
+from tests.conftest import conf_override
 
 
 def plan_of(df, mode="formatted") -> str:
@@ -250,13 +251,16 @@ def catalog_audits(spark):
 
 def test_all_query_plans_scale_safe(catalog_audits):
     """Whole-catalog gate: no contract query may plan a cartesian
-    product, an Expand outside ROLLUP, or an unpartitioned window on
-    an unbounded row set — the three shapes that do not survive a
-    100x scale-up."""
+    product, an Expand outside ROLLUP, an unpartitioned window on an
+    unbounded row set, or a shuffled-hash join, whose build side
+    cannot spill — the four shapes that do not survive a 100x
+    scale-up."""
     failures = []
     for name, a in catalog_audits.items():
         if a["cartesian"]:
             failures.append(f"{name}: CartesianProduct")
+        if a["shj_joins"]:
+            failures.append(f"{name}: ShuffledHashJoin")
         if a["expand"] and name != "rollup_pricing":
             failures.append(f"{name}: Expand outside ROLLUP")
         if a["unpartitioned_windows"] and not a["bounded_by_limit"]:
@@ -347,12 +351,8 @@ def test_bucketed_tables_join_without_shuffle(spark, tpch):
                 .groupBy("o_orderstatus")
                 .agg(F.sum("l_quantity").alias("qty")))
     # disable broadcast so the join strategy is the bucket-aware SMJ
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_override(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
         text = plan_of(joined, "simple")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
     join_section = text.split("HashAggregate")[-1]  # below the final agg
     assert "SortMergeJoin" in text, text
     assert "Exchange" not in join_section, join_section

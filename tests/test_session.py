@@ -55,3 +55,18 @@ def test_scratch_dir_is_removed_on_exit_and_on_error(tmp_path, monkeypatch):
     assert raised.value is boom
     assert not os.path.exists(path)
     assert os.listdir(tmp_path) == []
+
+
+def test_broadcast_threshold_is_read_as_spark_parses_it(spark):
+    """The MinHash merge-hint cutover reads the threshold Spark parsed:
+    ``'64m'`` is 64 MiB (``int()`` of the string fell back to 10 MiB)
+    and ``'-1'``, broadcast off, stays -1."""
+    from term_spark.operators.dedup import _broadcast_threshold_bytes
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key, None)
+    with C.conf_override(spark, key, "64m"):
+        assert _broadcast_threshold_bytes(spark) == 67108864
+    with C.conf_override(spark, key, "-1"):
+        assert _broadcast_threshold_bytes(spark) == -1
+    assert spark.conf.get(key, None) == prior
