@@ -114,8 +114,12 @@ class FilesystemStateStore(StateStore):
         return os.path.join(self.root, f"{safe}.json")
 
     def save(self, partition: str, states: Mapping[str, str]) -> None:
-        with open(self._path(partition), "w") as f:
+        # a torn write stays under the .tmp name ``partitions`` skips and
+        # the previous state keeps serving
+        tmp = self._path(partition) + ".tmp"
+        with open(tmp, "w") as f:
             json.dump(dict(states), f)
+        os.replace(tmp, self._path(partition))
 
     def load(self, partition: str) -> Dict[str, str]:
         with open(self._path(partition)) as f:

@@ -1,47 +1,18 @@
-"""Multi-source validation + cross-run stats caching.
+"""Multi-source validation.
 
 Parity:
 - MultiSourceValidator (core/multi_source.rs:55-80): register N named
   sources, run suites against the registry; intermediate results
   LRU-bounded. Spark mapping: a dict of DataFrames + optional
   ``.cache()`` pinning with LRU eviction of the pinned set.
-- QueryOptimizer stats cache (optimizer/stats_cache.rs:26-31): TTL 300s,
-  1000 entries, keyed by (table-version, metric) — here (id(df), alias).
 """
 
 from __future__ import annotations
 
-import time
 from collections import OrderedDict
 from typing import Dict, Mapping, Optional
 
 from .suite import ValidationSuite
-
-
-class StatsCache:
-    """TTL-bounded memo of computed metric values."""
-
-    def __init__(self, ttl_seconds: float = 300.0, max_entries: int = 1000):
-        self.ttl = ttl_seconds
-        self.max_entries = max_entries
-        self._data: "OrderedDict[tuple, tuple]" = OrderedDict()
-
-    def get(self, key: tuple):
-        hit = self._data.get(key)
-        if hit is None:
-            return None
-        value, at = hit
-        if time.time() - at > self.ttl:
-            del self._data[key]
-            return None
-        self._data.move_to_end(key)
-        return value
-
-    def put(self, key: tuple, value) -> None:
-        self._data[key] = (value, time.time())
-        self._data.move_to_end(key)
-        while len(self._data) > self.max_entries:
-            self._data.popitem(last=False)
 
 
 class MultiSourceValidator:
@@ -57,7 +28,6 @@ class MultiSourceValidator:
         self.tables: Dict[str, "DataFrame"] = {}
         self.max_cached = max_cached
         self._pinned: "OrderedDict[str, DataFrame]" = OrderedDict()
-        self.stats_cache = StatsCache()
 
     def register(self, name: str, df) -> "MultiSourceValidator":
         from ..functions.security import validate_identifier

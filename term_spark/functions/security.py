@@ -2,7 +2,7 @@
 
 Parity: /root/reference/term-guard/src/security.rs:89-384 — identifier
 validation/escaping, SQL-expression screening (no statement separators,
-DML/DDL, comments), regex ReDoS screening, threshold validation. Applied
+DML/DDL, comments) and regex ReDoS screening. Applied
 before any user string reaches ``F.expr`` or a view name.
 """
 
@@ -80,11 +80,3 @@ def validate_regex_pattern(pattern: str) -> str:
     except re.error as exc:
         raise SecurityError(f"invalid regex pattern: {exc}") from exc
     return pattern
-
-
-def validate_threshold(value: float, name: str = "threshold") -> float:
-    """Thresholds / percentages must be within [0, 1] (security.rs:374-384)."""
-    v = float(value)
-    if not (0.0 <= v <= 1.0):
-        raise SecurityError(f"{name} must be within [0, 1], got {v}")
-    return v

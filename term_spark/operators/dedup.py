@@ -931,18 +931,33 @@ def remove_duplicate_chunks(df: DataFrame, text_col: str = "text",
     over the original text: the text itself never shuffles, and a
     document with nothing dropped rebuilds to its exact original
     bytes (the cuts partition the text), so the rewrite is
-    byte-identical a no-op where dedup is.
+    byte-identical a no-op where dedup is.  The index tier
+    (``remove_duplicate_chunks_against_index``) runs the same rewrite,
+    given the hashes history already holds.
     """
-    ch = cdc_chunks(df, text_col, id_col, k=k, divisor=divisor)
+    return _rewrite_chunks(df, cdc_chunks(df, text_col, id_col, k=k,
+                                          divisor=divisor),
+                           text_col, id_col)
+
+
+def _rewrite_chunks(df: DataFrame, ch: DataFrame, text_col: str,
+                    id_col: str, stored_hits: Optional[DataFrame] = None):
+    """Elect, drop and reassemble — the rewrite both CDC tiers share.
+    ``ch`` is ``df``'s ``cdc_chunks``; the first occurrence of each
+    chunk hash in (id, chunk_idx) order is kept unless the hash is in
+    ``stored_hits`` (chunk_hash, __stored), the hashes history already
+    holds.  Returns ``(cleaned_df, dropped_df)``."""
     winner = (ch.groupBy("chunk_hash")
               .agg(F.min(F.struct("id", "chunk_idx")).alias("__w")))
-    marked = (ch.join(winner, "chunk_hash")
-              .withColumn("__keep",
-                          (F.col("id") == F.col("__w.id")) &
-                          (F.col("chunk_idx") == F.col("__w.chunk_idx"))))
-    dropped = (marked.filter(~F.col("__keep"))
+    drop = ~((F.col("id") == F.col("__w.id")) &
+             (F.col("chunk_idx") == F.col("__w.chunk_idx")))
+    if stored_hits is not None:
+        ch = ch.join(stored_hits, "chunk_hash", "left")
+        drop = F.col("__stored").isNotNull() | drop
+    marked = ch.join(winner, "chunk_hash").withColumn("__drop", drop)
+    dropped = (marked.filter(F.col("__drop"))
                .select("id", "chunk_idx", "start", "length", "chunk_hash"))
-    kept = (marked.filter(F.col("__keep"))
+    kept = (marked.filter(~F.col("__drop"))
             .groupBy("id")
             .agg(F.sort_array(F.collect_list(
                 F.struct("chunk_idx", "start", "length"))).alias("__ks")))
@@ -991,11 +1006,11 @@ def remove_duplicate_chunks_against_index(spark, index_path: str, new_df,
     """Chunk-dedup a NEW batch against a persisted CDC index: chunk
     only the batch (cut params read from the index), drop every batch
     chunk whose content already lives in HISTORY (stored hash — the
-    history copy is canonical) or earlier in the batch itself (the
-    (id, chunk_idx) first-occurrence election
-    ``remove_duplicate_chunks`` uses), and reassemble each document
-    from its kept chunks in order.  Returns ``(cleaned_df,
-    dropped_df)`` with the in-memory rewrite's exact contract —
+    history copy is canonical) or earlier in the batch itself, and
+    reassemble each document from its kept chunks in order — the
+    election and reassembly are ``remove_duplicate_chunks``'s own
+    (``_rewrite_chunks``), given the stored hits.  Returns
+    ``(cleaned_df, dropped_df)`` with the in-memory rewrite's contract —
     equivalently: this IS ``remove_duplicate_chunks(history ∪ batch)``
     restricted to batch docs whenever history ids sort before batch
     ids (pinned in test_cdc_index.py), because a stored hash beats
@@ -1004,10 +1019,9 @@ def remove_duplicate_chunks_against_index(spark, index_path: str, new_df,
     Scale shape: the batch is chunked once (map-only JVM HOFs); the
     corpus-sized chunk table is touched by ONE semi-join against the
     batch's distinct hashes; the election (min-struct per hash +
-    join-back — skew-safe like the in-memory form: no per-hash window
-    partition a single task must sort) and per-doc reassembly run on
-    batch rows only.  History text is never read, never re-chunked,
-    never shuffled.
+    join-back — no per-hash window partition a single task must sort)
+    and per-doc reassembly run on batch rows only.  History text is
+    never read, never re-chunked, never shuffled.
     """
     store = IndexStore(spark, index_path)
     k, divisor = store.params["k"], store.params["divisor"]
@@ -1019,28 +1033,7 @@ def remove_duplicate_chunks_against_index(spark, index_path: str, new_df,
                          "chunk_hash", "left_semi")
                    .distinct()
                    .withColumn("__stored", F.lit(True)))
-    winner = (ch.groupBy("chunk_hash")
-              .agg(F.min(F.struct("id", "chunk_idx")).alias("__w")))
-    marked = (ch.join(stored_hits, "chunk_hash", "left")
-              .join(winner, "chunk_hash")
-              .withColumn("__drop", F.col("__stored").isNotNull()
-                          | ~((F.col("id") == F.col("__w.id")) &
-                              (F.col("chunk_idx") == F.col("__w.chunk_idx")))))
-    dropped = (marked.filter(F.col("__drop"))
-               .select("id", "chunk_idx", "start", "length", "chunk_hash"))
-    kept = (marked.filter(~F.col("__drop"))
-            .groupBy("id")
-            .agg(F.sort_array(F.collect_list(
-                F.struct("chunk_idx", "start", "length"))).alias("__ks")))
-    rebuilt = F.array_join(
-        F.transform(F.col("__ks"),
-                    lambda s: F.col(text_col).substr(
-                        s["start"].cast("int") + 1,
-                        s["length"].cast("int"))), "")
-    cleaned = (new_df.join(kept.withColumnRenamed("id", id_col), id_col)
-               .withColumn(text_col, rebuilt)
-               .select(id_col, text_col))
-    return cleaned, dropped
+    return _rewrite_chunks(new_df, ch, text_col, id_col, stored_hits)
 
 
 # ---------------------------------------------------------------------------

@@ -14,6 +14,8 @@
   LIFECYCLE — train + assign once, persist as parquet with the
   assignments partitioned by centroid id, then serve many query
   batches with partition-pruned scans (no re-training/re-assignment).
+  ``ivf_topk`` and the index share training, assignment and probing;
+  every exact-cosine search here ends in ``_exact_topk``.
 - pq_train / pq_encode / pq_topk: product quantization — m-subspace
   codebooks, vectors stored as m small codes, ADC lookup-table search.
 - ivfpq_build / ivfpq_topk: the production composition (FAISS
@@ -54,6 +56,35 @@ def with_cosine(df: DataFrame, col_a: str, col_b: str,
     return df.withColumn(out, _dot(a, b) / (_norm(a) * _norm(b)))
 
 
+def _vectors(df: DataFrame, id_col: str, vec_col: str, ids: str,
+             vec: str, nrm: str) -> DataFrame:
+    """(``ids``, ``vec``, ``nrm``): each row's id, its vector cast to
+    double and the vector's norm — both sides of every exact cosine
+    here, so a probe evaluates one dot per pair."""
+    return (df.select(F.col(id_col).alias(ids),
+                      F.transform(F.col(vec_col),
+                                  lambda x: x.cast("double")).alias(vec))
+            .withColumn(nrm, _norm(F.col(vec))))
+
+
+def _exact_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The exact-cosine top-k tail every vector search shares: score
+    each (query_id: va, na) × (nbr_id: vb, nb) pair, keep ``k`` per
+    query on (cosine desc, nbr_id asc), rank as bigint, and round the
+    cosine to 6 decimals after ranking.  Returns (query_id, nbr_id,
+    cosine, rank) — the schema ``ann_recall`` compares."""
+    from pyspark.sql import Window
+
+    scored = pairs.withColumn("cosine", _dot(F.col("va"), F.col("vb")) /
+                              (F.col("na") * F.col("nb")))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
+                                               F.asc("nbr_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= int(k))
+            .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"),
+                    F.col("rank").cast("bigint").alias("rank")))
+
+
 def cosine_pairs(df: DataFrame, id_col: str = "vec_id",
                  vec_col: str = "embedding", threshold: float = 0.9,
                  query_filter=None) -> DataFrame:
@@ -64,10 +95,7 @@ def cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     df = spread(df, id_col)   # per-row folds are CPU-heavy: use all cores
     # norms hoisted out of the pair join: O(n·d) once instead of
     # O(pairs·d) — the pair stage evaluates only the dot product
-    v = df.select(F.col(id_col).alias("id"),
-                  F.transform(F.col(vec_col),
-                              lambda x: x.cast("double")).alias("v"))
-    v = v.withColumn("nrm", _norm(F.col("v")))
+    v = _vectors(df, id_col, vec_col, "id", "v", "nrm")
     left = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
                     F.col("nrm").alias("na"))
     if query_filter is not None:
@@ -88,28 +116,10 @@ def cosine_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     """Exact top-k neighbors per query vector (brute force baseline).
     Cross join queries × corpus → windowed top-k. Broadcast the query
     side — it is small by construction."""
-    from pyspark.sql import Window
-
     from .dedup import spread
-    # per-side norms precomputed (see cosine_pairs): the q×corpus stage
-    # evaluates one dot per pair instead of dot + two norms
-    corpus = (spread(df, id_col)
-              .select(F.col(id_col).alias("nbr_id"),
-                      F.transform(F.col(vec_col),
-                                  lambda x: x.cast("double")).alias("vb")))
-    corpus = corpus.withColumn("nb", _norm(F.col("vb")))
-    q = (queries.select(F.col(query_id_col).alias("query_id"),
-                        F.transform(F.col(query_vec_col),
-                                    lambda x: x.cast("double")).alias("va"))
-         .withColumn("na", _norm(F.col("va"))))
-    scored = (F.broadcast(q).crossJoin(corpus)
-              .withColumn("cosine", _dot(F.col("va"), F.col("vb")) /
-                          (F.col("na") * F.col("nb"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"),
-                    F.col("rank").cast("bigint").alias("rank")))
+    corpus = _vectors(spread(df, id_col), id_col, vec_col, "nbr_id", "vb", "nb")
+    q = _vectors(queries, query_id_col, query_vec_col, "query_id", "va", "na")
+    return _exact_topk(F.broadcast(q).crossJoin(corpus), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: str = "term") -> List[List[float]]:
@@ -359,54 +369,55 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 5, n_centroids: int = 1
     centroids (cheap, assignment/probing shapes unchanged);
     ``train_iterations>0`` runs distributed Lloyd's k-means
     (kmeans_centroids) first — the proper index build for skewed
-    embedding distributions.
+    embedding distributions.  The same code builds and probes an IVF
+    index, so ``ivf_topk_from_index`` over ``build_ivf_index`` with
+    equal ``n_centroids``/``train_iterations``/``seed`` returns these
+    rows.
     """
+    cent_list, cents = _ivf_model(df, n_centroids, id_col, vec_col,
+                                  train_iterations, seed)
+    probes = _ivf_probes(queries, cents, nprobe, query_id_col, query_vec_col)
+    cells = _ivf_cells(df, cent_list, id_col, vec_col)
+    return _exact_topk(probes.join(cells, "cid"), k)
+
+
+def _ivf_model(df: DataFrame, n_centroids: int, id_col: str, vec_col: str,
+               train_iterations: int, seed: int):
+    """(centroid list, (cid, cvec) table) of an IVF index:
+    ``kmeans_centroids``, whose ``iterations=0`` form is the seeded
+    hash sample."""
+    trained = kmeans_centroids(df, id_col, vec_col, n_centroids,
+                               train_iterations, seed)
+    return trained, local_df(df.sparkSession,
+                             [(i, c) for i, c in enumerate(trained)],
+                             "cid long, cvec array<double>")
+
+
+def _ivf_cells(df: DataFrame, cent_list, id_col: str,
+               vec_col: str) -> DataFrame:
+    """(nbr_id, vb, cid, nb): every corpus vector cast to double, with
+    its norm and its cell.  Assignment is MAP-ONLY
+    (``with_nearest_centroid``: normalized-IP argmax ≡ cosine argmax,
+    ties to the smallest cid — no crossJoin k× row amplification, no
+    n·k sort-shuffle)."""
+    corpus = _vectors(df, id_col, vec_col, "nbr_id", "vb", "nb")
+    return (with_nearest_centroid(corpus, "vb", cent_list, metric="cosine")
+            .select("nbr_id", "vb", "cid", "nb"))
+
+
+def _ivf_probes(queries: DataFrame, cents: DataFrame, nprobe: int,
+                query_id_col: str, query_vec_col: str) -> DataFrame:
+    """(query_id, va, na, cid): each query with its ``nprobe`` nearest
+    centroids by cosine; a tie goes to the smaller cid, the rule
+    ``with_nearest_centroid`` assigns by."""
     from pyspark.sql import Window
 
-    if train_iterations > 0:
-        cent_list = kmeans_centroids(df, id_col, vec_col, n_centroids,
-                                     train_iterations, seed)
-    else:
-        cent_list = [list(r["cvec"]) for r in
-                     (df.orderBy(F.md5(F.concat(
-                         F.lit(str(seed)), F.col(id_col).cast("string"))))
-                        .limit(n_centroids)
-                        .select(F.transform(
-                            F.col(vec_col),
-                            lambda x: x.cast("double")).alias("cvec"))
-                        .collect())]
-    cents = F.broadcast(local_df(
-        df.sparkSession, [(i, c) for i, c in enumerate(cent_list)],
-        "cid long, cvec array<double>"))
-
-    corpus = df.select(F.col(id_col).alias("nbr_id"),
-                       F.transform(F.col(vec_col),
-                                   lambda x: x.cast("double")).alias("vb"))
-    # cell assignment is map-only (see with_nearest_centroid — no
-    # join/shuffle/sort); probe-stage norms computed once per corpus
-    # row / query, not per probed pair (see cosine_pairs)
-    corpus_part = (with_nearest_centroid(corpus, "vb", cent_list,
-                                         metric="cosine")
-                   .select("nbr_id", "vb", "cid",
-                           _norm(F.col("vb")).alias("nb")))
-
-    q = (queries.select(F.col(query_id_col).alias("query_id"),
-                        F.transform(F.col(query_vec_col),
-                                    lambda x: x.cast("double")).alias("va"))
-         .withColumn("na", _norm(F.col("va"))))
-    q_assigned = with_cosine(F.broadcast(q).crossJoin(cents), "va", "cvec", "csim")
-    wq = Window.partitionBy("query_id").orderBy(F.desc("csim"))
-    probes = (q_assigned.withColumn("r", F.row_number().over(wq))
-              .filter(F.col("r") <= nprobe).select("query_id", "va", "na", "cid"))
-
-    scored = (probes.join(corpus_part, "cid")
-              .withColumn("cosine", _dot(F.col("va"), F.col("vb")) /
-                          (F.col("na") * F.col("nb"))))
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (scored.withColumn("rank", F.row_number().over(wk))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"),
-                    F.col("rank").cast("bigint").alias("rank")))
+    q = _vectors(queries, query_id_col, query_vec_col, "query_id", "va", "na")
+    q_assigned = with_cosine(q.crossJoin(F.broadcast(cents)),
+                             "va", "cvec", "csim")
+    wq = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cid"))
+    return (q_assigned.withColumn("r", F.row_number().over(wq))
+            .filter(F.col("r") <= nprobe).select("query_id", "va", "na", "cid"))
 
 
 def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 16,
@@ -425,28 +436,13 @@ def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 16,
     corpus is ever read. Build once, serve many query batches
     (``ivf_topk_from_index``) with no re-training or re-assignment.
     """
-    spark = df.sparkSession
-    trained = kmeans_centroids(df, id_col, vec_col, n_centroids,
-                               train_iterations, seed)
-    cents = local_df(
-        spark, [(i, c) for i, c in enumerate(trained)],
-        "cid long, cvec array<double>")
-
-    corpus = df.select(F.col(id_col).alias("nbr_id"),
-                       F.transform(F.col(vec_col),
-                                   lambda x: x.cast("double")).alias("vb"))
-    # cell assignment is MAP-ONLY (with_nearest_centroid: normalized-IP
-    # argmax ≡ cosine argmax, ties to smallest cid — the same contract
-    # the old crossJoin + per-id window produced, minus the k× row
-    # amplification and the n·k sort-shuffle; round 10 moved IVF-PQ to
-    # this primitive, round 11 moves the IVF build too).  Norms persist
-    # with the assignment — serving evaluates one dot per probed pair.
-    assigned = with_nearest_centroid(corpus, "vb", trained,
-                                     out="cid", metric="cosine")
-    IndexStore(spark, path).write(
+    trained, cents = _ivf_model(df, n_centroids, id_col, vec_col,
+                                train_iterations, seed)
+    # norms persist with the assignment — serving evaluates one dot per
+    # probed pair
+    IndexStore(df.sparkSession, path).write(
         {"centroids": cents.coalesce(1),
-         "assignments": assigned.select("nbr_id", "vb", "cid",
-                                        _norm(F.col("vb")).alias("nb"))},
+         "assignments": _ivf_cells(df, trained, id_col, vec_col)},
         {}, partition_by={"assignments": "cid"})
 
 
@@ -470,92 +466,11 @@ def ivf_topk_from_index(spark, path: str, queries: DataFrame, k: int = 5,
     assignments scan as an IN filter, so parquet partition pruning
     skips every unprobed centroid's files.
     """
-    from pyspark.sql import Window
-
     cents, assignments = load_ivf_index(spark, path)
-    cents = F.broadcast(cents)
-    q = (queries.select(F.col(query_id_col).alias("query_id"),
-                        F.transform(F.col(query_vec_col),
-                                    lambda x: x.cast("double")).alias("va"))
-         .withColumn("na", _norm(F.col("va"))))
-    q_assigned = with_cosine(q.crossJoin(cents), "va", "cvec", "csim")
-    wq = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cid"))
-    probes = (q_assigned.withColumn("r", F.row_number().over(wq))
-              .filter(F.col("r") <= nprobe).select("query_id", "va", "na", "cid"))
-
+    probes = _ivf_probes(queries, cents, nprobe, query_id_col, query_vec_col)
     probed_cids = [r["cid"] for r in probes.select("cid").distinct().collect()]
     pruned = assignments.filter(F.col("cid").isin(probed_cids))
-
-    scored = (probes.join(pruned, "cid")
-              .withColumn("cosine", _dot(F.col("va"), F.col("vb")) /
-                          (F.col("na") * F.col("nb"))))
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (scored.withColumn("rank", F.row_number().over(wk))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"),
-                    F.col("rank").cast("bigint").alias("rank")))
-
-
-def cosine_topk_pandas(df: DataFrame, queries: DataFrame, k: int = 5,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       query_id_col: str = "query_id",
-                       query_vec_col: str = "query_vec") -> DataFrame:
-    """Arrow-vectorized brute-force top-k: the query matrix (small by
-    construction) ships to every executor; each Arrow batch of corpus
-    vectors scores against ALL queries with one numpy matmul, emitting
-    per-batch top-k candidates; a final small groupBy reduces
-    per-batch candidates to global top-k per query.
-
-    This is the scale shape for wide embeddings (d ≫ 64): one
-    O(batch×d×Q) GEMM per batch instead of per-row array folds, and
-    only batches×Q×k candidate rows shuffle.
-    """
-    import numpy as np
-    from pyspark.sql import Window
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
-    q_rows = queries.select(query_id_col, query_vec_col).collect()
-    q_ids = np.array([r[query_id_col] for r in q_rows])
-    q_mat = np.array([list(r[query_vec_col]) for r in q_rows], dtype=np.float64)
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    sc = df.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, q_norm))
-
-    out_schema = StructType([
-        StructField("query_id", LongType()),
-        StructField("nbr_id", LongType()),
-        StructField("cosine", DoubleType()),
-    ])
-
-    def score(batches):
-        import pandas as pd
-        ids, qn = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            c_norm = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = qn @ c_norm.T                      # Q × batch
-            nbr = pdf[id_col].to_numpy()
-            take = min(k, sims.shape[1])
-            idx = np.argpartition(-sims, take - 1, axis=1)[:, :take]
-            rows = {
-                "query_id": np.repeat(ids, take),
-                "nbr_id": nbr[idx].ravel(),
-                "cosine": np.take_along_axis(sims, idx, axis=1).ravel(),
-            }
-            yield pd.DataFrame(rows)
-
-    from .dedup import spread
-    # one input partition = ONE Arrow worker; spread so every core GEMMs
-    candidates = (spread(df, id_col)
-                  .select(id_col, vec_col).mapInPandas(score, out_schema))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (candidates.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "nbr_id", F.round("cosine", 6).alias("cosine"),
-                    "rank"))
+    return _exact_topk(probes.join(pruned, "cid"), k)
 
 
 def semantic_dedup_pairs(df: DataFrame, id_col: str = "vec_id",
@@ -1297,35 +1212,18 @@ def ivfpq_topk_refined(df: DataFrame, codes: DataFrame, queries: DataFrame,
     Returns (query_id, nbr_id, cosine, rank) — the same schema as
     ``cosine_topk``, so ``ann_recall`` compares either directly.
     """
-    from pyspark.sql import Window
-
     cand = ivfpq_topk(codes, queries, model, k=max(k, refine_factor * k),
                       nprobe=nprobe, id_col=codes_id_col, code_col=code_col,
                       query_id_col=query_id_col,
                       query_vec_col=query_vec_col)
-    corpus = (df.select(F.col(id_col).alias("nbr_id"),
-                        F.transform(F.col(vec_col),
-                                    lambda x: x.cast("double")).alias("vb"))
-              .withColumn("nb", _norm(F.col("vb"))))
-    q = (queries.select(F.col(query_id_col).alias("query_id"),
-                        F.transform(F.col(query_vec_col),
-                                    lambda x: x.cast("double")).alias("va"))
-         .withColumn("na", _norm(F.col("va"))))
+    corpus = _vectors(df, id_col, vec_col, "nbr_id", "vb", "nb")
+    q = _vectors(queries, query_id_col, query_vec_col, "query_id", "va", "na")
     shortlist = (corpus
                  .join(F.broadcast(cand.select(
                      F.col(query_id_col).alias("query_id"), "nbr_id")),
                      "nbr_id")
-                 .join(F.broadcast(q), "query_id")
-                 .withColumn("cosine", _dot(F.col("va"), F.col("vb")) /
-                             (F.col("na") * F.col("nb"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("nbr_id"))
-    return (shortlist.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "nbr_id",
-                    F.round("cosine", 6).alias("cosine"),
-                    F.col("rank").cast("bigint").alias("rank"))
-            .orderBy("query_id", "rank"))
+                 .join(F.broadcast(q), "query_id"))
+    return _exact_topk(shortlist, k).orderBy("query_id", "rank")
 
 
 def build_ivfpq_index(df: DataFrame, path: str, id_col: str = "vec_id",
@@ -1763,10 +1661,7 @@ def sq8_topk_refined(df: DataFrame, codes: DataFrame, queries: DataFrame,
     """
     from pyspark.sql import Window
 
-    q = (queries.select(F.col(query_id_col).alias("query_id"),
-                        F.transform(F.col(query_vec_col),
-                                    lambda x: x.cast("double")).alias("va"))
-         .withColumn("na", _norm(F.col("va"))))
+    q = _vectors(queries, query_id_col, query_vec_col, "query_id", "va", "na")
     cd = codes.select("id", F.transform(F.col("codes"),
                                         lambda x: x.cast("double"))
               .alias("cb"), "scale", "norm")
@@ -1780,21 +1675,9 @@ def sq8_topk_refined(df: DataFrame, codes: DataFrame, queries: DataFrame,
     shortlist = (approx.withColumn("__r", F.row_number().over(w))
                  .filter(F.col("__r") <= kk)
                  .select("query_id", F.col("id").alias("nbr_id")))
-    corpus = (df.select(F.col(id_col).alias("nbr_id"),
-                        F.transform(F.col(vec_col),
-                                    lambda x: x.cast("double")).alias("vb"))
-              .withColumn("nb", _norm(F.col("vb"))))
-    rescored = (corpus.join(F.broadcast(shortlist), "nbr_id")
-                .join(F.broadcast(q), "query_id")
-                .withColumn("cos_raw",
-                            _dot(F.col("va"), F.col("vb"))
-                            / (F.col("na") * F.col("nb"))))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("nbr_id").asc())
-    return (rescored.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= int(k))
-            .select("query_id", "nbr_id",
-                    F.round(F.col("cos_raw"), 6).alias("cosine"), "rank"))
+    corpus = _vectors(df, id_col, vec_col, "nbr_id", "vb", "nb")
+    return _exact_topk(corpus.join(F.broadcast(shortlist), "nbr_id")
+                       .join(F.broadcast(q), "query_id"), k)
 
 
 def embedding_quality_summary(df: DataFrame, vec_col: str = "embedding",

@@ -147,14 +147,6 @@ def fingerprint(column: str) -> "F.Column":
     return F.md5(normalize_text(column)).alias("fingerprint")
 
 
-def char_ngrams(column: str, n: int = 5) -> "F.Column":
-    """Array of character n-grams via slicing (JVM-side, no UDF)."""
-    col = F.col(column)
-    # sequence of start positions 1..len-n+1; substring per position
-    starts = F.sequence(F.lit(1), F.greatest(F.length(col) - (n - 1), F.lit(1)))
-    return F.transform(starts, lambda i: col.substr(i, F.lit(n))).alias(f"char_{n}grams")
-
-
 def word_shingles_from(toks_col: "F.Column", k: int = 3) -> "F.Column":
     """k-word shingles from an ALREADY-MATERIALIZED token-array column
     of NORMALIZED tokens (``norm_tokens`` output — no token contains
@@ -1417,48 +1409,73 @@ def bm25_topk(df, queries, text_col: str = "text", id_col: str = "doc_id",
     Scale shape: corpus side is the same (doc, term) hash-agg postings
     table TF-IDF builds (one explode + one combine-heavy groupBy —
     term-keyed, shuffles like any key at 100 TB); the QUERY side is
-    small by contract and broadcast, so the postings join prunes to
-    matching-term rows at the probe (no full-corpus pass per query);
+    small by contract and broadcast, so a broadcast semi join prunes
+    the postings to matching-term rows and per-term df aggregates over
+    those rows only (no full-corpus df pass per query);
     per-(query, doc) scores hash-agg on a bounded key set; the final
     top-k window partitions by query_id over only the matched docs.
     N and avgdl ride a broadcast 1-row aggregate — no driver collect,
-    no UDF anywhere.
+    no UDF anywhere.  ``bm25_topk_from_index`` runs the same scorer
+    over persisted postings.
     """
+    tf, dl = _bm25_tables(df, text_col, id_col)
+    return (_bm25_score(tf, dl, queries, query_id_col, query_col, k, k1, b)
+            .withColumnRenamed("doc_id", id_col))
+
+
+def _bm25_tables(df, text_col: str, id_col: str):
+    """The corpus side of a BM25 score, as (postings, doclens):
+    (doc_id, term, tf) from one explode + one map-side-combined
+    (doc, term) groupBy, and (doc_id, dl).  Both rows are doc-local."""
+    base = df.filter(F.col(text_col).isNotNull())
+    ex = base.select(F.col(id_col).alias("doc_id"),
+                     F.explode(norm_tokens(text_col)).alias("term"))
+    return (ex.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")),
+            base.select(F.col(id_col).alias("doc_id"),
+                        F.size(norm_tokens(text_col)).cast("double")
+                        .alias("dl")))
+
+
+def _bm25_score(tf, dl, queries, query_id_col: str, query_col: str,
+                k: int, k1: float, b: float):
+    """BM25 top-``k`` over postings ``tf`` and doclens ``dl`` — the one
+    scorer ``bm25_topk`` and ``bm25_topk_from_index`` share.  The query
+    batch broadcasts, the postings prune to the batch's terms via a
+    broadcast semi join, per-term df aggregates over exactly those rows
+    (they ARE every posting for those terms), and N/avgdl ride a 1-row
+    aggregate over doclens."""
     if k <= 0:
         raise ValueError(f"k must be > 0, got {k}")
     if k1 < 0 or not 0 <= b <= 1:
         raise ValueError(f"need k1 >= 0 and 0 <= b <= 1, got {k1}, {b}")
     from pyspark.sql import Window
-    base = df.filter(F.col(text_col).isNotNull())
-    ex = base.select(F.col(id_col), F.explode(norm_tokens(text_col))
-                     .alias("term"))
-    tf = ex.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    docfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    dl = base.select(F.col(id_col),
-                     F.size(norm_tokens(text_col)).cast("double")
-                     .alias("dl"))
-    stats = base.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.avg(F.size(norm_tokens(text_col))).alias("__avgdl"))
-    qt = (queries.select(F.col(query_id_col).alias("query_id"),
-                         F.explode(norm_tokens(query_col)).alias("term"))
-          .groupBy("query_id", "term")
+
+    stats = dl.agg(F.count(F.lit(1)).alias("__n"),
+                   F.avg("dl").alias("__avgdl"))
+    q_terms = queries.select(F.col(query_id_col).alias("query_id"),
+                             F.explode(norm_tokens(query_col)).alias("term"))
+    qt = (q_terms.groupBy("query_id", "term")
           .agg(F.count(F.lit(1)).alias("qtf")))
+    # the semi join's build side is the raw term list, not qt: map-only,
+    # so the pruning costs no shuffle of the query batch
+    pruned = tf.join(F.broadcast(q_terms.select("term")), "term",
+                     "left_semi")
+    docfreq = pruned.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     idf = F.round(F.log(
         1.0 + (F.col("__n") - F.col("df") + 0.5) / (F.col("df") + 0.5)), 6)
     contrib = (F.col("qtf") * F.col("__idf") *
                F.col("tf") * (k1 + 1.0) /
                (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") /
                                     F.col("__avgdl"))))
-    scored = (tf.join(F.broadcast(qt), "term")
-                .join(docfreq, "term")
-                .join(dl, id_col)
-                .crossJoin(F.broadcast(stats))
-                .withColumn("__idf", idf)
-                .groupBy("query_id", id_col)
-                .agg(F.round(F.sum(contrib), 6).alias("score")))
+    scored = (pruned.join(F.broadcast(qt), "term")
+              .join(docfreq, "term")
+              .join(dl, "doc_id")
+              .crossJoin(F.broadcast(stats))
+              .withColumn("__idf", idf)
+              .groupBy("query_id", "doc_id")
+              .agg(F.round(F.sum(contrib), 6).alias("score")))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc(id_col))
+                                               F.asc("doc_id"))
     return (scored.withColumn("rank",
                               F.row_number().over(w).cast("bigint"))
                   .filter(F.col("rank") <= int(k)))
@@ -1848,18 +1865,12 @@ def build_bm25_index(df, index_path: str, text_col: str = "text",
     unique across shards (the same ingest contract as every tier).
 
     Scale shape: one explode + one map-side-combined (doc, term)
-    groupBy per shard — the exact postings pass ``bm25_topk`` runs,
-    now amortized across every future query batch.
+    groupBy per shard — the postings pass ``bm25_topk`` runs
+    (``_bm25_tables``), now amortized across every future query batch.
     """
-    base = df.filter(F.col(text_col).isNotNull())
-    ex = base.select(F.col(id_col).alias("doc_id"),
-                     F.explode(norm_tokens(text_col)).alias("term"))
+    tf, dl = _bm25_tables(df, text_col, id_col)
     IndexStore(df.sparkSession, index_path).write(
-        {"postings": ex.groupBy("doc_id", "term")
-                       .agg(F.count(F.lit(1)).alias("tf")),
-         "doclens": base.select(F.col(id_col).alias("doc_id"),
-                                F.size(norm_tokens(text_col))
-                                .cast("double").alias("dl"))},
+        {"postings": tf, "doclens": dl},
         {"tokenizer": BM25_TOKENIZER_TAG}, mode)
 
 
@@ -1868,51 +1879,15 @@ def bm25_topk_from_index(spark, index_path: str, queries,
                          query_col: str = "query",
                          k: int = 10, k1: float = 1.2,
                          b: float = 0.75):
-    """Serve BM25 top-k from a persisted postings index — score-for-
-    score identical to ``bm25_topk`` over the same corpus (pinned by
-    test), with the corpus work already paid: the query batch
-    broadcasts, the postings scan prunes to matching-term rows via the
-    broadcast join, per-term df aggregates over exactly those rows
-    (they ARE every posting for those terms), and N/avgdl ride a 1-row
-    aggregate over doclens.  The corpus text is never read — a query
-    batch against a 100 TB corpus touches the postings of its own
-    terms plus a doc-length table.
+    """Serve BM25 top-k from a persisted postings index: the stored
+    postings and doclens go through the scorer ``bm25_topk`` uses, so
+    the corpus work is already paid.  The corpus text is never read —
+    a query batch against a 100 TB corpus touches the postings of its
+    own terms plus a doc-length table.
     """
-    if k <= 0:
-        raise ValueError(f"k must be > 0, got {k}")
-    if k1 < 0 or not 0 <= b <= 1:
-        raise ValueError(f"need k1 >= 0 and 0 <= b <= 1, got {k1}, {b}")
-    from pyspark.sql import Window
-
     store = IndexStore(spark, index_path)
-    tf, dl = store.read("postings"), store.read("doclens")
-    stats = dl.agg(F.count(F.lit(1)).alias("__n"),
-                   F.avg("dl").alias("__avgdl"))
-    qt = (queries.select(F.col(query_id_col).alias("query_id"),
-                         F.explode(norm_tokens(query_col)).alias("term"))
-          .groupBy("query_id", "term")
-          .agg(F.count(F.lit(1)).alias("qtf")))
-    pruned = tf.join(F.broadcast(qt.select("term").distinct()), "term",
-                     "left_semi")
-    docfreq = pruned.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.round(F.log(
-        1.0 + (F.col("__n") - F.col("df") + 0.5) / (F.col("df") + 0.5)), 6)
-    contrib = (F.col("qtf") * F.col("__idf") *
-               F.col("tf") * (k1 + 1.0) /
-               (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") /
-                                    F.col("__avgdl"))))
-    scored = (pruned.join(F.broadcast(qt), "term")
-              .join(docfreq, "term")
-              .join(dl, "doc_id")
-              .crossJoin(F.broadcast(stats))
-              .withColumn("__idf", idf)
-              .groupBy("query_id", "doc_id")
-              .agg(F.round(F.sum(contrib), 6).alias("score")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("doc_id"))
-    return (scored.withColumn("rank",
-                              F.row_number().over(w).cast("bigint"))
-                  .filter(F.col("rank") <= int(k)))
+    return _bm25_score(store.read("postings"), store.read("doclens"),
+                       queries, query_id_col, query_col, k, k1, b)
 
 
 def compact_bm25_index(spark, index_path: str,

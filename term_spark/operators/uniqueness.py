@@ -44,10 +44,6 @@ def _distinct_key(columns: Sequence[str], null_handling: str = "exclude") -> "F.
     return F.struct(*[F.col(c) for c in columns])
 
 
-def _distinct_expr(columns: Sequence[str], null_handling: str = "exclude") -> "F.Column":
-    return F.count_distinct(_distinct_key(columns, null_handling))
-
-
 class UniquenessConstraint(Constraint):
     """Modes: full (threshold), distinctness, unique_with_nulls_include,
     unique_with_nulls_distinct, primary_key — all scalar-shaped."""

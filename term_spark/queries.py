@@ -2565,7 +2565,9 @@ def q_supplier_stats_by_nation(spark, sf_dir) -> DataFrame:
                    s["s_nationkey"] == n["n_nationkey"], "left")
              .groupBy(F.col("n_name").alias("nation"))
              .agg(F.count(F.lit(1)).alias("n_suppliers"),
-                  r6(F.avg("s_acctbal")).alias("avg_acctbal"),
+                  # a decimal mean is exact (see q_brand_profile_part)
+                  r6(F.avg(F.col("s_acctbal").cast("decimal(25,4)")))
+                  .cast("double").alias("avg_acctbal"),
                   r6(F.min("s_acctbal")).alias("min_acctbal"),
                   r6(F.max("s_acctbal")).alias("max_acctbal"))
              .orderBy("nation"))

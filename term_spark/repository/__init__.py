@@ -148,8 +148,11 @@ class ParquetRepository(MetricsRepository):
             "kind": [v.kind for v in metrics.values()],
             "value": [json.dumps(v.value) for v in metrics.values()],
         }
-        pq.write_table(pa.table(rows),
-                       os.path.join(self.path, f"{key.timestamp:.6f}_{uuid.uuid4().hex[:8]}.parquet"))
+        final = os.path.join(
+            self.path, f"{key.timestamp:.6f}_{uuid.uuid4().hex[:8]}.parquet")
+        # a torn write stays under the .tmp name ``_files`` skips
+        pq.write_table(pa.table(rows), final + ".tmp")
+        os.replace(final + ".tmp", final)
 
     def _load_all(self):
         """Reads each committed file once and decodes whole columns."""

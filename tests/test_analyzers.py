@@ -223,6 +223,29 @@ def test_psi_between_states_matches_operator(spark):
     assert from_states == pytest.approx(operator, abs=1e-6)
 
 
+def test_state_store_crash_mid_save_keeps_the_earlier_state(tmp_path,
+                                                            monkeypatch):
+    """A state save that dies mid-write leaves the partition's previous
+    state readable and lists no half-written partition."""
+    import json
+
+    store = FilesystemStateStore(str(tmp_path / "states"))
+    store.save("day1", {"m": "v1"})
+
+    def torn_dump(obj, f, *a, **kw):
+        f.write('{"m": "v')
+        raise OSError("device lost mid-write")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="mid-write"):
+        store.save("day1", {"m": "v2"})
+    with pytest.raises(OSError, match="mid-write"):
+        store.save("day2", {"m": "v1"})
+    monkeypatch.undo()
+    assert store.load("day1") == {"m": "v1"}
+    assert store.partitions() == ["day1"]
+
+
 def test_bucket_distribution_incremental_roundtrip(spark, tmp_path):
     import math as _m
 

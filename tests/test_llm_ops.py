@@ -349,18 +349,6 @@ def test_multimodal_header_codec_decodes_wav_mp4(spark):
     )["width"] is None
 
 
-def test_cosine_topk_pandas_matches_exact(spark, tpch):
-    """Arrow-vectorized GEMM path must equal the JVM fold path."""
-    emb = tpch["embeddings"]
-    queries = (emb.filter("vec_id < 3")
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("query_vec")))
-    corpus = emb.filter("vec_id >= 3")
-    exact = S.cosine_topk(corpus, queries, k=4).collect()
-    fast = S.cosine_topk_pandas(corpus, queries, k=4).collect()
-    assert sorted(map(tuple, exact)) == sorted(map(tuple, fast))
-
-
 def test_curate_corpus_pipeline(spark):
     from term_spark.operators.curation import curate_corpus
 
@@ -717,6 +705,52 @@ def test_ivf_index_persist_roundtrip(spark, tmp_path):
     plan = (assignments.filter(F.col("cid").isin([0, 1]))
             ._jdf.queryExecution().executedPlan().toString())
     assert "PartitionFilters" in plan and "cid" in plan
+
+
+def _ivf_both_ways(spark, df, queries, path, **kw):
+    """(ivf_topk rows, ivf_topk_from_index rows over build_ivf_index)
+    for the same centroid count, training and probe settings."""
+    build_kw = {a: kw[a] for a in ("n_centroids", "train_iterations")}
+    S.build_ivf_index(df, path, **build_kw)
+    served = S.ivf_topk_from_index(spark, path, queries, k=kw["k"],
+                                   nprobe=kw["nprobe"])
+    return (sorted(map(tuple, S.ivf_topk(df, queries, **kw).collect())),
+            sorted(map(tuple, served.collect())))
+
+
+@pytest.mark.parametrize("train_iterations", [0, 2])
+def test_ivf_topk_equals_its_index_probe(spark, tmp_path, train_iterations):
+    """The in-memory search and the probe of the index built with the
+    same settings return the same rows, partial nprobe included."""
+    import random
+    rng = random.Random(11)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(6)]) for i in range(48)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = df.filter("vec_id < 4").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+    in_memory, served = _ivf_both_ways(
+        spark, df, queries, str(tmp_path / "ivf"), k=4, n_centroids=6,
+        nprobe=2, train_iterations=train_iterations)
+    assert in_memory == served and len(served) == 16
+
+
+@pytest.mark.parametrize("train_iterations", [0, 2])
+def test_ivf_probe_ties_go_to_the_smaller_cid(spark, tmp_path,
+                                              train_iterations):
+    """Two directions, three copies each, four centroids: at least two
+    sampled centroids are the same vector, so a query's centroid
+    similarities tie.  Assignment puts the copies in the smallest tied
+    cid, so a one-cell probe must pick that cid to find them."""
+    rows = [(i, [1.0, 2.0] if i % 2 else [3.0, 1.0]) for i in range(6)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = spark.createDataFrame(
+        [(0, [1.0, 2.0]), (1, [3.0, 1.0])],
+        "query_id long, query_vec array<float>")
+    exact = sorted(map(tuple, S.cosine_topk(df, queries, k=3).collect()))
+    in_memory, served = _ivf_both_ways(
+        spark, df, queries, str(tmp_path / "ivf"), k=3, n_centroids=4,
+        nprobe=1, train_iterations=train_iterations)
+    assert in_memory == served == exact and len(exact) == 6
 
 
 def test_decontamination_exact_and_ngram(spark):

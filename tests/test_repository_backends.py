@@ -283,3 +283,27 @@ def test_parquet_reads_each_file_once_per_call(tmp_path, monkeypatch):
         assert sorted(reads) == repo._files(), name
         assert result, name
     assert repo.series("size") == [float(i) for i in range(n)]
+
+
+def test_parquet_save_crash_serves_the_earlier_state(tmp_path, monkeypatch):
+    """A save that dies mid-write leaves nothing the readers list: the
+    next read serves the runs saved before it."""
+    import pyarrow.parquet as pq
+
+    repo = ParquetRepository(str(tmp_path / "pq"))
+    first = ResultKey.of(1000.0, env="prod")
+    repo.save(first, {"size": MetricValue.long(1)})
+
+    def torn_write(table, where, *a, **kw):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise OSError("device lost mid-write")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    with pytest.raises(OSError, match="mid-write"):
+        repo.save(ResultKey.of(1001.0, env="prod"),
+                  {"size": MetricValue.long(2)})
+    monkeypatch.undo()
+    assert repo.keys() == [first]
+    assert repo.series("size") == [1.0]
+    assert repo.load(first)["size"].value == 1

@@ -49,3 +49,14 @@ def test_sq8_refined_matches_exact_topk(spark):
     key = lambda rows: sorted((r["query_id"], r["rank"], r["nbr_id"],
                                r["cosine"]) for r in rows)
     assert key(got) == key(exact)
+
+
+def test_sq8_refined_schema_is_cosine_topk_schema(spark):
+    """Same column names and types as the exact search (bigint rank),
+    so ``ann_recall`` and unions compare either side directly."""
+    corpus = _vecs(spark, n=20).filter(F.col("vec_id") >= 2)
+    queries = (_vecs(spark, n=2)
+               .select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("query_vec")))
+    got = sq8_topk_refined(corpus, sq8_quantize(corpus), queries, k=3)
+    assert got.dtypes == cosine_topk(corpus, queries, k=3).dtypes
