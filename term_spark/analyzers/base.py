@@ -379,58 +379,103 @@ class CorrelationAnalyzer(Analyzer):
         return MetricValue.double(cov / math.sqrt(vx * vy))
 
 
-class ApproxCountDistinctAnalyzer(Analyzer):
-    """Mergeable HLL state via Spark 3.5+ ``hll_sketch_agg`` — the
-    binary sketch is the state; merging unions sketches (needs a
-    SparkSession, passed to merge via the incremental runner).
-    Falls back to non-mergeable approx_count_distinct if unavailable."""
+#: the (key, blob) rows the driver-side HLL union and estimate read
+_HLL_ROWS = "key string, blob binary"
 
-    name = "approx_count_distinct"
 
-    def __init__(self, column: str, lg_k: int = 12):
+def hll_lg_k(lg_k) -> int:
+    """``lg_k`` as an int, or ``ValueError`` outside the [4, 21] that
+    ``hll_sketch_agg`` accepts — checked where a sketch is configured,
+    so a bad value fails there and not inside a Spark job."""
+    if not 4 <= int(lg_k) <= 21:
+        raise ValueError(f"lgk must be in [4, 21], got {lg_k}")
+    return int(lg_k)
+
+
+def hll_sketch(column: str, lg_k: int) -> "F.Column":
+    """The HLL sketch aggregate every HLL state is built from.  Values
+    are cast to string, so numeric and string columns share one item
+    domain: the estimate counts distinct string forms, which equals
+    ``COUNT(DISTINCT col)`` for any injective cast."""
+    return F.hll_sketch_agg(F.col(column).cast("string"),
+                            F.lit(hll_lg_k(lg_k)))
+
+
+def hll_union(spark, rows):
+    """``(key, blob)`` sketch rows to one ``(key, blob)`` row per key
+    holding the union of that key's sketches, as a lazy DataFrame:
+    collecting it is one job, and so is ``hll_estimate`` of it."""
+    return (local_df(spark, rows, _HLL_ROWS).groupBy("key")
+            .agg(F.hll_union_agg("blob").alias("blob")))
+
+
+def hll_estimate(spark, rows) -> Dict[str, int]:
+    """``{key: estimate}`` of ``(key, blob)`` sketch rows, given as a
+    list or as ``hll_union``'s DataFrame, in one job."""
+    if isinstance(rows, list):
+        rows = local_df(spark, rows, _HLL_ROWS)
+    return {r["key"]: int(r["est"]) for r in rows.select(
+        "key", F.hll_sketch_estimate("blob").alias("est")).collect()}
+
+
+class _HllAnalyzer(Analyzer):
+    """An analyzer whose state carries an HLL sketch, base64-encoded so
+    the state stays JSON.  Merging and estimating run a driver-side
+    Spark job, so the runner binds a session with ``bind_spark``."""
+
+    def __init__(self, column: str, lg_k: int):
         self.column = validate_identifier(column)
-        self.lg_k = lg_k
-        self._sk = metric_alias("an_hll", column, lg_k)
+        self.lg_k = hll_lg_k(lg_k)
         self._spark = None  # bound by runner for merge
-
-    def state_exprs(self):
-        return {self._sk: F.hll_sketch_agg(F.col(self.column).cast("string"),
-                                           F.lit(self.lg_k))}
-
-    def state_from_row(self, row):
-        raw = row[self._sk]
-        b64 = base64.b64encode(bytes(raw)).decode() if raw is not None else None
-        return AnalyzerState(sketch=b64)
 
     def bind_spark(self, spark):
         self._spark = spark
         return self
 
+    def _sketch_rows(self, sketches):
+        """base64 sketches as (key, blob) rows, after the session check."""
+        if self._spark is None:
+            raise RuntimeError(f"{self.name} needs a SparkSession "
+                               "(bind_spark)")
+        return [(self.column, base64.b64decode(s)) for s in sketches]
+
+    @staticmethod
+    def _b64(raw):
+        return base64.b64encode(bytes(raw)).decode() if raw is not None else None
+
+
+class ApproxCountDistinctAnalyzer(_HllAnalyzer):
+    """Mergeable HLL state via Spark 3.5+ ``hll_sketch_agg`` — the
+    binary sketch is the state; merging unions sketches (needs a
+    SparkSession, passed to merge via the incremental runner)."""
+
+    name = "approx_count_distinct"
+
+    def __init__(self, column: str, lg_k: int = 12):
+        super().__init__(column, lg_k)
+        self._sk = metric_alias("an_hll", column, lg_k)
+
+    def state_exprs(self):
+        return {self._sk: hll_sketch(self.column, self.lg_k)}
+
+    def state_from_row(self, row):
+        return AnalyzerState(sketch=self._b64(row[self._sk]))
+
     def merge_states(self, states):
         sketches = [s["sketch"] for s in states if s.get("sketch")]
-        if not sketches:
-            return AnalyzerState(sketch=None)
-        if len(sketches) == 1:
-            return AnalyzerState(sketch=sketches[0])
-        if self._spark is None:
-            raise RuntimeError("HLL merge needs a SparkSession (bind_spark)")
-        df = local_df(self._spark, [(s,) for s in sketches], "b64 string")
-        row = df.select(F.hll_union_agg(F.unbase64("b64")).alias("u")).collect()[0]
-        return AnalyzerState(
-            sketch=base64.b64encode(bytes(row["u"])).decode())
+        if len(sketches) <= 1:
+            return AnalyzerState(sketch=sketches[0] if sketches else None)
+        row = hll_union(self._spark, self._sketch_rows(sketches)).collect()[0]
+        return AnalyzerState(sketch=self._b64(row["blob"]))
 
     def metric_from_state(self, state):
         if not state.get("sketch"):
             return MetricValue.long(0)
-        if self._spark is None:
-            raise RuntimeError("HLL estimate needs a SparkSession (bind_spark)")
-        df = local_df(self._spark, [(state["sketch"],)], "b64 string")
-        row = df.select(
-            F.hll_sketch_estimate(F.unbase64("b64")).alias("est")).collect()[0]
-        return MetricValue.long(int(row["est"]))
+        est = hll_estimate(self._spark, self._sketch_rows([state["sketch"]]))
+        return MetricValue.long(est[self.column])
 
 
-class DistinctnessAnalyzer(Analyzer):
+class DistinctnessAnalyzer(_HllAnalyzer):
     """Distinct/total ratio (basic/distinctness.rs). The exact distinct
     count is not a mergeable scalar, so the state carries BOTH the
     exact count (used when a single slice answers the query) and an
@@ -440,43 +485,29 @@ class DistinctnessAnalyzer(Analyzer):
     name = "distinctness"
 
     def __init__(self, column: str, lg_k: int = 12):
-        self.column = validate_identifier(column)
-        self.lg_k = lg_k
+        super().__init__(column, lg_k)
         self._n = metric_alias("an_dn", column)
         self._d = metric_alias("an_dd", column, tag="d")
         self._sk = metric_alias("an_dhll", column, lg_k, tag="k")
-        self._spark = None
-
-    def bind_spark(self, spark):
-        self._spark = spark
-        return self
 
     def state_exprs(self):
-        col = F.col(self.column)
         return {
             self._n: F.count(F.lit(1)),
-            self._d: F.count_distinct(col),
-            self._sk: F.hll_sketch_agg(col.cast("string"), F.lit(self.lg_k)),
+            self._d: F.count_distinct(F.col(self.column)),
+            self._sk: hll_sketch(self.column, self.lg_k),
         }
 
     def state_from_row(self, row):
-        raw = row[self._sk]
-        return AnalyzerState(
-            n=int(row[self._n]), d=int(row[self._d]),
-            exact=True,
-            sketch=base64.b64encode(bytes(raw)).decode() if raw is not None else None)
+        return AnalyzerState(n=int(row[self._n]), d=int(row[self._d]),
+                             exact=True, sketch=self._b64(row[self._sk]))
 
     def merge_states(self, states):
         if len(states) == 1:
             return states[0]
-        sketches = [s["sketch"] for s in states if s.get("sketch")]
-        if self._spark is None:
-            raise RuntimeError("distinctness merge needs bind_spark")
-        df = local_df(self._spark, [(s,) for s in sketches], "b64 string")
-        row = df.select(F.hll_sketch_estimate(
-            F.hll_union_agg(F.unbase64("b64"))).alias("est")).collect()[0]
+        rows = self._sketch_rows(s["sketch"] for s in states if s.get("sketch"))
+        est = hll_estimate(self._spark, hll_union(self._spark, rows))
         return AnalyzerState(n=sum(s["n"] for s in states),
-                             d=int(row["est"]), exact=False, sketch=None)
+                             d=est[self.column], exact=False, sketch=None)
 
     def metric_from_state(self, state):
         return MetricValue.double(

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame
 
 from ..functions.security import validate_identifiers
 from ..index_store import IndexStore
+from .base import hll_lg_k, hll_sketch
 
 #: lgK=12 ⇒ 4096 registers ⇒ RSE ≈ 1.04/sqrt(4096) ≈ 1.625 %.
 DEFAULT_LGK = 12
@@ -71,20 +72,15 @@ def build_distinct_index(df: DataFrame, columns: Sequence[str],
     persist under ``index_path`` (params pin lgk + the column set;
     ``sketches`` holds (col_name, sketch, n_rows, n_shards) per shard).
 
-    One fused aggregation: every column's ``hll_sketch_agg`` rides the
-    same scan (values cast to string so numeric and string columns
-    share one sketch item domain — the probe's estimates are counts of
-    distinct STRING forms, matching ``COUNT(DISTINCT col)`` for any
-    injective cast, which covers the integer/date/string columns a
-    profile tracks).
+    One fused aggregation: every column's ``base.hll_sketch`` rides the
+    same scan (its string item domain matches ``COUNT(DISTINCT col)``
+    for the integer/date/string columns a profile tracks).
     """
     cols = list(validate_identifiers(columns))
     if not cols:
         raise ValueError("build_distinct_index: empty column list")
-    if not 4 <= int(lgk) <= 21:
-        raise ValueError(f"lgk must be in [4, 21], got {lgk}")
-    aggs = [F.hll_sketch_agg(F.col(c).cast("string"), F.lit(int(lgk)))
-            .alias(f"__s_{c}") for c in cols]
+    lgk = hll_lg_k(lgk)
+    aggs = [hll_sketch(c, lgk).alias(f"__s_{c}") for c in cols]
     aggs.append(F.count(F.lit(1)).alias("__n"))
     one = df.agg(*aggs)
     rows = one.select(F.explode(F.array(*[
@@ -103,7 +99,7 @@ def build_distinct_index(df: DataFrame, columns: Sequence[str],
     IndexStore(df.sparkSession, index_path).write(
         {"sketches": rows.filter(F.col("sketch").isNotNull()
                                  & (F.col("n_rows") > 0))},
-        {"lgk": int(lgk), "columns": sorted(cols)}, mode)
+        {"lgk": lgk, "columns": sorted(cols)}, mode)
 
 
 def distinct_estimates_from_index(spark, index_path: str) -> DataFrame:

@@ -19,7 +19,7 @@ from typing import Dict, List
 import pyspark.sql.functions as F
 
 from ..functions.security import validate_identifiers
-from ..operators.grouped import GroupingConfig
+from ..operators.grouped import GroupingConfig, bound_groups
 from ..plans.executor import merge_exprs
 from .base import Analyzer, MetricValue
 
@@ -47,12 +47,7 @@ class GroupedAnalysisRunner:
             if n_groups > self.config.max_groups:
                 raise ValueError(
                     f"{n_groups} groups exceed max_groups={self.config.max_groups}")
-        elif self.config.overflow == "top_k":
-            g = g.orderBy(F.desc("__group_rows")).limit(self.config.max_groups)
-        elif self.config.overflow == "bottom_k":
-            g = g.orderBy(F.asc("__group_rows")).limit(self.config.max_groups)
-        else:  # sample
-            g = g.limit(self.config.max_groups)
+        g = bound_groups(g, self.config, "__group_rows")
         out: Dict[tuple, Dict[str, MetricValue]] = {}
         for row in g.collect():
             key = tuple(row[c] for c in self.group_by)

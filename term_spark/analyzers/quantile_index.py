@@ -72,7 +72,6 @@ from pyspark.sql import DataFrame
 from ..functions.security import validate_identifier, validate_identifiers
 from ..index_store import IndexStore
 from ..session import local_df
-from .base import AnalyzerState
 from .quantile_sketch import QuantileSketchAnalyzer
 
 DEFAULT_K = 200
@@ -97,9 +96,9 @@ def build_quantile_index(df: DataFrame, columns: Sequence[str],
     k + accuracy + the column set + the group column; ``grids`` holds
     (grp, col_name, n, mn, mx, grid, n_shards) per shard).
 
-    One fused aggregation: every column's count/min/max/
-    ``percentile_approx`` grid rides the same scan (``groupBy`` on
-    ``group_col`` when given).  Values cast to double (the quantile
+    One fused aggregation: every column's ``QuantileSketchAnalyzer``
+    state (count/min/max/``percentile_approx`` grid) rides the same
+    scan (``groupBy`` on ``group_col`` when given).  Values cast to double (the quantile
     domain); all-NULL or empty (group, column) cells contribute a
     zero-mass row that is dropped at write, so ``n_shards`` keeps
     meaning "shards that contributed data".
@@ -110,16 +109,10 @@ def build_quantile_index(df: DataFrame, columns: Sequence[str],
     if not 2 <= int(k) <= 10000:
         raise ValueError(f"k must be in [2, 10000], got {k}")
     gcol = validate_identifier(group_col) if group_col else None
-    probs = [(j + 0.5) / int(k) for j in range(int(k))]
-    aggs = []
-    for c in cols:
-        v = F.col(c).cast("double")
-        aggs.extend([
-            F.count(v).alias(f"__n_{c}"),
-            F.min(v).alias(f"__mn_{c}"),
-            F.max(v).alias(f"__mx_{c}"),
-            F.percentile_approx(v, probs, int(accuracy)).alias(f"__g_{c}"),
-        ])
+    anas = {c: QuantileSketchAnalyzer(c, k=int(k), accuracy=int(accuracy))
+            for c in cols}
+    aggs = [e.alias(a) for an in anas.values()
+            for a, e in an.state_exprs().items()]
     if gcol:
         one = df.groupBy(F.col(gcol).cast("string").alias("__grp")) \
                 .agg(*aggs)
@@ -128,14 +121,10 @@ def build_quantile_index(df: DataFrame, columns: Sequence[str],
         one = df.agg(*aggs)
         grp_expr = F.lit(_NO_GROUP)
     rows = one.select(F.explode(F.array(*[
-        F.struct(grp_expr.alias("grp"),
-                 F.lit(c).alias("col_name"),
-                 F.col(f"__n_{c}").alias("n"),
-                 F.col(f"__mn_{c}").alias("mn"),
-                 F.col(f"__mx_{c}").alias("mx"),
-                 F.col(f"__g_{c}").alias("grid"),
+        F.struct(grp_expr.alias("grp"), F.lit(c).alias("col_name"),
+                 *an.state_columns(),
                  F.lit(1).cast("bigint").alias("n_shards"))
-        for c in cols])).alias("r")).select("r.*")
+        for c, an in anas.items()])).alias("r")).select("r.*")
     IndexStore(df.sparkSession, index_path).write(
         {"grids": rows.filter(F.col("n") > 0)},
         {"k": int(k), "accuracy": int(accuracy), "columns": sorted(cols),
@@ -154,12 +143,8 @@ def _merged_states(store: IndexStore):
     shards: dict = {}
     for r in rows:
         key = (r["grp"], r["col_name"])
-        st = AnalyzerState(
-            n=int(r["n"]),
-            mn=float(r["mn"]) if r["mn"] is not None else None,
-            mx=float(r["mx"]) if r["mx"] is not None else None,
-            grid=[float(g) for g in (r["grid"] or [])])
-        by_key.setdefault(key, []).append(st)
+        by_key.setdefault(key, []).append(
+            ana.state_of(r["n"], r["mn"], r["mx"], r["grid"]))
         shards[key] = shards.get(key, 0) + int(r["n_shards"])
     merged = {key: (ana.merge_states(sts), shards[key])
               for key, sts in by_key.items()}

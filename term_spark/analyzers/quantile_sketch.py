@@ -66,13 +66,25 @@ class QuantileSketchAnalyzer(Analyzer):
             self._grid: F.percentile_approx(col, probs, self.accuracy),
         }
 
+    def state_columns(self):
+        """An aggregate row of ``state_exprs`` as the (n, mn, mx, grid)
+        record the persisted quantile index stores."""
+        return [F.col(self._n).alias("n"), F.col(self._mn).alias("mn"),
+                F.col(self._mx).alias("mx"), F.col(self._grid).alias("grid")]
+
     def state_from_row(self, row):
-        grid = row[self._grid]
+        return self.state_of(row[self._n], row[self._mn], row[self._mx],
+                             row[self._grid])
+
+    @staticmethod
+    def state_of(n, mn, mx, grid) -> AnalyzerState:
+        """The state an (n, mn, mx, grid) record holds: an aggregate
+        row of ``state_exprs`` or a persisted grid row."""
         return AnalyzerState(
-            n=int(row[self._n]),
-            mn=float(row[self._mn]) if row[self._mn] is not None else None,
-            mx=float(row[self._mx]) if row[self._mx] is not None else None,
-            grid=[float(g) for g in grid] if grid is not None else [])
+            n=int(n),
+            mn=float(mn) if mn is not None else None,
+            mx=float(mx) if mx is not None else None,
+            grid=[float(g) for g in grid or []])
 
     def merge_states(self, states: List[AnalyzerState]) -> AnalyzerState:
         total = sum(s["n"] for s in states)

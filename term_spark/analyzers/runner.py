@@ -25,6 +25,7 @@ from functools import partial
 from typing import Dict, List, Mapping, Optional
 
 from ..plans.executor import fused_aggs, merge_exprs
+from ..session import atomic_path
 from .base import Analyzer, AnalyzerState, MetricValue
 
 
@@ -114,12 +115,9 @@ class FilesystemStateStore(StateStore):
         return os.path.join(self.root, f"{safe}.json")
 
     def save(self, partition: str, states: Mapping[str, str]) -> None:
-        # a torn write stays under the .tmp name ``partitions`` skips and
-        # the previous state keeps serving
-        tmp = self._path(partition) + ".tmp"
-        with open(tmp, "w") as f:
+        # the previous state keeps serving until the new one is whole
+        with atomic_path(self._path(partition)) as tmp, open(tmp, "w") as f:
             json.dump(dict(states), f)
-        os.replace(tmp, self._path(partition))
 
     def load(self, partition: str) -> Dict[str, str]:
         with open(self._path(partition)) as f:

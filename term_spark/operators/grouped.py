@@ -19,10 +19,32 @@ from ..core.result import ConstraintResult
 from ..functions.security import validate_identifier, validate_identifiers
 
 
+_OVERFLOWS = ("top_k", "bottom_k", "sample", "fail")
+
+
 @dataclass(frozen=True)
 class GroupingConfig:
     max_groups: int = 10000
     overflow: str = "top_k"  # top_k | bottom_k | sample | fail
+
+    def __post_init__(self):
+        if self.overflow not in _OVERFLOWS:
+            raise ValueError(f"overflow must be one of {_OVERFLOWS}, "
+                             f"got {self.overflow!r}")
+
+
+def bound_groups(g, config: GroupingConfig, size_col: str):
+    """The overflow policy over grouped rows ``g``: ``top_k`` /
+    ``bottom_k`` keep the ``max_groups`` groups with the most / fewest
+    ``size_col`` rows, ``sample`` keeps any ``max_groups``, and ``fail``
+    returns ``g`` unbounded for the caller to count and reject."""
+    if config.overflow == "top_k":
+        return g.orderBy(F.desc(size_col)).limit(config.max_groups)
+    if config.overflow == "bottom_k":
+        return g.orderBy(F.asc(size_col)).limit(config.max_groups)
+    if config.overflow == "sample":
+        return g.limit(config.max_groups)
+    return g
 
 
 def grouped_completeness(df, column: str, group_by: List[str],
@@ -39,14 +61,7 @@ def grouped_completeness(df, column: str, group_by: List[str],
                 F.count(F.col(column)).alias("non_null_count"))
            .withColumn("completeness",
                        F.col("non_null_count") / F.col("total_count")))
-    if config.overflow == "top_k":
-        g = g.orderBy(F.desc("total_count")).limit(config.max_groups)
-    elif config.overflow == "bottom_k":
-        g = g.orderBy(F.asc("total_count")).limit(config.max_groups)
-    elif config.overflow == "sample":
-        g = g.limit(config.max_groups)
-    # "fail" handled by the caller via count check
-    return g
+    return bound_groups(g, config, "total_count")
 
 
 class GroupedCompletenessConstraint(Constraint):

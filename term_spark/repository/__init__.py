@@ -29,7 +29,7 @@ from dataclasses import dataclass
 from typing import Dict, List, Mapping, Optional
 
 from ..analyzers.base import MetricValue
-from ..session import local_df
+from ..session import atomic_path, local_df
 from ..sources import scan_parquet
 
 
@@ -150,9 +150,8 @@ class ParquetRepository(MetricsRepository):
         }
         final = os.path.join(
             self.path, f"{key.timestamp:.6f}_{uuid.uuid4().hex[:8]}.parquet")
-        # a torn write stays under the .tmp name ``_files`` skips
-        pq.write_table(pa.table(rows), final + ".tmp")
-        os.replace(final + ".tmp", final)
+        with atomic_path(final) as tmp:
+            pq.write_table(pa.table(rows), tmp)
 
     def _load_all(self):
         """Reads each committed file once and decodes whole columns."""
@@ -178,8 +177,8 @@ class ParquetRepository(MetricsRepository):
 
         Honors the append-only contract: readers and ``save`` never
         mutate existing files; this is the explicit offline rewrite the
-        docstring always promised. The new file lands via tmp-write +
-        atomic rename BEFORE the old files are unlinked, so a crash
+        docstring always promised. The new file lands via
+        ``session.atomic_path`` BEFORE the old files are unlinked, so a crash
         mid-compaction can only leave duplicate rows (self-healed by
         the next compaction), never lost ones. At real scale the
         same operation is a Delta/Iceberg ``OPTIMIZE``/retention job.
@@ -203,10 +202,9 @@ class ParquetRepository(MetricsRepository):
             return 0  # nothing to drop, already compact
         final = os.path.join(
             self.path, f"compacted_{time.time():.6f}_{uuid.uuid4().hex[:8]}.parquet")
-        tmp = final + ".tmp"
         if kept.num_rows:
-            pq.write_table(kept, tmp)
-            os.replace(tmp, final)  # atomic: visible only when complete
+            with atomic_path(final) as tmp:
+                pq.write_table(kept, tmp)
         for f in files:
             os.remove(f)
         return dropped

@@ -11,7 +11,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 from decimal import MAX_PREC, ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import SparkSession
@@ -63,6 +63,25 @@ def scratch_dir():
         yield path
     finally:
         shutil.rmtree(path, ignore_errors=True)
+
+
+@contextmanager
+def atomic_path(final: str):
+    """A ``.tmp`` path to write ``final`` through in a ``with`` block.
+
+    When the block completes, the file replaces ``final`` in one
+    ``os.replace``, so readers see the old file or the whole new one.
+    When the block raises, the torn ``.tmp`` file is deleted and the
+    error re-raised, so a failed write leaves nothing behind.
+    """
+    tmp = final + ".tmp"
+    try:
+        yield tmp
+        os.replace(tmp, final)
+    except BaseException:
+        with suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
 
 
 def local_df(spark: SparkSession, rows, schema):

@@ -10,6 +10,10 @@ streaming runtime; SURVEY §2.9/§7.2-9 marks this as the optional
 - freshness_check: watermark-aware data-freshness metric.
 - stateful_dedup_stream: exact streaming dedup via dropDuplicates
   within watermark (state-store backed).
+
+Every ``foreachBatch`` class here (the suite runner and the seven
+``Streaming*Monitor``s) is built on ``_BatchMonitor``, the one core for
+``attach``, exactly-once replay on ``batch_id`` and alert recording.
 """
 
 from __future__ import annotations
@@ -18,45 +22,90 @@ import time
 from typing import Callable, Dict, List, Optional
 
 import pyspark.sql.functions as F
-from ..session import local_df
 
 
-class StreamingSuiteRunner:
+class _BatchMonitor:
+    """The foreachBatch core: ``attach``, exactly-once replay and alert
+    recording.
+
+    foreachBatch is at-least-once, and a replayed micro-batch reuses its
+    ``batch_id``, so ``foreach_batch`` skips an id it already folded.
+    An id is marked folded only after ``_fold`` returns, i.e. after the
+    fold committed and its alert or raise step ran: a batch whose fold
+    or callback raised is folded again when Spark retries it.  A fold
+    builds its new state before it mutates the monitor, so a fold that
+    raised has committed nothing a retry would count twice.
+
+    ``_alert`` records an alert on ``alerts`` (the last 100) and passes
+    it to ``on_alert``; each monitor keeps its own rule for when to
+    call it.
+    """
+
+    def __init__(self, on_alert: Optional[Callable] = None):
+        self.on_alert = on_alert
+        self.alerts: List = []
+        self._seen_batches: set = set()
+
+    def foreach_batch(self, batch_df, batch_id: int) -> None:
+        if batch_id in self._seen_batches:
+            return
+        self._fold(batch_df, batch_id)
+        self._seen_batches.add(batch_id)
+
+    def _fold(self, batch_df, batch_id: int) -> None:
+        raise NotImplementedError
+
+    def _alert(self, batch_id: int, *detail) -> None:
+        self.alerts.append((batch_id,) + detail)
+        del self.alerts[:-100]
+        if self.on_alert is not None:
+            self.on_alert(batch_id, *detail)
+
+    def attach(self, stream_writer):
+        """writer.foreachBatch hookup: monitor.attach(df.writeStream)"""
+        return stream_writer.foreachBatch(self.foreach_batch)
+
+
+def _save_batch_metrics(repository, batch_id: int, metrics: Dict,
+                        **tags) -> None:
+    """Save a batch's numeric metrics as doubles under a ResultKey of
+    (now, batch_id, tags), so the repository history grows batch by
+    batch."""
+    from ..analyzers.base import MetricValue
+    from ..repository import ResultKey
+    repository.save(
+        ResultKey.of(time.time(), batch_id=str(batch_id), **tags),
+        {k: MetricValue.double(v) for k, v in metrics.items()
+         if isinstance(v, (int, float))})
+
+
+class StreamingSuiteRunner(_BatchMonitor):
     """foreachBatch adapter: validates every micro-batch with the batch
     engine — the per-batch cost is the batch path's fused jobs: one
     plain group, one per DISTINCT alias, and one sketch group."""
 
     def __init__(self, suite, repository=None, on_result: Optional[Callable] = None,
                  fail_on_error: bool = False):
+        super().__init__()
         self.suite = suite
         self.repository = repository
         self.on_result = on_result
         self.fail_on_error = fail_on_error
         self.results: List = []  # bounded: last 100
 
-    def foreach_batch(self, batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        result = self.suite.run(spark, batch_df)
+    def _fold(self, batch_df, batch_id: int) -> None:
+        result = self.suite.run(batch_df.sparkSession, batch_df)
         self.results.append((batch_id, result))
         del self.results[:-100]
         if self.repository is not None:
-            from ..analyzers.base import MetricValue
-            from ..repository import ResultKey
-            key = ResultKey.of(time.time(), batch_id=str(batch_id),
-                               suite=self.suite.name)
-            self.repository.save(key, {
-                k: MetricValue.double(v) for k, v in result.metrics.items()
-                if isinstance(v, (int, float))})
+            _save_batch_metrics(self.repository, batch_id, result.metrics,
+                                suite=self.suite.name)
         if self.on_result is not None:
             self.on_result(batch_id, result)
         if self.fail_on_error and not result.passed:
             raise RuntimeError(
                 f"validation failed for micro-batch {batch_id}: "
                 f"{[i.message for i in result.report.issues][:5]}")
-
-    def attach(self, stream_writer):
-        """writer.foreachBatch hookup: runner.attach(df.writeStream)"""
-        return stream_writer.foreachBatch(self.foreach_batch)
 
 
 def _with_event_time(stream_df, ts_col: str):
@@ -340,7 +389,7 @@ def attribution_join(left_stream, right_stream, key_col: str,
         "lag_seconds", rts.cast("double") - lts.cast("double"))
 
 
-class StreamingAnomalyMonitor:
+class StreamingAnomalyMonitor(_BatchMonitor):
     """Per-micro-batch metric anomaly detection: each batch's scalar
     metrics (one fused 1-row agg) are checked against their own history
     in a MetricsRepository with a DetectionStrategy (ZScore /
@@ -358,38 +407,35 @@ class StreamingAnomalyMonitor:
     def __init__(self, metric_exprs: Dict[str, "F.Column"], repository,
                  detector, on_alert: Optional[Callable] = None,
                  tags: Optional[Dict[str, str]] = None):
+        super().__init__(on_alert)
         self.metric_exprs = dict(metric_exprs)
         self.repository = repository
         self.detector = detector
-        self.on_alert = on_alert
         self.tags = dict(tags or {})
-        self.alerts: List = []
 
-    def foreach_batch(self, batch_df, batch_id: int) -> None:
-        from ..analyzers.base import MetricValue
-        from ..repository import ResultKey
+    def _fold(self, batch_df, batch_id: int) -> None:
         row = batch_df.agg(
             *[c.alias(a) for a, c in self.metric_exprs.items()]).collect()[0]
-        values = {a: row[a] for a in self.metric_exprs
+        values = {a: float(row[a]) for a in self.metric_exprs
                   if row[a] is not None}
         for name, value in values.items():
             history = self.repository.series(name, tags=self.tags or None)
-            result = self.detector.check(history + [float(value)])
+            result = self.detector.check(history + [value])
             if result.is_anomaly:
-                self.alerts.append((batch_id, name, result))
-                del self.alerts[:-100]
-                if self.on_alert is not None:
-                    self.on_alert(batch_id, name, result)
-        key = ResultKey.of(time.time(), batch_id=str(batch_id), **self.tags)
-        self.repository.save(key, {
-            a: MetricValue.double(float(v)) for a, v in values.items()})
-
-    def attach(self, stream_writer):
-        """writer.foreachBatch hookup: monitor.attach(df.writeStream)"""
-        return stream_writer.foreachBatch(self.foreach_batch)
+                self._alert(batch_id, name, result)
+        _save_batch_metrics(self.repository, batch_id, values, **self.tags)
 
 
-class StreamingHeavyHitterMonitor:
+def _dominant(summary, max_ratio: float):
+    """(value, share) for each value whose proven share of an MG
+    summary's rows exceeds ``max_ratio``."""
+    for item, est in summary.top():
+        if est / summary.n <= max_ratio:
+            return  # top() is sorted desc — nothing further exceeds
+        yield item, est / summary.n
+
+
+class StreamingHeavyHitterMonitor(_BatchMonitor):
     """Streaming frequency dominance via the mergeable Misra-Gries
     sketch: each micro-batch is sketched in one map-only pass
     (``analyzers.heavy_hitters.mg_sketch``) and folded into the
@@ -417,38 +463,26 @@ class StreamingHeavyHitterMonitor:
         if max_ratio is not None and not 0.0 < max_ratio < 1.0:
             raise ValueError(
                 f"max_ratio must be in (0, 1), got {max_ratio}")
+        super().__init__(on_alert)
         self.column = column
         self.k = int(k)
         self.max_ratio = max_ratio
-        self.on_alert = on_alert
         self.summary = MGSummary(k=self.k, n=0, counters={})
-        self.alerts: List = []
 
-    def foreach_batch(self, batch_df, batch_id: int) -> None:
+    def _fold(self, batch_df, batch_id: int) -> None:
         from ..analyzers.heavy_hitters import mg_merge, mg_sketch
         batch = mg_sketch(batch_df, self.column, k=self.k)
         self.summary = mg_merge([self.summary, batch])
-        if self.max_ratio is None or self.summary.n == 0:
-            return
-        for item, est in self.summary.top():
-            share = est / self.summary.n
-            if share <= self.max_ratio:
-                break  # top() is sorted desc — nothing further exceeds
-            self.alerts.append((batch_id, item, share))
-            del self.alerts[:-100]
-            if self.on_alert is not None:
-                self.on_alert(batch_id, item, share)
+        if self.max_ratio is not None:
+            for item, share in _dominant(self.summary, self.max_ratio):
+                self._alert(batch_id, item, share)
 
     def top(self, limit: int = 10):
         """(value, estimated count) — current stream-wide leaders."""
         return self.summary.top(limit)
 
-    def attach(self, stream_writer):
-        """writer.foreachBatch hookup: monitor.attach(df.writeStream)"""
-        return stream_writer.foreachBatch(self.foreach_batch)
 
-
-class StreamingGroupedHeavyHitterMonitor:
+class StreamingGroupedHeavyHitterMonitor(_BatchMonitor):
     """Per-group streaming dominance (round 11) — the streaming form
     of ``Check.has_no_heavy_hitters_by``: each micro-batch runs ONE
     map-only ``mg_sketch_by`` pass and every group's summary folds
@@ -471,34 +505,25 @@ class StreamingGroupedHeavyHitterMonitor:
         if max_ratio is not None and not 0.0 < max_ratio < 1.0:
             raise ValueError(
                 f"max_ratio must be in (0, 1), got {max_ratio}")
+        super().__init__(on_alert)
         self.group_column = group_column
         self.column = column
         self.k = int(k)
         self.max_ratio = max_ratio
-        self.on_alert = on_alert
         self.summaries: dict = {}  # group -> MGSummary
-        self.alerts: List = []
 
-    def foreach_batch(self, batch_df, batch_id: int) -> None:
+    def _fold(self, batch_df, batch_id: int) -> None:
         from ..analyzers.heavy_hitters import mg_merge, mg_sketch_by
+        summaries = dict(self.summaries)
         for g, s in mg_sketch_by(batch_df, self.group_column,
                                  self.column, k=self.k).items():
-            prev = self.summaries.get(g)
-            self.summaries[g] = s if prev is None else mg_merge([prev, s])
-        if self.max_ratio is None:
-            return
-        for g in sorted(self.summaries):
-            summ = self.summaries[g]
-            if summ.n == 0:
-                continue
-            for item, est in summ.top():
-                share = est / summ.n
-                if share <= self.max_ratio:
-                    break  # sorted desc — nothing further exceeds
-                self.alerts.append((batch_id, g, item, share))
-                del self.alerts[:-100]
-                if self.on_alert is not None:
-                    self.on_alert(batch_id, g, item, share)
+            prev = summaries.get(g)
+            summaries[g] = s if prev is None else mg_merge([prev, s])
+        self.summaries = summaries
+        if self.max_ratio is not None:
+            for g in sorted(summaries):
+                for item, share in _dominant(summaries[g], self.max_ratio):
+                    self._alert(batch_id, g, item, share)
 
     def groups(self):
         return sorted(self.summaries)
@@ -507,10 +532,6 @@ class StreamingGroupedHeavyHitterMonitor:
         """(value, estimated count) for one group's current leaders."""
         s = self.summaries.get(group)
         return [] if s is None else s.top(limit)
-
-    def attach(self, stream_writer):
-        """writer.foreachBatch hookup: monitor.attach(df.writeStream)"""
-        return stream_writer.foreachBatch(self.foreach_batch)
 
 
 def pii_rate_metrics(stream_df, ts_col: str, text_col: str = "text",
@@ -544,7 +565,7 @@ def pii_rate_metrics(stream_df, ts_col: str, text_col: str = "text",
                             watermark)
 
 
-class StreamingPiiMonitor:
+class StreamingPiiMonitor(_BatchMonitor):
     """Stream-wide PII release gate: every micro-batch runs the SAME
     map-only scan as the batch gate (one fused agg per batch — regex
     candidates + Luhn confirmation, all codegen), and the monitor
@@ -568,16 +589,15 @@ class StreamingPiiMonitor:
         from ..operators.pii import _kinds
         if not 0.0 <= max_ratio <= 1.0:
             raise ValueError(f"max_ratio must be in [0, 1], got {max_ratio}")
+        super().__init__(on_alert)
         self.text_col = text_col
         self.kinds = tuple(_kinds(kinds))
         self.max_ratio = float(max_ratio)
-        self.on_alert = on_alert
         self.n_docs = 0
         self.docs_with_pii = 0
         self.total_pii = 0
-        self.alerts: List = []
 
-    def foreach_batch(self, batch_df, batch_id: int) -> None:
+    def _fold(self, batch_df, batch_id: int) -> None:
         from ..operators.pii import pii_count_expr
         txt = F.coalesce(F.col(self.text_col), F.lit(""))
         total = sum((pii_count_expr(txt, k) for k in self.kinds), F.lit(0))
@@ -588,14 +608,9 @@ class StreamingPiiMonitor:
         self.n_docs += row["n"]
         self.docs_with_pii += row["hit_docs"]
         self.total_pii += int(row["hits"])
-        if self.n_docs == 0:
-            return
-        ratio = self.docs_with_pii / self.n_docs
+        ratio = self.status()["pii_ratio"]
         if ratio > self.max_ratio and row["hit_docs"] > 0:
-            self.alerts.append((batch_id, ratio, row["hit_docs"]))
-            del self.alerts[:-100]
-            if self.on_alert is not None:
-                self.on_alert(batch_id, ratio, row["hit_docs"])
+            self._alert(batch_id, ratio, row["hit_docs"])
 
     def status(self) -> dict:
         return {"n_docs": self.n_docs,
@@ -604,12 +619,8 @@ class StreamingPiiMonitor:
                 "pii_ratio": (self.docs_with_pii / self.n_docs
                               if self.n_docs else 0.0)}
 
-    def attach(self, stream_writer):
-        """writer.foreachBatch hookup: monitor.attach(df.writeStream)"""
-        return stream_writer.foreachBatch(self.foreach_batch)
 
-
-class StreamingDistinctMonitor:
+class StreamingDistinctMonitor(_BatchMonitor):
     """Stream-wide distinct-count tracking via mergeable HLL sketches —
     the streaming companion of the persisted distinct-count index
     (analyzers/distinct_index.py): every micro-batch is sketched in one
@@ -617,9 +628,10 @@ class StreamingDistinctMonitor:
     map-side combined) and folded into ONE running blob per column, so
     monitor state is a few KB per column no matter how long the stream
     runs, and the estimate covers the WHOLE stream — register MAX is
-    commutative/associative/idempotent, so micro-batch boundaries (and
-    replayed batches, foreachBatch's at-least-once reality) cannot
-    double-count, the property running COUNT(DISTINCT) sums lack.
+    commutative/associative/idempotent, so micro-batch boundaries
+    cannot double-count, the property running COUNT(DISTINCT) sums
+    lack.  A replayed batch is skipped like in every monitor here, so
+    ``n_rows`` counts it once.
 
     With ``max_distinct`` set for a column, ``on_alert`` fires
     (batch_id, column, estimate) when the stream-wide estimate first
@@ -631,75 +643,57 @@ class StreamingDistinctMonitor:
     def __init__(self, columns: List[str], lgk: int = 12,
                  max_distinct: Optional[Dict[str, float]] = None,
                  on_alert: Optional[Callable] = None):
+        from ..analyzers.base import hll_lg_k
         from ..functions.security import validate_identifiers
+        super().__init__(on_alert)
         self.columns = list(validate_identifiers(columns))
         if not self.columns:
             raise ValueError("StreamingDistinctMonitor: empty column list")
-        if not 4 <= int(lgk) <= 21:
-            raise ValueError(f"lgk must be in [4, 21], got {lgk}")
-        self.lgk = int(lgk)
+        self.lgk = hll_lg_k(lgk)
         self.max_distinct = dict(max_distinct or {})
         unknown = set(self.max_distinct) - set(self.columns)
         if unknown:
             raise ValueError(f"max_distinct for untracked columns: "
                              f"{sorted(unknown)}")
-        self.on_alert = on_alert
         self.n_rows = 0
         self._blobs: Dict[str, bytes] = {}   # column -> running sketch
+        self._spark = None  # the last batch's session, for estimates()
         self._tripped: set = set()
-        self.alerts: List = []
 
-    def foreach_batch(self, batch_df, batch_id: int) -> None:
+    def _fold(self, batch_df, batch_id: int) -> None:
+        from ..analyzers.base import hll_sketch, hll_union
         spark = batch_df.sparkSession
-        aggs = [F.hll_sketch_agg(F.col(c).cast("string"),
-                                 F.lit(self.lgk)).alias(c)
-                for c in self.columns]
+        aggs = [hll_sketch(c, self.lgk).alias(c) for c in self.columns]
         aggs.append(F.count(F.lit(1)).alias("__n"))
         row = batch_df.agg(*aggs).collect()[0]
-        self.n_rows += row["__n"]
-        fresh = {c: row[c] for c in self.columns if row[c] is not None}
+        fresh = [(c, row[c]) for c in self.columns if row[c] is not None]
+        blobs = self._blobs
         if fresh:
             # fold into the running blob: one tiny job over <= 2 rows
             # per column (stored + batch), never the batch data again
-            pairs = [(c, b) for c, b in list(self._blobs.items())
-                     + list(fresh.items())]
-            merged = (local_df(spark, pairs,
-                               "col_name string, s binary")
-                      .groupBy("col_name")
-                      .agg(F.hll_union_agg("s").alias("s"))
-                      .collect())
-            self._blobs = {r["col_name"]: r["s"] for r in merged}
+            blobs = {r["key"]: r["blob"] for r in hll_union(
+                spark, list(self._blobs.items()) + fresh).collect()}
+        self.n_rows += row["__n"]
+        self._blobs = blobs
+        self._spark = spark
         if not self.max_distinct:
             return
         for c, est in self.estimates().items():
             cap = self.max_distinct.get(c)
             if cap is not None and est > cap and c not in self._tripped:
                 self._tripped.add(c)
-                self.alerts.append((batch_id, c, est))
-                if self.on_alert is not None:
-                    self.on_alert(batch_id, c, est)
+                self._alert(batch_id, c, est)
 
     def estimates(self) -> Dict[str, int]:
         """Stream-wide distinct-count estimate per tracked column."""
-        if not self._blobs:
-            return {c: 0 for c in self.columns}
-        spark = None
-        from pyspark.sql import SparkSession
-        spark = SparkSession.getActiveSession()
-        rows = (local_df(spark, list(self._blobs.items()),
-                         "col_name string, s binary")
-                .select("col_name",
-                        F.hll_sketch_estimate("s").alias("e")).collect())
+        from ..analyzers.base import hll_estimate
         out = {c: 0 for c in self.columns}
-        out.update({r["col_name"]: int(r["e"]) for r in rows})
+        if self._blobs:
+            out.update(hll_estimate(self._spark, list(self._blobs.items())))
         return out
 
-    def attach(self, stream_writer):
-        """writer.foreachBatch hookup: monitor.attach(df.writeStream)"""
-        return stream_writer.foreachBatch(self.foreach_batch)
 
-
-class StreamingQuantileMonitor:
+class StreamingQuantileMonitor(_BatchMonitor):
     """Stream-wide quantile tracking via mergeable grid states — the
     streaming companion of the persisted quantile index
     (analyzers/quantile_index.py), completing the quantile family's
@@ -712,8 +706,7 @@ class StreamingQuantileMonitor:
 
     Replay safety: the weighted-grid merge is NOT idempotent (a
     replayed batch would double-weight, the COUNT discipline), so the
-    monitor dedups on ``batch_id`` — foreachBatch replays reuse the
-    id, making readings exactly-once without any upstream help
+    core's dedup on ``batch_id`` is what makes readings exactly-once
     (pinned by test).
 
     With ``bounds`` set — {column: (q, lo, hi)} — ``on_alert`` fires
@@ -735,11 +728,13 @@ class StreamingQuantileMonitor:
                  on_alert: Optional[Callable] = None):
         from ..analyzers.quantile_sketch import QuantileSketchAnalyzer
         from ..functions.security import validate_identifiers
+        super().__init__(on_alert)
         self.columns = list(validate_identifiers(columns))
         if not self.columns:
             raise ValueError("StreamingQuantileMonitor: empty column list")
-        self._ana = QuantileSketchAnalyzer("__stream__", k=int(k),
-                                           accuracy=int(accuracy))
+        self._anas = {c: QuantileSketchAnalyzer(c, k=int(k),
+                                                accuracy=int(accuracy))
+                      for c in self.columns}
         self.k = int(k)
         self.bounds = dict(bounds or {})
         unknown = set(self.bounds) - set(self.columns)
@@ -749,96 +744,53 @@ class StreamingQuantileMonitor:
         for c, (q, lo, hi) in self.bounds.items():
             if not (0.0 <= q <= 1.0 and lo <= hi):
                 raise ValueError(f"bounds[{c}] must be (q in [0,1], lo <= hi)")
-        self.on_alert = on_alert
         self.n_rows = 0
         self._states: Dict[str, list] = {c: [] for c in self.columns}
-        self._seen_batches: set = set()
         self._tripped: set = set()
-        self.alerts: List = []
 
-    def foreach_batch(self, batch_df, batch_id: int) -> None:
-        if batch_id in self._seen_batches:
-            return  # foreachBatch replay — already folded, exactly-once
-        from ..analyzers.base import AnalyzerState
-        probs = [(j + 0.5) / self.k for j in range(self.k)]
-        aggs = []
-        for c in self.columns:
-            v = F.col(c).cast("double")
-            aggs.extend([F.count(v).alias(f"__n_{c}"),
-                         F.min(v).alias(f"__mn_{c}"),
-                         F.max(v).alias(f"__mx_{c}"),
-                         F.percentile_approx(v, probs, self._ana.accuracy)
-                         .alias(f"__g_{c}")])
+    def _fold(self, batch_df, batch_id: int) -> None:
+        aggs = [e.alias(a) for an in self._anas.values()
+                for a, e in an.state_exprs().items()]
         aggs.append(F.count(F.lit(1)).alias("__rows"))
         row = batch_df.agg(*aggs).collect()[0]
-        # Build every new state in LOCALS first (r13 advice): the
-        # float/grid conversions are the only fallible steps, and if
-        # one throws mid-loop with self.* already partially mutated, a
-        # Spark retry of the batch would double-fold the columns that
-        # landed.  With construction hoisted, the commit below is
-        # nothing but int-add / list.append / set.add — a retry either
-        # sees NO effect of the failed attempt or all of it.
-        new_states = {}
-        for c in self.columns:
-            if row[f"__n_{c}"]:
-                new_states[c] = AnalyzerState(
-                    n=int(row[f"__n_{c}"]),
-                    mn=float(row[f"__mn_{c}"]),
-                    mx=float(row[f"__mx_{c}"]),
-                    grid=[float(g) for g in row[f"__g_{c}"]])
-        # Commit point — all mutations land together, and the batch is
-        # marked folded only AFTER they do: if the collect above threw
-        # and Spark retried the batch (same id), the retry must fold
-        # it, not skip it — marking first would silently drop the
-        # batch's data and weaken exactly-once to at-most-once under
-        # failure.
+        # every new state is built before the commit below, so a
+        # conversion that throws leaves no column folded twice on retry
+        new_states = {c: an.state_from_row(row)
+                      for c, an in self._anas.items()}
         self.n_rows += row["__rows"]
         for c, st in new_states.items():
-            self._states[c].append(st)
-        self._seen_batches.add(batch_id)
+            if st["n"]:
+                self._states[c].append(st)
         for c, (q, lo, hi) in self.bounds.items():
             if c in self._tripped or not self._states[c]:
                 continue
-            est = self._quantile(c, q)
+            an = self._anas[c]
+            est = an.quantile_from_state(an.merge_states(self._states[c]), q)
             if not lo <= est <= hi:
                 self._tripped.add(c)
-                self.alerts.append((batch_id, c, q, est))
-                if self.on_alert is not None:
-                    self.on_alert(batch_id, c, q, est)
-
-    def _quantile(self, c: str, q: float) -> float:
-        merged = self._ana.merge_states(self._states[c])
-        return self._ana.quantile_from_state(merged, q)
+                self._alert(batch_id, c, q, est)
 
     def quantiles(self, probs) -> Dict[str, Dict[float, float]]:
         """Stream-wide quantile estimates: {column: {p: value}} — one
         single-level merge of the per-batch states per column (the
         persisted tier's probe, driver-side)."""
         out = {}
-        for c in self.columns:
-            if not self._states[c]:
-                out[c] = {float(p): float("nan") for p in probs}
-            else:
-                merged = self._ana.merge_states(self._states[c])
-                out[c] = {float(p):
-                          self._ana.quantile_from_state(merged, float(p))
-                          for p in probs}
+        for c, an in self._anas.items():
+            merged = an.merge_states(self._states[c])  # NaN when empty
+            out[c] = {float(p): an.quantile_from_state(merged, float(p))
+                      for p in probs}
         return out
 
     def compact(self) -> None:
         """Fold history into one state per column — O(k) memory again,
         plus one merge level of rank error (the tier's compaction
         contract)."""
-        for c in self.columns:
+        for c, an in self._anas.items():
             if len(self._states[c]) > 1:
-                self._states[c] = [self._ana.merge_states(self._states[c])]
-
-    def attach(self, stream_writer):
-        """writer.foreachBatch hookup: monitor.attach(df.writeStream)"""
-        return stream_writer.foreachBatch(self.foreach_batch)
+                self._states[c] = [an.merge_states(self._states[c])]
 
 
-class StreamingEmbeddingQualityMonitor:
+class StreamingEmbeddingQualityMonitor(_BatchMonitor):
     """Stream-wide embedding hygiene gate — the streaming companion of
     ``Check.has_valid_embeddings`` (operators/similarity.py), sharing
     its ``bad_embedding_cond`` predicate so batch and stream can never
@@ -848,11 +800,9 @@ class StreamingEmbeddingQualityMonitor:
     and the monitor keeps two running counters — constant driver state
     for an unbounded stream, exact counts (badness is additive).
 
-    Exactly-once: counts are NOT idempotent, so the monitor dedups on
-    batch_id and marks a batch seen only AFTER its counts land (the
-    StreamingQuantileMonitor discipline — a failed collect retried by
-    Spark must fold, not skip; a replay of a folded batch must skip,
-    not double-count).
+    Exactly-once: counts are NOT idempotent, so the core's dedup on
+    batch_id keeps a replay of a folded batch from double-counting,
+    while a failed collect retried by Spark still folds.
 
     ``on_alert`` fires (batch_id, cumulative_ratio, batch_bad) the
     moment the cumulative bad ratio exceeds ``max_bad_ratio`` and the
@@ -872,44 +822,29 @@ class StreamingEmbeddingQualityMonitor:
                 f"max_bad_ratio must be in [0, 1], got {max_bad_ratio}")
         if norm_tol <= 0:
             raise ValueError(f"norm_tol must be > 0, got {norm_tol}")
+        super().__init__(on_alert)
         self.column = validate_identifier(column)
         self.expect_dim = int(expect_dim) if expect_dim is not None else None
         self.require_unit_norm = bool(require_unit_norm)
         self.norm_tol = float(norm_tol)
         self.max_bad_ratio = float(max_bad_ratio)
-        self.on_alert = on_alert
         self.n_vecs = 0
         self.n_bad = 0
-        self._seen_batches: set = set()
-        self.alerts: List = []
 
-    def foreach_batch(self, batch_df, batch_id: int) -> None:
-        if batch_id in self._seen_batches:
-            return  # foreachBatch replay — already counted
+    def _fold(self, batch_df, batch_id: int) -> None:
         from ..operators.similarity import bad_embedding_cond
         bad = bad_embedding_cond(self.column, self.expect_dim,
                                  self.require_unit_norm, self.norm_tol)
         row = batch_df.agg(
             F.count(F.lit(1)).alias("n"),
             F.count_if(bad).alias("bad")).collect()[0]
-        # commit all mutations together, seen-mark last (see class doc)
         self.n_vecs += int(row["n"])
         self.n_bad += int(row["bad"])
-        self._seen_batches.add(batch_id)
-        if self.n_vecs == 0:
-            return
-        ratio = self.n_bad / self.n_vecs
+        ratio = self.status()["bad_ratio"]
         if ratio > self.max_bad_ratio and int(row["bad"]) > 0:
-            self.alerts.append((batch_id, ratio, int(row["bad"])))
-            del self.alerts[:-100]
-            if self.on_alert is not None:
-                self.on_alert(batch_id, ratio, int(row["bad"]))
+            self._alert(batch_id, ratio, int(row["bad"]))
 
     def status(self) -> dict:
         return {"n_vecs": self.n_vecs, "n_bad": self.n_bad,
                 "bad_ratio": (self.n_bad / self.n_vecs
                               if self.n_vecs else 0.0)}
-
-    def attach(self, stream_writer):
-        """writer.foreachBatch hookup: monitor.attach(df.writeStream)"""
-        return stream_writer.foreachBatch(self.foreach_batch)

@@ -244,6 +244,18 @@ def test_state_store_crash_mid_save_keeps_the_earlier_state(tmp_path,
     monkeypatch.undo()
     assert store.load("day1") == {"m": "v1"}
     assert store.partitions() == ["day1"]
+    assert not list((tmp_path / "states").glob("*.tmp"))
+
+
+def test_hll_analyzers_reject_lg_k_out_of_range_at_construction():
+    """An lg_k hll_sketch_agg refuses fails when the analyzer is made,
+    not as an unattributed Spark error for the whole run."""
+    from term_spark.analyzers.base import DistinctnessAnalyzer
+    for cls in (ApproxCountDistinctAnalyzer, DistinctnessAnalyzer):
+        for lg_k in (3, 22, 30):
+            with pytest.raises(ValueError, match="lgk must be in"):
+                cls("v", lg_k=lg_k)
+        assert cls("v", lg_k=4).lg_k == 4
 
 
 def test_bucket_distribution_incremental_roundtrip(spark, tmp_path):

@@ -76,6 +76,15 @@ def test_grouped_overflow_strategies(spark):
             .add(MeanAnalyzer("v")).run(df)
 
 
+def test_grouping_config_rejects_an_unknown_overflow():
+    """One overflow policy: an unknown strategy is refused when the
+    config is made, where the constraint and the runner once disagreed
+    on it (unbounded groups vs a sample)."""
+    with pytest.raises(ValueError, match="overflow must be one of"):
+        GroupingConfig(overflow="top-k")
+    assert GroupingConfig(overflow="sample").overflow == "sample"
+
+
 def test_quantile_sketch_error_bound(spark):
     """Merged Spark-computed states stay within the analyzer's stated
     merge_error_bound (eps = 2/k + 1/accuracy) of the exact quantile —

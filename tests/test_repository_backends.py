@@ -307,3 +307,30 @@ def test_parquet_save_crash_serves_the_earlier_state(tmp_path, monkeypatch):
     assert repo.keys() == [first]
     assert repo.series("size") == [1.0]
     assert repo.load(first)["size"].value == 1
+    assert not list((tmp_path / "pq").glob("*.tmp"))
+
+
+def test_parquet_compact_crash_keeps_the_runs_and_no_tmp(tmp_path,
+                                                          monkeypatch):
+    """A compaction that dies mid-write deletes its torn ``.tmp`` and
+    leaves the saved runs in place for the next compaction."""
+    import pyarrow.parquet as pq
+
+    repo = ParquetRepository(str(tmp_path / "pq"))
+    keys = [ResultKey.of(1000.0 + i, env="prod") for i in range(2)]
+    for i, key in enumerate(keys):
+        repo.save(key, {"size": MetricValue.long(i)})
+
+    def torn_write(table, where, *a, **kw):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise OSError("device lost mid-write")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    with pytest.raises(OSError, match="mid-write"):
+        repo.compact()
+    monkeypatch.undo()
+    assert not list((tmp_path / "pq").glob("*.tmp"))
+    assert repo.keys() == keys
+    assert repo.compact() == 0
+    assert repo.series("size") == [0.0, 1.0]
