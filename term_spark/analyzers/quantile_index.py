@@ -82,10 +82,6 @@ DEFAULT_ACCURACY = 10000
 _NO_GROUP = ""
 
 
-def _bound(k: int, accuracy: int) -> float:
-    return 2.0 / k + 1.0 / accuracy
-
-
 def build_quantile_index(df: DataFrame, columns: Sequence[str],
                          index_path: str, k: int = DEFAULT_K,
                          accuracy: int = DEFAULT_ACCURACY,
@@ -207,7 +203,7 @@ def quantile_index_report(spark, index_path: str,
     meta, ana, merged = _merged_states(IndexStore(spark, index_path))
     grouped = bool(meta["group_col"])
     if tolerance is None:
-        tolerance = 2.0 * _bound(meta["k"], meta["accuracy"])
+        tolerance = 2.0 * ana.merge_error_bound()
     est = quantiles_from_index(spark, index_path, probs)
     keys = (["grp"] if grouped else []) + ["col_name", "p"]
     if exact_df is None:

@@ -8,7 +8,9 @@ sequentially (one SQL each — grouping is an acknowledged TODO,
 runner.rs:159); here all analyzers' state expressions share the suite
 executor's fused aggregation jobs (``plans.executor.fused_aggs``): one
 plain group, one per DISTINCT alias, and one sketch group, so N
-analyzers cost one scan per fusion class, not one each.
+analyzers cost one scan per fusion class, not one each. A table that is
+one partition with no exchange aggregates in place, so each of those
+groups is one Spark job of one task.
 
 IncrementalAnalysisRunner — parity with analyzers/incremental/
 runner.rs:165-230 + state_store.rs: compute per-partition states,

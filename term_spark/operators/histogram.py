@@ -391,7 +391,7 @@ def equidepth_histogram_from_index(df, column: str, index_path: str,
     Returns (bucket, lo, hi, n, share[, edge_within_bound]) ordered by
     bucket; empty input returns an empty frame of the same schema.
     """
-    from ..analyzers.quantile_index import _bound, _merged_states, _NO_GROUP
+    from ..analyzers.quantile_index import _merged_states, _NO_GROUP
 
     validate_identifier(column)
     if buckets < 2:
@@ -417,7 +417,7 @@ def equidepth_histogram_from_index(df, column: str, index_path: str,
             f"tracked by the index at {index_path}")
     st, _n_shards = merged[(_NO_GROUP, column)]
     edges = [float(ana.quantile_from_state(st, float(p))) for p in probs]
-    tol = 2.0 * _bound(int(meta["k"]), int(meta["accuracy"]))
+    tol = 2.0 * ana.merge_error_bound()
 
     col = F.col(column).cast("double")
     # ONE pass: cumulative strict-below counts at every edge (bucket
@@ -502,7 +502,7 @@ def equidepth_histograms_by_group(df, column: str, index_path: str,
     ordered by (grp, bucket); groups present in the index but absent
     from ``df`` report n=0 rows.
     """
-    from ..analyzers.quantile_index import _bound, _merged_states
+    from ..analyzers.quantile_index import _merged_states
 
     validate_identifier(column)
     if buckets < 2:
@@ -525,7 +525,7 @@ def equidepth_histograms_by_group(df, column: str, index_path: str,
         st, _n_shards = merged[(g, column)]
         edges_by_g[g] = [float(ana.quantile_from_state(st, float(p)))
                          for p in probs]
-    tol = 2.0 * _bound(int(meta["k"]), int(meta["accuracy"]))
+    tol = 2.0 * ana.merge_error_bound()
 
     col = F.col(column).cast("double")
     gstr = F.col(gcol).cast("string")

@@ -117,6 +117,14 @@ def _with_event_time(stream_df, ts_col: str):
     return stream_df
 
 
+def _window(ts_col: str, window: str, slide: Optional[str]):
+    """The tumbling (``slide`` unset) or sliding event-time window
+    column, named ``window``."""
+    win = (F.window(F.col(ts_col), window, slide) if slide
+           else F.window(F.col(ts_col), window))
+    return win.alias("window")
+
+
 def windowed_metrics(stream_df, ts_col: str, metric_exprs: Dict[str, "F.Column"],
                      window: str = "1 minute", slide: Optional[str] = None,
                      watermark: str = "10 minutes"):
@@ -127,11 +135,9 @@ def windowed_metrics(stream_df, ts_col: str, metric_exprs: Dict[str, "F.Column"]
     single-pass agg.
     """
     stream_df = _with_event_time(stream_df, ts_col)
-    win = (F.window(F.col(ts_col), window, slide) if slide
-           else F.window(F.col(ts_col), window))
     return (stream_df
             .withWatermark(ts_col, watermark)
-            .groupBy(win.alias("window"))
+            .groupBy(_window(ts_col, window, slide))
             .agg(*[c.alias(a) for a, c in metric_exprs.items()]))
 
 
@@ -179,7 +185,7 @@ def freshness_check(stream_df, ts_col: str, watermark: str = "10 minutes",
     stream_df = _with_event_time(stream_df, ts_col)
     return (stream_df
             .withWatermark(ts_col, watermark)
-            .groupBy(F.window(F.col(ts_col), window).alias("window"))
+            .groupBy(_window(ts_col, window, None))
             .agg(F.max(F.col(ts_col)).alias("max_event_time"),
                  F.count(F.lit(1)).alias("n_events"))
             .withColumn("observed_at", F.current_timestamp())
@@ -304,11 +310,9 @@ def drift_metrics(stream_df, ts_col: str, value_col: str, ref_df,
     b = psi_bucket(scol, lo, width, bins)
     cnt_exprs = [F.count(F.when(scol.isNotNull() & (b == i), 1)).alias(f"_b{i}")
                  for i in range(bins)]
-    win = (F.window(F.col(ts_col), window, slide) if slide
-           else F.window(F.col(ts_col), window))
     agg = (stream_df
            .withWatermark(ts_col, watermark)
-           .groupBy(win.alias("window"))
+           .groupBy(_window(ts_col, window, slide))
            .agg(F.count(scol).alias("n_events"), *cnt_exprs))
 
     n = F.col("n_events")
@@ -534,6 +538,15 @@ class StreamingGroupedHeavyHitterMonitor(_BatchMonitor):
         return [] if s is None else s.top(limit)
 
 
+def _pii_total(text_col: str, kinds) -> "F.Column":
+    """Confirmed structured-PII matches in one row's ``text_col`` (NULL
+    text counts 0), summed over ``kinds`` — the batch gate's
+    ``pii_count_expr`` per kind."""
+    from ..operators.pii import pii_count_expr
+    txt = F.coalesce(F.col(text_col), F.lit(""))
+    return sum((pii_count_expr(txt, k) for k in kinds), F.lit(0))
+
+
 def pii_rate_metrics(stream_df, ts_col: str, text_col: str = "text",
                      kinds: Optional[List[str]] = None,
                      window: str = "1 minute",
@@ -550,10 +563,8 @@ def pii_rate_metrics(stream_df, ts_col: str, text_col: str = "text",
     rows.  Pure additive sums over a watermarked window — no distinct,
     no UDF, state bounded by windows in flight; safe in append mode.
     """
-    from ..operators.pii import _kinds, pii_count_expr
-    ks = _kinds(kinds)
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    total = sum((pii_count_expr(txt, k) for k in ks), F.lit(0))
+    from ..operators.pii import _kinds
+    total = _pii_total(text_col, _kinds(kinds))
     exprs = {
         "n_docs": F.count(F.lit(1)),
         "docs_with_pii": F.count(F.when(total > 0, 1)),
@@ -598,9 +609,7 @@ class StreamingPiiMonitor(_BatchMonitor):
         self.total_pii = 0
 
     def _fold(self, batch_df, batch_id: int) -> None:
-        from ..operators.pii import pii_count_expr
-        txt = F.coalesce(F.col(self.text_col), F.lit(""))
-        total = sum((pii_count_expr(txt, k) for k in self.kinds), F.lit(0))
+        total = _pii_total(self.text_col, self.kinds)
         row = batch_df.agg(
             F.count(F.lit(1)).alias("n"),
             F.count(F.when(total > 0, 1)).alias("hit_docs"),

@@ -9,11 +9,12 @@ import pytest
 import pyspark.sql.functions as F
 
 from term_spark.analyzers.quantile_index import (DEFAULT_ACCURACY,
-                                                 DEFAULT_K, _bound,
+                                                 DEFAULT_K,
                                                  build_quantile_index,
                                                  compact_quantile_index,
                                                  quantile_index_report,
                                                  quantiles_from_index)
+from term_spark.analyzers.quantile_sketch import QuantileSketchAnalyzer
 from term_spark.index_store import IndexStore
 
 PROBS = [0.1, 0.5, 0.9]
@@ -47,7 +48,8 @@ def test_sharded_build_rank_within_bound(spark, tmp_path):
     build_quantile_index(d.filter(F.col("doc_id") % 3 == 0),
                          ["sq", "mod"], path, mode="append")
     est = _est(spark, path)
-    bound = _bound(DEFAULT_K, DEFAULT_ACCURACY)
+    bound = QuantileSketchAnalyzer("sq", k=DEFAULT_K,
+                                   accuracy=DEFAULT_ACCURACY).merge_error_bound()
     for col in ("sq", "mod"):
         for p in PROBS:
             r = est[(col, p)]
