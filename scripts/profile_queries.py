@@ -23,11 +23,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def _explain_str(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*",
@@ -42,6 +37,7 @@ def main() -> None:
                     help="plans only (lazy queries), no execution")
     args = ap.parse_args()
 
+    from term_spark.plans.audit import plan_text
     from term_spark.queries import QUERIES
     from term_spark.session import get_spark
 
@@ -56,7 +52,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"profile: {name}")
         df = fn(spark, args.sf)
         with open(os.path.join(args.out, f"{name}_{args.tag}.txt"), "w") as f:
-            f.write(_explain_str(df))
+            f.write(plan_text(df))
         if args.all_plans:
             continue
         df.collect()  # warm: codegen compile, JIT

@@ -342,17 +342,17 @@ def minhash_signature_cols(num_hashes: int):
     return build
 
 
-def spread(df: DataFrame, key: str, min_parts: Optional[int] = None) -> DataFrame:
+def spread(df: DataFrame, key: str) -> DataFrame:
     """Repartition a CPU-heavy input if it arrives under-partitioned.
 
     A small parquet file scans as ONE task, so per-row-expensive
-    operators (16 md5s per shingle, 64-bit simhash folds) serialize on
-    a single core no matter how many are available. On a real cluster
-    a 100 TB table arrives with thousands of splits and this is a
-    no-op; locally (and for small dimension-like tables) it buys full
-    parallelism for one narrow shuffle of the raw docs.
+    operators (16 md5s per shingle, 64-bit simhash folds, wide decimal
+    sums) serialize on a single core no matter how many are available.
+    On a real cluster a 100 TB table arrives with thousands of splits
+    and this is a no-op; locally (and for small dimension-like tables)
+    it buys one partition per core for one shuffle of the raw rows.
     """
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, key)

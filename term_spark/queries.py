@@ -585,11 +585,12 @@ FROM gaps WHERE gap IS NOT NULL
 # ---------------------------------------------------------------------------
 
 def q_pricing_summary(spark, sf_dir) -> DataFrame:
-    # spread=None (auto): 4 decimal(25,6) sums per row dominate; on a
-    # low-row-group scan the repartition buys full-width partial aggs
-    # (2.6s -> 1.4s at sf0.1) and is a no-op on well-chunked tables.
-    from term_spark.sources import read_parquet
-    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet", spread=None)
+    # 4 decimal(25,6) sums per row dominate: spread an under-partitioned
+    # scan over every core (sf0.1 on 4 cores: 2.14 -> 1.71 s against a
+    # round-robin repartition; A/B in plans/read_parquet/).
+    from .operators.dedup import spread
+    (li,) = _t(spark, sf_dir, "lineitem")
+    li = spread(li, "l_orderkey")
     # Scale 6, not 4: price/discount/tax each carry 2 decimal digits, so the
     # 3-factor charge product has up to 6 — at scale 4 the cast would round
     # exact .00005 midpoints, where Spark (HALF_UP on the binary expansion)

@@ -36,8 +36,8 @@ def get_spark(app_name: str = "term_spark", shuffle_partitions: int = None,
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         # pandas <-> Spark conversions go through Arrow
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # the testdata's TIMESTAMP(NANOS) columns read as longs;
-        # sources.read_parquet rebuilds the timestamps from them
+        # Parquet TIMESTAMP(NANOS) columns, which Spark refuses by default,
+        # read as longs; sources.read_parquet rebuilds the timestamps
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local mode: the executors live in the driver JVM
         .config("spark.driver.memory", os.environ.get("TERM_SPARK_DRIVER_MEM", "8g"))

@@ -10,21 +10,20 @@ Spark reads gz/zstd/bz2/lz4/snappy compression natively, matching the
 reference's auto-detect (sources/mod.rs:116-150); glob patterns are
 native to Hadoop path resolution (sources/mod.rs:167-197).
 
-Nanosecond-timestamp note: the driver's testdata parquet carries
-TIMESTAMP(NANOS) columns, which Spark refuses by default. read_parquet
-reads them via ``spark.sql.legacy.parquet.nanosAsLong`` and rebuilds
-proper timestamps (microsecond precision).
-
 Parquet schemas come from one driver-side footer read: every engine
 Parquet read (read_parquet, IndexStore.read, ParquetRepository's SQL
-view, the layout audit) goes through scan_parquet, which resolves the
-schema with Spark's own footer code and passes it to the reader, so no
-read starts Spark's schema-inference job.
+view, the layout audit) goes through scan_parquet, which reads the
+footer Spark's inference would read, with Spark's own code and Hadoop
+filesystem, and passes its schema to the reader, so no read starts
+Spark's schema-inference job.  read_parquet also names the footer's
+TIMESTAMP(NANOS) columns, which Spark refuses by default: they read as
+epoch-nanosecond longs (``spark.sql.legacy.parquet.nanosAsLong``) and
+come back as microsecond timestamps, for local paths and Hadoop URIs
+alike.
 """
 
 from __future__ import annotations
 
-import glob as _glob
 import json
 import posixpath
 from typing import Dict, List, Optional, Sequence
@@ -33,68 +32,6 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
-
-
-#: below this row count a 1-task scan finishes in well under the cost
-#: of the extra exchange auto-spread would add
-SPREAD_MIN_ROWS = 100_000
-
-#: past this many files the dataset has at least that many row groups —
-#: effective parallelism is fine and footer inspection would only add
-#: driver-side latency
-_FOOTER_SCAN_CAP = 64
-
-
-def _parquet_footer_info(path: str):
-    """(nanos_cols, total_row_groups, total_rows) from parquet footers.
-
-    Row-group count is the scan's EFFECTIVE parallelism ceiling: Spark
-    plans byte-range splits, but a split only yields rows for row
-    groups whose midpoint it contains, so a 600k-row single-row-group
-    file is read by exactly one task no matter how it's split.
-
-    Local paths only (pyarrow); remote schemes and >_FOOTER_SCAN_CAP
-    file sets return (nanos_from_first_file_or_[], None, None) meaning
-    "unknown / plenty".
-    """
-    try:
-        import pyarrow.parquet as pq
-        import pyarrow.types as pt
-    except ImportError:  # pragma: no cover
-        return [], None, None
-    import os
-    if any(ch in path for ch in "*?["):
-        files = sorted(_glob.glob(path))
-    elif os.path.isdir(path):
-        files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-    elif os.path.isfile(path):
-        files = [path]
-    else:  # remote scheme (s3a://, gs://, abfss://) or missing
-        files = []
-
-    def _nanos(schema) -> List[str]:
-        return [name for name, typ in zip(schema.names, schema.types)
-                if pt.is_timestamp(typ) and typ.unit == "ns"]
-
-    if not files:
-        return [], None, None
-    if len(files) > _FOOTER_SCAN_CAP:
-        try:
-            return _nanos(pq.read_schema(files[0])), None, None
-        except Exception:
-            return [], None, None
-    row_groups = rows = 0
-    nanos: List[str] = []
-    for i, p in enumerate(files):
-        try:
-            meta = pq.ParquetFile(p).metadata
-        except Exception:
-            return nanos, None, None
-        if i == 0:
-            nanos = _nanos(meta.schema.to_arrow_schema())
-        row_groups += meta.num_row_groups
-        rows += meta.num_rows
-    return nanos, row_groups, rows
 
 
 _SUMMARIES = ("_common_metadata", "_metadata")
@@ -108,26 +45,32 @@ def _listed(name: str) -> bool:
     return not hidden or name.startswith(_SUMMARIES)
 
 
-def parquet_schema(spark: SparkSession,
-                   paths: Sequence[str]) -> Optional[T.StructType]:
-    """The schema ``spark.read.parquet(*paths)`` infers, resolved on the
-    driver; None where only Spark's inference can tell.
+def _parquet_format(spark: SparkSession):
+    jvm = spark.sparkContext._jvm
+    return getattr(getattr(
+        jvm.org.apache.spark.sql.execution.datasources.parquet,
+        "ParquetFileFormat$"), "MODULE$")
+
+
+def _footer(spark: SparkSession, paths: Sequence[str]):
+    """The footer ``spark.read.parquet(*paths)`` infers its schema from,
+    read on the driver (a Scala ``Seq`` of one ``Footer``); None where
+    only Spark's inference can tell.
 
     Spark's inference (``ParquetUtils.inferSchema`` with mergeSchema
     off) reads one footer, ``_common_metadata``, else ``_metadata``,
     else the first data file in path order, but reads it inside a
-    Spark job.  This reads the same footer in-process with Spark's own
-    code (``readParquetFootersInParallel`` + ``readSchema``: the same
-    converter, session conf and preference for Spark's row metadata).
-    A nested layout (a partitioned table, whose partition columns Spark
-    types from directory names), a missing path, no data file, or a
-    footer the driver cannot read returns None, so the caller falls
-    back to Spark's inference and Spark raises its own errors.
+    Spark job.  This lists the paths through the session's Hadoop
+    filesystems and reads the same footer in-process with Spark's own
+    ``readParquetFootersInParallel``.  A nested layout (a partitioned
+    table, whose partition columns Spark types from directory names), a
+    missing path, no data file, or a footer the driver cannot read
+    returns None, so the caller falls back to Spark's inference and
+    Spark raises its own errors.
     """
     jvm = spark.sparkContext._jvm
-    session = spark._jsparkSession
     try:
-        conf = session.sessionState().newHadoopConf()
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
         leaves = {}
         for p in paths:
             path = jvm.org.apache.hadoop.fs.Path(p)
@@ -151,13 +94,29 @@ def parquet_schema(spark: SparkSession,
         if not data:
             return None
         touch = leaves[(summaries or data)[0]]
-        parquet = getattr(getattr(
-            jvm.org.apache.spark.sql.execution.datasources.parquet,
-            "ParquetFileFormat$"), "MODULE$")
         files = jvm.scala.jdk.javaapi.CollectionConverters.asScala(
             jvm.java.util.Collections.singletonList(touch)).toList()
-        schema = parquet.readSchema(
-            parquet.readParquetFootersInParallel(conf, files, False), session)
+        return _parquet_format(spark).readParquetFootersInParallel(
+            conf, files, False)
+    except Py4JError:
+        return None
+
+
+def _nanos_columns(footer) -> List[str]:
+    """The top-level TIMESTAMP(NANOS) columns of ``footer``."""
+    schema = footer.head().getParquetMetadata().getFileMetaData().getSchema()
+    if "TIMESTAMP(NANOS" not in schema.toString():  # one py4j call, not 3/field
+        return []
+    return [f.getName() for f in schema.getFields()
+            if str(f.getLogicalTypeAnnotation()).startswith("TIMESTAMP(NANOS")]
+
+
+def _schema(spark: SparkSession, footer) -> Optional[T.StructType]:
+    """Spark's schema of ``footer``: ``readSchema``, the inference's own
+    converter, session conf and preference for Spark's row metadata."""
+    try:
+        schema = _parquet_format(spark).readSchema(
+            footer, spark._jsparkSession)
     except Py4JError:
         return None
     if schema.isEmpty():
@@ -165,57 +124,53 @@ def parquet_schema(spark: SparkSession,
     return T.StructType.fromJson(json.loads(schema.get().json()))
 
 
-def scan_parquet(spark: SparkSession, *paths: str, **options) -> DataFrame:
-    """``spark.read.options(**options).parquet(*paths)`` with the schema
-    from ``parquet_schema``: no schema-inference job.  Reads with
-    options (``mergeSchema``, path filters) or a session-wide
-    ``spark.sql.parquet.mergeSchema`` keep Spark's inference."""
+def parquet_schema(spark: SparkSession,
+                   paths: Sequence[str]) -> Optional[T.StructType]:
+    """The schema ``spark.read.parquet(*paths)`` infers, resolved on the
+    driver from ``_footer``; None where only Spark's inference can tell."""
+    footer = _footer(spark, paths)
+    return None if footer is None else _schema(spark, footer)
+
+
+def _keeps_inference(spark: SparkSession, options) -> bool:
+    """Reads with options (``mergeSchema``, path filters) or a
+    session-wide ``spark.sql.parquet.mergeSchema`` keep Spark's
+    inference."""
+    return bool(options) or spark.conf.get(
+        "spark.sql.parquet.mergeSchema", "false").lower() == "true"
+
+
+def _scan(spark: SparkSession, paths: Sequence[str], options,
+          footer) -> DataFrame:
     reader = spark.read.options(**options)
-    if not options and spark.conf.get(
-            "spark.sql.parquet.mergeSchema", "false").lower() != "true":
-        schema = parquet_schema(spark, paths)
-        if schema is not None:
-            reader = reader.schema(schema)
+    schema = None if footer is None else _schema(spark, footer)
+    if schema is not None:
+        reader = reader.schema(schema)
     return reader.parquet(*paths)
 
 
-def read_parquet(spark: SparkSession, path: str, spread: bool = False,
-                 **options) -> DataFrame:
-    """Read parquet with nanos-timestamp handling and scan-width repair.
+def scan_parquet(spark: SparkSession, *paths: str, **options) -> DataFrame:
+    """``spark.read.options(**options).parquet(*paths)`` with the schema
+    from ``parquet_schema``: no schema-inference job, unless the read
+    keeps Spark's inference (``_keeps_inference``)."""
+    footer = None if _keeps_inference(spark, options) else _footer(spark, paths)
+    return _scan(spark, paths, options, footer)
 
-    ``spread=None`` (auto): when the footers show fewer row groups than
-    half the core count but enough rows that a serialized scan hurts
-    (>= SPREAD_MIN_ROWS), insert one round-robin repartition so
-    per-partition work uses every core. Catalyst still pushes filters
-    and column pruning below the repartition, so the exchange carries
-    only pruned columns. At scale auto never triggers: a 100 TB table
-    has ~1e5 row groups.
 
-    Default OFF: the exchange only pays for itself when downstream
-    per-row CPU dominates (wide decimal aggregates, per-row hashing) —
-    measured 2.6s -> 1.4s on a single-row-group 600k-row file for the
-    decimal-heavy pricing query, but 0.5s -> 1.5s on a light windowed
-    query whose own hash exchange follows anyway. CPU-heavy operators
-    opt in with spread=None/True.
-    """
-    nanos, row_groups, rows = _parquet_footer_info(path)
+def read_parquet(spark: SparkSession, path: str, **options) -> DataFrame:
+    """``scan_parquet`` with TIMESTAMP(NANOS) columns rebuilt as
+    microsecond timestamps, from one footer read with or without
+    options."""
+    footer = _footer(spark, [path])
+    nanos = [] if footer is None else _nanos_columns(footer)
     if nanos:
+        # before _schema converts the footer, which fails without it
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = scan_parquet(spark, path, **options)
-    cores = spark.sparkContext.defaultParallelism
-    if spread is None:
-        spread = (row_groups is not None and row_groups < max(2, cores // 2)
-                  and rows is not None and rows >= SPREAD_MIN_ROWS)
-    if spread:
-        df = df.repartition(cores)
-    # The rebuild applies only when Spark actually surfaced the column as a
-    # nanos-epoch long. Spark-written INT96 timestamps also read as
-    # timestamp[ns] in pyarrow but land as TimestampType here — skip those.
-    long_cols = {f.name for f in df.schema.fields
-                 if isinstance(f.dataType, T.LongType)}
-    for c in nanos:
-        if c in long_cols:
-            df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    df = _scan(spark, [path], options,
+               None if _keeps_inference(spark, options) else footer)
+    if nanos:
+        df = df.withColumns({c: F.expr(f"timestamp_micros(`{c}` div 1000)")
+                             for c in nanos})
     return df
 
 

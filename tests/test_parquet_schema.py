@@ -7,8 +7,9 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from conftest import SF_DIR
+from conftest import SF_DIR, conf_override
 
+from term_spark import sources
 from term_spark.index_store import IndexStore
 from term_spark.sources import parquet_schema, read_parquet, scan_parquet
 
@@ -68,17 +69,63 @@ def test_summary_file_wins_over_data_files(spark, tmp_path):
     assert _same_as_spark(spark, str(d)) == 0
 
 
-def test_nanosecond_timestamps(spark, tmp_path):
+def _nanos_file(tmp_path):
     path = str(tmp_path / "ns.parquet")
     pq.write_table(pa.table({
         "id": pa.array([1, 2], pa.int64()),
         "ts": pa.array([1_700_000_000_123_456_789, None],
                        pa.timestamp("ns"))}), path)
+    return path
+
+
+@pytest.mark.parametrize("form", ["path", "file_uri", "glob"])
+def test_nanosecond_timestamps(spark, tmp_path, form):
+    path = _nanos_file(tmp_path)
+    path = {"path": path, "file_uri": f"file://{path}",
+            "glob": str(tmp_path / "n*.parquet")}[form]
     assert _same_as_spark(spark, path) == 0
     df, jobs = _jobs(spark, lambda: read_parquet(spark, path))
     assert jobs == 0
     assert df.schema == read_parquet(spark, path, mergeSchema="false").schema
     assert df.schema["ts"].dataType.typeName() == "timestamp"
+    assert df.collect()[0]["ts"].microsecond == 123456
+
+
+def test_nanos_read_sets_the_conf_before_the_schema(spark, tmp_path):
+    path = _nanos_file(tmp_path)
+    with conf_override(spark, "spark.sql.legacy.parquet.nanosAsLong", "false"):
+        df, jobs = _jobs(spark, lambda: read_parquet(spark, path))
+        assert jobs == 0
+        assert df.schema["ts"].dataType.typeName() == "timestamp"
+
+
+def _bytes_read(spark, build):
+    """Bytes ``build()`` read through Hadoop's local filesystem, on the
+    driver and in any job it started."""
+    stats = spark.sparkContext._jvm.org.apache.hadoop.fs.FileSystem
+
+    def total():
+        local = stats.getGlobalStorageStatistics().get("file")
+        return 0 if local is None else local.getLong("bytesRead")
+
+    before = total()
+    build()
+    return total() - before
+
+
+def test_one_footer_read_per_read_parquet(spark, tmp_path, monkeypatch):
+    path = _nanos_file(tmp_path)
+    footer = _bytes_read(spark, lambda: parquet_schema(spark, [path]))
+    assert footer > 0
+    reads = []
+    real = sources._footer
+    monkeypatch.setattr(sources, "_footer",
+                        lambda *a: reads.append(a) or real(*a))
+    assert _bytes_read(spark, lambda: read_parquet(spark, path)) == footer
+    # an option keeps Spark's inference, whose job reads the footer again
+    assert _bytes_read(spark, lambda: read_parquet(
+        spark, path, mergeSchema="false")) == 2 * footer
+    assert len(reads) == 2
 
 
 def test_minhash_index_shards(spark, tmp_path):
