@@ -13,7 +13,10 @@ Five strategies, each returning DataFrames (never collecting):
 - minhash_lsh_candidates: MinHash signatures from lexicographic min of
   md5(seed‖shingle) (deterministic, engine-portable), banded into
   buckets, candidate pairs = same (band, band-hash) bucket. Scale path:
-  k·|shingles| map work, one shuffle on band hash.
+  k·|shingles| map work, one shuffle on band hash. In memory the
+  minhashes and band hashes are 32-char hex (the SQL oracles replay
+  them); the persisted index (build_minhash_index) stores each as its
+  16-byte md5 digest (``binary``).
 - simhash64: 64-bit SimHash from md5-derived token bits, Hamming
   near-dup join on 16-bit blocks (pigeonhole: ≤3 differing bits →
   some block equal).
@@ -33,6 +36,7 @@ from pyspark.sql import DataFrame
 
 from ..core.constraint import Constraint
 from ..index_store import IndexStore
+from ..plans.executor import planned_partitions
 from ..session import local_df
 from .text import fingerprint, word_shingles
 
@@ -86,11 +90,23 @@ def _check_bands(num_hashes: int, bands: int) -> None:
 def _band_hashes(cols, bands: int):
     """band_0..band_{B-1}: md5 of each band's ``|``-joined signature
     slice — the one band-hash definition the in-memory self-join, the
-    persisted index build and its probe share."""
+    persisted index build and its probe share (the index stores and
+    joins on its 16-byte digest, ``_index_rows``)."""
     r = len(cols) // bands
     return [F.md5(F.concat_ws("|", *[F.col(c) for c in
                                      cols[b * r:(b + 1) * r]]))
             .alias(f"band_{b}") for b in range(bands)]
+
+
+def _index_rows(sig: DataFrame, cols, bands: int) -> DataFrame:
+    """(id, mh_*, band_*) with every minhash and band hash as its
+    16-byte md5 digest (``unhex`` of the hex form, injective on
+    lowercase hex): the persisted index's layout, and the batch's side
+    of both probe joins. The in-memory self-joins keep hex: at sf1 the
+    OPH pass read slower on binary band hashes (plans/minhash_binary)."""
+    banded = sig.select("id", *cols, *_band_hashes(cols, bands))
+    return banded.select("id", *[F.unhex(c).alias(c)
+                                 for c in banded.columns[1:]])
 
 
 def _explode_bands(banded: DataFrame, bands: int, keep=()) -> DataFrame:
@@ -335,6 +351,9 @@ def minhash_signature_cols(num_hashes: int):
 
     Lexicographic min over uniformly-distributed hex strings is an
     order statistic identical across engines — no platform hash needed.
+    The minhashes stay 32-char hex here, so SQL oracles replay them;
+    the persisted index stores them as 16 raw bytes (``unhex``), which
+    is injective on lowercase hex and keeps every equality.
     """
     def build(shingle_col):
         return [F.min(F.md5(F.concat(F.lit(f"{i}:"), shingle_col))).alias(f"mh_{i}")
@@ -351,9 +370,14 @@ def spread(df: DataFrame, key: str) -> DataFrame:
     On a real cluster a 100 TB table arrives with thousands of splits
     and this is a no-op; locally (and for small dimension-like tables)
     it buys one partition per core for one shuffle of the raw rows.
+
+    The partition count is read without a job (``planned_partitions``):
+    an input whose plan has an exchange counts as distributed, since
+    only running its shuffle stage would tell how AQE coalesces it.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    n = planned_partitions(df)
+    if n is None or n >= target:
         return df
     return df.repartition(target, key)
 
@@ -1040,6 +1064,11 @@ def remove_duplicate_chunks_against_index(spark, index_path: str, new_df,
 # Persisted MinHash-LSH index — incremental-ingestion near-dup
 # ---------------------------------------------------------------------------
 
+#: the index params' digest format: every minhash and band hash is the
+#: 16-byte md5 digest (an index without this marker stores hex strings)
+_DIGEST = "binary16"
+
+
 def build_minhash_index(df: DataFrame, index_path: str,
                         text_col: str = "text", id_col: str = "doc_id",
                         k: int = 3, num_hashes: int = 16,
@@ -1047,8 +1076,8 @@ def build_minhash_index(df: DataFrame, index_path: str,
     """Persist a banded-MinHash near-dup index so future batches dedup
     against the corpus WITHOUT re-sketching it — the incremental
     -ingestion workflow (each crawl/dump sketches only itself; the
-    100 TB history is k·|corpus| hex strings on disk, touched only by
-    a bucket join). The text-retrieval analogue of the persisted IVF
+    100 TB history is k·|corpus| 16-byte digests on disk, touched only
+    by a bucket join). The text-retrieval analogue of the persisted IVF
     index in operators/similarity.
 
     Params (k, num_hashes, bands) are pinned at build time; a
@@ -1057,6 +1086,10 @@ def build_minhash_index(df: DataFrame, index_path: str,
     - ``signatures``  (id, mh_0..mh_{n-1}, band_0..band_{B-1}) — the
       minhashes for the est-Jaccard verify and the band hashes the
       probe explodes into its bucket join side (a column-pruned scan).
+      Every digest is ``binary`` of 16 bytes, the md5 digest itself:
+      its 32-char hex form holds the same bytes in twice the space.
+      The params carry ``digest: binary16``; an index without it was
+      built with hex strings and a probe refuses it.
 
     ``mode='append'`` writes the new documents as one more shard, so
     each shard holds exactly one row per document, derived from that
@@ -1069,8 +1102,9 @@ def build_minhash_index(df: DataFrame, index_path: str,
     cols = [f"mh_{i}" for i in range(num_hashes)]
     sig = minhash_signatures(df, text_col, id_col, k, num_hashes)
     IndexStore(df.sparkSession, index_path).write(
-        {"signatures": sig.select("id", *cols, *_band_hashes(cols, bands))},
-        {"k": k, "num_hashes": num_hashes, "bands": bands}, mode)
+        {"signatures": _index_rows(sig, cols, bands)},
+        {"k": k, "num_hashes": num_hashes, "bands": bands,
+         "digest": _DIGEST}, mode)
 
 
 def neardup_against_index(spark, index_path: str, new_df: DataFrame,
@@ -1085,23 +1119,33 @@ def neardup_against_index(spark, index_path: str, new_df: DataFrame,
     est_jaccard), filtered to est >= ``min_est_jaccard``.
 
     Scale shape: the bucket join is the only corpus-sized touch and it
-    shuffles on the 32-hex band hash; the batch side is typically the
+    shuffles on the 16-byte band hash; the batch side is typically the
     small one, so AQE broadcasts it. The batch is sketched once: its
     minhashes ride the band stack into the (new_id, index_id) pairs
     aggregate (exact, since they depend on new_id only), so the
     est-Jaccard verify joins the candidates with the stored signatures
-    alone, never the texts.
+    alone, never the texts. The batch minhashes are unhexed before the
+    join, so both sides of both joins compare 16-byte values.
+
+    An index whose params lack ``digest: binary16`` stores hex strings;
+    Spark would cast them to binary in the comparisons and match
+    nothing, so the probe raises instead.
     """
     store = IndexStore(spark, index_path)
-    k, num_hashes, bands = (store.params["k"], store.params["num_hashes"],
-                            store.params["bands"])
+    params = store.params
+    if params.get("digest") != _DIGEST:
+        raise ValueError(
+            f"MinHash index at {index_path} stores hex-string digests "
+            f"(params {params}); rebuild it with build_minhash_index")
+    k, num_hashes, bands = params["k"], params["num_hashes"], params["bands"]
     cols = [f"mh_{i}" for i in range(num_hashes)]
     ncols = [f"n_{c}" for c in cols]
 
     new_sig = minhash_signatures(new_df, text_col, id_col, k, num_hashes)
     new_stack = _explode_bands(
-        new_sig.select("id", *[F.col(c).alias(n) for c, n in zip(cols, ncols)],
-                       *_band_hashes(cols, bands)), bands, keep=ncols) \
+        _index_rows(new_sig, cols, bands).select(
+            "id", *[F.col(c).alias(n) for c, n in zip(cols, ncols)],
+            *[f"band_{b}" for b in range(bands)]), bands, keep=ncols) \
         .withColumnRenamed("id", "new_id")
     stored = store.read("signatures")
     buckets = _explode_bands(

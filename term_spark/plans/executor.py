@@ -101,21 +101,35 @@ def merge_exprs(expr_maps: Iterable[Mapping[str, "Column"]]) -> Dict[str, "Colum
 # 0.142 -> 0.008 MB written, 0.878 -> 0.811 MB read, live JVM heap
 # 79 -> 68 MB. The check plans the table and builds its RDD but starts
 # no job: ~22 ms on that month under C1, ~18 ms of it building the RDD.
+def planned_partitions(df: "DataFrame") -> Optional[int]:
+    """The partition count of ``df``'s executed plan, read without
+    starting a job, or None when it cannot be: an AQE-wrapped plan has
+    an exchange or a subquery, whose partition count only running its
+    stages would settle, so callers treat it as distributed. Otherwise
+    the count is that of the plan's RDD, which such a plan builds
+    without a job (``df.rdd`` would also build a Python RDD and its
+    closure). An error in the check reads as None."""
+    try:
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            return None
+        return plan.execute().getNumPartitions()
+    except Exception:
+        return None
+
+
 def _one_partition(df: "DataFrame") -> bool:
-    """True when ``df`` is one partition with no exchange: AQE is on,
-    the executed plan is not wrapped by AQE (AQE wraps only a plan with
-    an exchange or a subquery), and its RDD, which such a plan builds
-    without a job, has one partition. An error in the check reads as
+    """True when ``df`` is one partition with no exchange: AQE is on
+    (without it an exchange-free plan is not told apart) and
+    ``planned_partitions`` reads 1. An error in the check reads as
     False: the table is then aggregated as it is."""
     try:
-        jdf = df._jdf
-        if not jdf.sparkSession().sessionState().conf().adaptiveExecutionEnabled():
+        if not (df._jdf.sparkSession().sessionState().conf()
+                .adaptiveExecutionEnabled()):
             return False
-        plan = jdf.queryExecution().executedPlan()
-        return (plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec"
-                and plan.execute().getNumPartitions() == 1)
     except Exception:
         return False
+    return planned_partitions(df) == 1
 
 
 def fused_aggs(df: "DataFrame", merged: Mapping[str, "Column"],
@@ -319,11 +333,13 @@ class SuiteRunner:
 
         # ---- execute concurrently, record deterministically -----------
         with ThreadPoolExecutor(max_workers=MAX_CONCURRENT_JOBS) as pool:
+            # own jobs first: building the fused jobs plans each key's
+            # table on this thread (``_one_partition``)
+            own_futures = submit_own(pool, plan.own_job)
             fused = {key: [pool.submit(run_job, key, *job)
                            for job in fused_aggs(plan.scoped[key], plan.merged(key),
                                                  plan.distinct_keys)]
                      for key in plan.scalar}
-            own_futures = submit_own(pool, plan.own_job)
 
             for key, members in plan.scalar.items():
                 metrics = fused_metrics(fused[key])

@@ -2521,9 +2521,10 @@ def q_incremental_neardup_docs(spark, sf_dir) -> DataFrame:
     -ingestion workflow. Returned pairs carry the banded match count
     and the signature-estimated Jaccard (fraction of agreeing
     minhashes — agrees with probability exactly J per hash). Every
-    hash is the engine-portable md5 family, so the DuckDB oracle
-    replays the ENTIRE lifecycle — signatures, buckets, bucket join,
-    estimate — value-for-value."""
+    hash is the engine-portable md5 family (the index stores each
+    digest as its 16 raw bytes, which keeps every equality of the hex
+    form), so the DuckDB oracle replays the ENTIRE lifecycle in hex —
+    signatures, buckets, bucket join, estimate — value-for-value."""
     d = _docs(spark, sf_dir)
     corpus = d.filter(F.col("doc_id") % 4 != 0)
     batch = d.filter(F.col("doc_id") % 4 == 0)

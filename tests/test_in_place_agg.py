@@ -161,3 +161,42 @@ def test_a_check_that_raises_leaves_run_unchanged(spark, tpch, monkeypatch):
     monkeypatch.setattr(executor, "_one_partition", lambda df: False)
     assert _summary(raised) == _summary(suite.run(spark, tpch["lineitem"]))
     assert raised.passed
+
+
+def test_spread_reads_partitions_without_a_job(spark, tpch):
+    """``dedup.spread`` shares the check's partition count: an
+    aggregated input (its plan has an exchange) counts as distributed
+    and comes back as it is, and a one-file scan is spread; neither
+    starts a job."""
+    from term_spark.operators.dedup import spread
+    li = tpch["lineitem"]
+    agg = li.groupBy("l_orderkey").count()
+    out, jobs = _jobs(spark, lambda: spread(agg, "l_orderkey"))
+    assert out is agg and jobs == 0
+    assert executor.planned_partitions(agg) is None
+    out, jobs = _jobs(spark, lambda: spread(li, "l_orderkey"))
+    assert jobs == 0 and executor.planned_partitions(li) == 1
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_run_submits_own_jobs_before_it_checks_a_table(spark, tpch, monkeypatch):
+    """The own-job constraints reach the pool before the caller thread
+    plans any fused job (``_one_partition`` per table)."""
+    events = []
+
+    class Pool(executor.ThreadPoolExecutor):
+        def submit(self, fn, *args, **kwargs):
+            events.append(fn.__name__)
+            return super().submit(fn, *args, **kwargs)
+
+    check = executor._one_partition
+    monkeypatch.setattr(executor, "ThreadPoolExecutor", Pool)
+    monkeypatch.setattr(executor, "_one_partition",
+                        lambda df: events.append("check") or check(df))
+    suite = ValidationSuite.builder("own_first").with_check(
+        Check("c", Level.ERROR)
+        .is_complete("l_orderkey")
+        .has_entropy("l_returnflag", Assertion.gt(0)))
+    assert suite.run(spark, tpch["lineitem"]).passed
+    assert events[0] == "run_own" and "check" in events
+    assert "run_own" not in events[events.index("check"):]

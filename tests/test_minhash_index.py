@@ -1,15 +1,22 @@
 """Persisted MinHash-LSH index: build/probe lifecycle, equivalence
 with the in-memory LSH pass on the cross pairs, append-shard
-soundness, and the signature Jaccard estimate's behavior on exact
-copies vs novel text. md5 hashing — deterministic, no RNG."""
+soundness, the signature Jaccard estimate's behavior on exact
+copies vs novel text, and the stored layout (16-byte digests; a
+hex-string index is refused). md5 hashing — deterministic, no RNG."""
 
+import os
+
+import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import BinaryType
 
 from term_spark.index_store import IndexStore
 from term_spark.operators.dedup import (build_minhash_index,
                                         minhash_lsh_candidates,
                                         minhash_signatures,
                                         neardup_against_index)
+from term_spark.sources import read_parquet
+from tests.conftest import SF_DIR
 
 _CORPUS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -181,3 +188,69 @@ def test_build_and_probe_write_once_and_pin_nothing(spark, tmp_path,
     out = neardup_against_index(spark, idx, batch).collect()
     assert calls == {"parquet": 1, "localCheckpoint": 0}
     assert {(r["new_id"], r["index_id"]) for r in out} >= {(100, 1)}
+
+
+def _parquet_bytes(spark, idx):
+    store = IndexStore(spark, idx)
+    return sum(os.path.getsize(os.path.join(root, f))
+               for path in store.paths("signatures")
+               for root, _, files in os.walk(path)
+               for f in files if f.endswith(".parquet"))
+
+
+def test_signatures_store_16_byte_digests(spark, tmp_path):
+    """Every stored minhash and band hash is the raw md5 digest: binary
+    of 16 bytes, whose hex form is the in-memory minhash."""
+    idx = str(tmp_path / "mhidx_bin")
+    build_minhash_index(_df(spark, _CORPUS), idx)
+    sig = IndexStore(spark, idx).read("signatures")
+    digests = sig.columns[1:]
+    mh = [f"mh_{i}" for i in range(16)]
+    assert digests == mh + [f"band_{b}" for b in range(4)]
+    assert {sig.schema[c].dataType for c in digests} == {BinaryType()}
+    assert {n for r in sig.select(*[F.length(c) for c in digests]).collect()
+            for n in r} == {16}
+    as_hex = sig.select("id", *[F.lower(F.hex(c)).alias(c) for c in mh])
+    assert (sorted(map(tuple, as_hex.collect()))
+            == sorted(map(tuple, minhash_signatures(_df(spark, _CORPUS))
+                          .collect())))
+
+
+def test_signatures_shard_is_under_two_thirds_of_its_hex_form(spark, tmp_path):
+    """The registry's index corpus (documents with doc_id % 4 != 0):
+    the shard takes at most 0.65x the Parquet bytes of the same rows
+    as 32-char hex strings (0.60 at sf0.001 and sf0.01)."""
+    corpus = (read_parquet(spark, f"{SF_DIR}/documents.parquet")
+              .filter("doc_id % 4 != 0"))
+    idx, hexed = str(tmp_path / "mh_bin"), str(tmp_path / "mh_hex")
+    build_minhash_index(corpus, idx)
+    stored = IndexStore(spark, idx).read("signatures")
+    IndexStore(spark, hexed).write(
+        {"signatures": stored.select(
+            "id", *[F.lower(F.hex(c)).alias(c) for c in stored.columns[1:]])},
+        {"digest": "hex"}, "overwrite")
+    assert _parquet_bytes(spark, idx) <= 0.65 * _parquet_bytes(spark, hexed)
+
+
+def _hex_index(spark, path):
+    """An index in the hex-string layout: 32-char minhashes and band
+    hashes, and params without the digest marker."""
+    cols = [f"mh_{i}" for i in range(16)]
+    bands = [F.md5(F.concat_ws("|", *cols[b * 4:(b + 1) * 4])).alias(f"band_{b}")
+             for b in range(4)]
+    sig = minhash_signatures(_df(spark, _CORPUS))
+    IndexStore(spark, path).write({"signatures": sig.select("id", *cols, *bands)},
+                                  {"k": 3, "num_hashes": 16, "bands": 4},
+                                  "overwrite")
+
+
+def test_hex_index_is_refused(spark, tmp_path):
+    """A string compared with a binary is cast to binary, so probing a
+    hex-string index would match nothing and say nothing: the probe
+    raises, and an append onto it raises on the params."""
+    idx = str(tmp_path / "mhidx_hex")
+    _hex_index(spark, idx)
+    with pytest.raises(ValueError, match="hex-string digests.*rebuild"):
+        neardup_against_index(spark, idx, _df(spark, _BATCH))
+    with pytest.raises(ValueError, match="pinned at build time"):
+        build_minhash_index(_df(spark, _BATCH), idx, mode="append")
